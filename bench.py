@@ -67,7 +67,7 @@ BENCH_QUERIES = [
     "remove_duplicate_spans",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
-    "dedup_simhash",
+    "dedup_simhash_sql",
     "dedup_verified",
     "dedup_verified_strict",
     "dedup_clusters",
@@ -105,9 +105,8 @@ BENCH_QUERIES = [
     "similarity_ivf_sql2",
     "text_hash_features",
     "doc_clusters_sql",
-    # round 6, second session: oracle-strength SimHash (pigeonhole-exact
-    # banding), MinHash estimator-error audit, Gopher rule suite, PQ-ADC
-    "dedup_simhash_sql",
+    # round 6, second session: MinHash estimator-error audit, Gopher rule
+    # suite, PQ-ADC (oracle-strength SimHash is listed with the dedup heads)
     "minhash_error_audit",
     "gopher_rules",
     "similarity_pq_adc",
@@ -252,7 +251,27 @@ PREV_ROUND_QUERIES = {
 # 34M-row expand-and-regroup; expect ~12s → ~7s and a tighter spread),
 # ann_graph_incremental_multi (fixture-fingerprinted stored prev state;
 # expect ~19.5s → ~8-11s warm).
-SEMANTICS_CHANGED: set[str] = set()
+# One hash family per LSH: MinHash heads now hash each shingle once
+# (md5 prefix) and permute by affine maps (new candidate sets, pairs
+# carry n_shared_bands).  The heads below depend on the MinHash candidate
+# set; verified/exact-checked heads (dedup_verified, dedup_clusters, …)
+# keep their output, and the SimHash / sign-LSH heads kept their bodies.
+SEMANTICS_CHANGED: set[str] = {
+    "dedup_minhash_lsh",
+    "dedup_minhash_lsh_sql",
+    "dedup_clusters_lsh",
+    "dedup_clusters_lsh_sql",
+    "minhash_error_audit",
+    "dataset_split",
+    "leakage_safe_split",
+    "dedup_clusters_incremental",
+    "dedup_clusters_upserts",
+    "dedup_clusters_bucketed",
+    "dedup_clusters_flood_guard",
+    "dedup_clusters_stored",
+    "dedup_lsh_candidates_incremental",
+    "dedup_clusters_backfill_reseed",
+}
 
 #: Heads whose same-code medians were MEASURED to vary up to 1.4×
 #: across interleaved same-box sessions and up to 2.4× between the
@@ -271,12 +290,9 @@ HOST_SENSITIVE_HEADS = {
     "pagerank_delta_local": 1.5,
     "pagerank_weighted": 1.5,
     "graph_kcore": 1.5,
-    # r13 close-out: dedup_simhash's bench median landed 4.6× its r12
-    # number, then re-measured 3.4s median-of-5 standalone minutes later
-    # (samples 2.5–6.4) — a same-box transient inside one median, not
-    # code (zero diff); neardup_pair_recall moved 2.2× the same way.
-    # NOTES.md r13 close-out records the re-measurement.
-    "dedup_simhash": 3.0,
+    # r13 close-out: neardup_pair_recall's bench median moved 2.2× with
+    # zero diff, re-measured standalone minutes later (NOTES.md r13
+    # close-out records the re-measurement).
     "neardup_pair_recall": 2.2,
     # r13 fourth-batch close-out: bench median 17.3 vs 8.7 prior
     # close-out with zero diff; standalone median-of-5 minutes later

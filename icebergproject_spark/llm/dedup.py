@@ -12,14 +12,24 @@ Four strategies, cheapest → most general; all built from Spark built-ins
   Jaccard test. This is the exact counterpart the MinHash path approximates;
   the shuffle is on shingle hashes and candidate pairs, never all O(n²)
   pairs.
-- **minhash_lsh_candidates** — MinHash signatures + LSH banding: k hash
-  permutations via ``xxhash64(shingle, seed)``, per-band min → band
-  signature → group docs by (band, signature). At 100 TB this is THE
-  scalable near-dup path: cost is O(n·k) map-side plus a shuffle on band
-  signatures.
-- **simhash** — 64-bit SimHash fingerprint per document from token hash
-  bit-votes; near-dups = fingerprints within small Hamming distance,
-  found by banding the 64 bits into chunks (same LSH trick).
+- **minhash_lsh_candidates** — MinHash signatures + LSH banding: each
+  shingle hashes ONCE to a 48-bit md5 prefix mod p = 2^31 − 1, k
+  permutations are the affine maps (a_i·x + b_i) mod p with md5-minted
+  coefficients, per-band minima are ':'-joined into the band key
+  (:func:`banded_signatures`, the only code that bands) → group docs by
+  (band, key).  At 100 TB this is THE scalable near-dup path: cost is
+  O(n·k) map-side plus a shuffle on band keys.  DuckDB replays the whole
+  mechanism (:func:`minhash_bands_sql`).
+- **simhash** — 64-bit SimHash fingerprint per document from md5-nibble
+  token-hash bit-votes, kept as four 16-bit chunks; near-dups =
+  fingerprints within small Hamming distance, found by banding on the
+  chunks (same LSH trick, pigeonhole-exact for distance < 4).
+
+Every LSH family here (MinHash, SimHash, and the sign-LSH of
+:func:`embedding_near_pairs_lsh`) is md5-derived, so each has ONE
+implementation and a SQL engine replays it bit for bit.  (Exact-tier
+join keys — hashed grams in the inverted index and the verify tier —
+still use ``xxhash64``: they never surface in an output.)
 """
 
 from __future__ import annotations
@@ -213,6 +223,27 @@ def ngram_jaccard_pairs(
     return pairs.filter(thr).select("id_a", "id_b", "shared", "size_a", "size_b")
 
 
+#: MinHash permutations are affine maps modulo this Mersenne prime, over
+#: one md5-derived hash per shingle (see :func:`minhash_signatures`).
+MINHASH_PRIME = (1 << 31) - 1
+
+
+def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
+    """``(a_i, b_i)`` of MinHash permutation *i*: ``a_i`` = 1 + (first 8
+    hex digits of ``md5("a-<i>")``) mod (p − 1), ``b_i`` = (first 8 hex
+    digits of ``md5("b-<i>")``) mod p — minted driver-side with hashlib
+    (pure Python, deterministic), embedded into the plan as literals,
+    and regenerable verbatim by any engine or test (the
+    :func:`~icebergproject_spark.llm.similarity.lsh_weights` move)."""
+    import hashlib
+
+    def h8(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+    p = MINHASH_PRIME
+    return [(1 + h8(f"a-{i}") % (p - 1), h8(f"b-{i}") % p) for i in range(num_hashes)]
+
+
 def minhash_signatures(
     df: DataFrame,
     content_col: str = "text",
@@ -220,45 +251,36 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 32,
 ) -> DataFrame:
-    """MinHash signature per doc: sig[i] = min over shingles of
-    xxhash64(shingle, seed=i). Deterministic, JVM-side, no UDFs."""
-    flat = _minhash_flat(df, content_col, id_col, n, num_hashes)
-    return flat.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
+    """MinHash signature per doc, ``(id, h0..h{k-1})``.
+
+    Hash convention (replayed by :func:`minhash_bands_sql` in DuckDB and
+    by plain hashlib in tests): each distinct :func:`word_shingles`
+    gram ``g`` hashes ONCE to ``x = md5(g)[:12] as a 48-bit int mod p``
+    (p = 2^31 − 1), and permutation *i* is the affine map
+    ``(a_i·x + b_i) mod p`` with md5-minted coefficients
+    (:func:`minhash_coefficients`); ``h_i`` = min over the doc's grams.
+    One string hash per shingle, then k integer multiply-adds (< 2^62,
+    no overflow), and every engine with md5 mints the same signatures
+    bit for bit.  Measured on sf0.1 documents, 16 hashes, 4-core host:
+    1.38 s, against 0.99 s for seeded ``xxhash64`` permutations (which no
+    SQL engine replays) and 2.84 s for one md5 per (shingle, permutation).
+
+    Shape: explode the per-gram hashes to flat (id, x) rows, then ONE
+    groupBy(id) with k min aggregates — whole-stage codegen, and the
+    shuffle carries one partially-aggregated row per (partition, id)
+    thanks to map-side combine, not one row per shingle."""
+    p = MINHASH_PRIME
+    x = F.transform(
+        word_shingles(content_col, n),
+        lambda g: F.conv(F.substring(F.md5(g), 1, 12), 16, 10).cast("long") % p,
     )
-
-
-def _minhash_flat(
-    df: DataFrame, content_col: str, id_col: str, n: int, num_hashes: int
-) -> DataFrame:
-    """(id, h0..h{k-1}) minhash columns via explode + min-aggregate.
-
-    Faster than per-row array transforms (measured ~25% at sf0.1) and the
-    scale-correct shape: the hash evaluation is a flat whole-stage-codegen
-    projection over exploded shingles, and the groupBy(id) shuffle carries
-    one partially-aggregated row per (partition, id) thanks to map-side
-    combine — not one row per shingle.
-    """
-    # hash each shingle STRING once (permutation i re-hashes the 8-byte
-    # base — ~40% cheaper than num_hashes string hashes) and skip
-    # array_distinct: duplicate shingles cannot change a min, and
-    # exploding longs instead of strings shrinks the exploded stream.
-    # Shingles come from zip_with'd shifted slices (O(L) per row — the
-    # transform-over-indexes form re-splits the text per gram, O(L²)).
-    col = F.col(content_col)
-    toks = F.split(col, " ")
-    k = F.size(toks) - (n - 1)
-    zipped = F.slice(toks, 1, k)
-    for j in range(1, n):
-        zipped = F.zip_with(
-            zipped, F.slice(toks, j + 1, k), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    grams = F.when(k <= 0, F.array(F.xxhash64(F.concat_ws(" ", toks)))).otherwise(
-        F.transform(zipped, lambda s: F.xxhash64(s))
+    inv = df.select(F.col(id_col).alias("id"), F.explode(x).alias("x"))
+    return inv.groupBy("id").agg(
+        *[
+            F.min((F.lit(a) * F.col("x") + F.lit(b)) % p).alias(f"h{i}")
+            for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
+        ]
     )
-    inv = df.select(F.col(id_col).alias("id"), F.explode(grams).alias("b"))
-    aggs = [F.min(F.xxhash64("b", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    return inv.groupBy("id").agg(*aggs)
 
 
 def banded_signatures(
@@ -269,15 +291,19 @@ def banded_signatures(
     num_hashes: int = 32,
     bands: int = 8,
 ) -> DataFrame:
-    """The (id, band, band_sig) stream :func:`minhash_lsh_candidates`
-    self-joins — exposed because it is also the STORED STATE of the
-    incremental dedup tier: production persists this table once and
-    appends each batch's rows, so a daily batch pays |batch| × bands
-    signature rows, never a corpus re-band (the contract
-    :func:`incremental_near_dups` documents and
-    :func:`incremental_lsh_candidates` consumes)."""
+    """The (id, band, band_sig) stream every MinHash-LSH consumer joins
+    on — the ONLY place a band key is built: ``band_sig`` is the
+    ':'-joined decimal rendering of the band's ``num_hashes // bands``
+    row minima (:func:`minhash_signatures`), so any engine replays the
+    identical keys (:func:`minhash_bands_sql`).
+
+    Exposed because it is also the STORED STATE of the incremental
+    dedup tier: production persists this table once and appends each
+    batch's rows, so a daily batch pays |batch| × bands signature rows,
+    never a corpus re-band (the contract :func:`incremental_near_dups`
+    documents and :func:`incremental_lsh_candidates` consumes)."""
     rows = num_hashes // bands
-    sigs = _minhash_flat(df, content_col, id_col, n, num_hashes)
+    sigs = minhash_signatures(df, content_col, id_col, n, num_hashes)
     return sigs.select(
         "id",
         F.explode(
@@ -285,8 +311,12 @@ def banded_signatures(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"h{b * rows + r}") for r in range(rows)]
+                        F.concat_ws(
+                            ":",
+                            *[
+                                F.col(f"h{b * rows + r}").cast("string")
+                                for r in range(rows)
+                            ],
                         ).alias("band_sig"),
                     )
                     for b in range(bands)
@@ -294,6 +324,71 @@ def banded_signatures(
             )
         ).alias("bs"),
     ).select("id", "bs.band", "bs.band_sig")
+
+
+def minhash_bands_sql(
+    num_hashes: int = 16, bands: int = 8, where: str = "TRUE", sfx: str = ""
+) -> str:
+    """DuckDB CTE block replaying :func:`banded_signatures` (3-gram
+    shingles) over ``documents WHERE {where}`` — the SQL half of the
+    MinHash hash convention, written once for every oracle:
+
+    - ``grams{sfx}(doc_id, g, x)`` — shingles and their one md5 hash;
+    - ``hmin{sfx}(doc_id, i, h)`` — signature position *i*;
+    - ``bands{sfx}(doc_id, band, band_sig)`` — the ':'-joined band keys;
+    - ``pairs{sfx}(id_a, id_b, n_shared_bands)`` — the candidate pairs
+      of :func:`minhash_lsh_candidates`.
+
+    CTE names carry ``sfx`` so two instances (e.g. a base slice and the
+    full corpus) coexist in one query."""
+    p = MINHASH_PRIME
+    rows = num_hashes // bands
+    coeffs = ", ".join(
+        f"({i}, CAST({a} AS BIGINT), CAST({b} AS BIGINT))"
+        for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
+    )
+    return f"""grams{sfx} AS (
+  SELECT doc_id, g, {md5_prefix12_sql('hx')} % {p} AS x FROM (
+    SELECT doc_id, g, md5(g) AS hx FROM (
+      SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
+               THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
+               ELSE [text] END) AS g
+      FROM (SELECT doc_id, text, string_split(text, ' ') AS t
+            FROM documents WHERE {where})
+    )
+  )
+),
+hmin{sfx} AS (
+  SELECT doc_id, i, MIN((a * x + b) % {p}) AS h
+  FROM grams{sfx} CROSS JOIN (VALUES {coeffs}) AS c(i, a, b)
+  GROUP BY doc_id, i
+),
+bands{sfx} AS (
+  SELECT doc_id, i // {rows} AS band,
+         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
+  FROM hmin{sfx} WHERE i < {bands * rows} GROUP BY doc_id, i // {rows}
+),
+pairs{sfx} AS MATERIALIZED (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         CAST(COUNT(*) AS BIGINT) AS n_shared_bands
+  FROM bands{sfx} a
+  JOIN bands{sfx} b ON a.band = b.band AND a.band_sig = b.band_sig
+                   AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+)"""
+
+
+def md5_prefix12_sql(hx: str) -> str:
+    """DuckDB BIGINT value of the first 12 hex digits of md5 hex column
+    ``hx`` (48 bits, always positive)."""
+    return (
+        "("
+        + " + ".join(
+            f"(instr('0123456789abcdef', substr({hx}, {j + 1}, 1)) - 1) * {16 ** (11 - j)}"
+            for j in range(12)
+        )
+        + ")"
+    )
 
 
 def incremental_lsh_candidates(
@@ -429,6 +524,28 @@ def incremental_lsh_candidates_bucketed(
     )
 
 
+def _band_pairs(banded: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_shared_bands), id_a < id_b: the banded SELF-join.
+
+    Stays a join on purpose: both sides are the IDENTICAL canonical
+    plan, so Spark's ReusedExchange computes the signature stream once
+    (A/B-measured round 3 — a grouped-bucket rewrite with an eager
+    checkpoint was ~0.4 s SLOWER at sf0.1 than the join it replaced;
+    the ngram case needed grouped postings only because its two branches
+    carry different filters, which defeats exchange reuse)."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     content_col: str = "text",
@@ -440,163 +557,20 @@ def minhash_lsh_candidates(
     """LSH banding: docs sharing any band signature are candidate near-dups.
 
     rows = num_hashes / bands per band; J ≈ (1/bands)^(1/rows) detection
-    knee. Output: distinct (id_a, id_b) candidate pairs, id_a < id_b.
-    At scale the only shuffle is groupBy(band, band_sig) on 16-byte keys.
+    knee (16 hashes / 8 bands / 2 rows puts it at ≈ 0.35, protecting the
+    J ≥ 0.3 operating point).  Every hash is cross-engine replayable
+    (:func:`minhash_signatures`, :func:`banded_signatures`), so a DuckDB
+    oracle (:func:`minhash_bands_sql`) mints the exact same signatures,
+    bands, buckets and therefore the exact same candidate set — the LSH
+    mechanism itself is hash-checked, not just a downstream verification.
 
-    Pair generation stays a banded SELF-join on purpose: both sides are
-    the IDENTICAL canonical plan, so Spark's ReusedExchange computes the
-    signature stream once (A/B-measured round 3 — a grouped-bucket
-    rewrite with an eager checkpoint was ~0.4 s SLOWER at sf0.1 than the
-    join it replaced; the ngram case needed grouped postings only
-    because its two branches carry different filters, which defeats
-    exchange reuse).
+    Scale shape: flat codegen projection over exploded shingles,
+    map-side-combined min aggregate, one groupBy(band, band_sig)-shaped
+    self-join on short string keys, ReusedExchange on the identical-plan
+    sides.  Output: (id_a, id_b, n_shared_bands), id_a < id_b.
     """
-    banded = banded_signatures(df, content_col, id_col, n, num_hashes, bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
-def minhash_sql_signatures(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Engine-portable MinHash signatures ``(id, h0..h{k-1})``:
-    permutation *i* of shingle *g* is the first 12 hex digits of
-    ``md5("<i>-<g>")`` as a (48-bit, positive) BIGINT.  Pure refactor out
-    of :func:`minhash_lsh_sql_candidates` (identical expressions) so the
-    estimator-error audit can reuse the exact signature chain."""
-    col = F.col(content_col)
-    toks = F.split(col, " ")
-    k = F.size(toks) - (n - 1)
-    zipped = F.slice(toks, 1, k)
-    for j in range(1, n):
-        zipped = F.zip_with(
-            zipped, F.slice(toks, j + 1, k), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    # r13 (guide §2.3 "shuffle/evaluate fewer rows"): duplicate shingles
-    # within a doc cannot change any min but each paid ``num_hashes``
-    # md5s — array_distinct drops them before the explode.
-    grams = F.array_distinct(F.when(k <= 0, F.array(col)).otherwise(zipped))
-    inv = df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
-
-    def hhex(i: int):
-        return F.substring(
-            F.md5(F.concat_ws("-", F.lit(str(i)), F.col("g"))), 1, 12
-        )
-
-    # r13: take the min over the 12-char hex PREFIX and convert once per
-    # (id, permutation) after the aggregate — fixed-width lowercase hex
-    # orders identically to its numeric value, so min(conv(x)) ==
-    # conv(min(x)) and the conv+cast drops from per-shingle×k to
-    # per-doc×k.  Measured (with array_distinct) 6.4 -> 5.2 s median /
-    # 5.5 -> 4.0 s min on the full sf0.1 candidate pipeline, candidate
-    # set exactly equal.
-    agg = inv.groupBy("id").agg(
-        *[F.min(hhex(i)).alias(f"__x{i}") for i in range(num_hashes)]
-    )
-    return agg.select(
-        "id",
-        *[
-            F.conv(F.col(f"__x{i}"), 16, 10).cast("long").alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-    )
-
-
-def banded_sql_signatures(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """The ORACLE-strength twin of :func:`banded_signatures`: the same
-    (id, band, band_sig) stream, but md5-derived
-    (:func:`minhash_sql_signatures`) so any engine replays identical
-    band keys bit-for-bit.  This is the stored-state schema of the
-    incremental dedup tier at oracle strength — persist it per corpus,
-    band each append batch with the SAME function, and
-    :func:`incremental_lsh_candidates` generates the batch's candidate
-    edges without re-banding the corpus (hash-proved equal to slicing
-    the full :func:`minhash_lsh_sql_candidates` run by the registered
-    head ``dedup_lsh_candidates_incremental``)."""
-    rows = num_hashes // bands
-    sigs = minhash_sql_signatures(df, content_col, id_col, n, num_hashes)
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"h{b * rows + r}").cast("string")
-                                for r in range(rows)
-                            ],
-                        ).alias("band_sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select("id", "bs.band", "bs.band_sig")
-
-
-def minhash_lsh_sql_candidates(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """MinHash-LSH candidate pairs at ORACLE strength: identical plan
-    shape to :func:`minhash_lsh_candidates`, but every hash is
-    cross-engine replayable — permutation *i* of shingle *g* is the
-    first 12 hex digits of ``md5("<i>-<g>")`` as a (48-bit, positive)
-    BIGINT, and the band key is the ':'-joined decimal rendering of the
-    band's row minima.  Any engine with md5 mints the exact same
-    signatures, bands, buckets, and therefore the exact same candidate
-    set — the LSH *mechanism itself* is hash-checked, not just a
-    downstream verification.
-
-    Defaults 16 hashes / 8 bands / 2 rows put the detection knee at
-    J* = (1/8)^(1/2) ≈ 0.35, protecting the J ≥ 0.3 operating point.
-    The xxhash64 arm stays the production default (one string hash per
-    shingle vs ``num_hashes`` md5s here — the md5 arm costs more per
-    byte and exists for bit-exact replay).  Scale shape is unchanged:
-    flat codegen projection over exploded shingles, map-side-combined
-    min aggregate, one groupBy(band, band_sig)-shaped self-join on
-    short string keys, ReusedExchange on the identical-plan sides.
-
-    Output: (id_a, id_b, n_shared_bands), id_a < id_b.
-    """
-    banded = banded_sql_signatures(df, content_col, id_col, n, num_hashes, bands)
-    a, b2 = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b2,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    return _band_pairs(
+        banded_signatures(df, content_col, id_col, n, num_hashes, bands)
     )
 
 
@@ -616,8 +590,11 @@ def minhash_error_audit(
     needs before trusting a banding configuration: if ``abs_err`` drifts
     up, the permutation count is too low for the corpus' length profile.
 
-    Everything is md5-derived (:func:`minhash_sql_signatures`), so a SQL
-    oracle replays the estimator AND its ground truth bit-for-bit.
+    The signature positions are read back out of the band keys
+    (:func:`banded_signatures` is the one banding path), so
+    ``num_hashes`` must be a multiple of ``bands``.  Everything is
+    md5-derived, so a SQL oracle replays the estimator AND its ground
+    truth bit-for-bit.
 
     Scale shape: the signature groupBy and the piece-bucket band join
     are the only corpus-wide shuffles; exact Jaccard (the expensive
@@ -625,57 +602,34 @@ def minhash_error_audit(
     :func:`verified_near_dups`.  Output: (id_a, id_b, n_agree, shared,
     size_a, size_b, est_jaccard, exact_jaccard, abs_err), id_a < id_b.
     """
-    rows = num_hashes // bands
-    sigs = minhash_sql_signatures(
-        df, content_col, id_col, n, num_hashes
-    ).localCheckpoint(eager=True)  # banding + both agree sides reuse it
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"h{b * rows + r}").cast("string")
-                                for r in range(rows)
-                            ],
-                        ).alias("band_sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select("id", "bs.band", "bs.band_sig")
-    a, b2 = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b2,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.id") < F.col("b.id")),
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a multiple of bands ({bands}): "
+            "the audit reads every signature position back out of the band keys"
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    banded = banded_signatures(
+        df, content_col, id_col, n, num_hashes, bands
+    ).localCheckpoint(eager=True)  # pair join + signature read-back reuse it
+    cand = _band_pairs(banded).select("id_a", "id_b")
+    sigs = banded.groupBy("id").agg(
+        F.flatten(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("band", "band_sig"))),
+                lambda s: F.split(s["band_sig"], ":"),
+            )
+        ).alias("sig")
     )
-    sa = sigs.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    agree = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
     )
-    sb = sigs.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
-    )
-    agree_expr = None
-    for i in range(num_hashes):
-        term = F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)
-        agree_expr = term if agree_expr is None else agree_expr + term
     agreed = (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", agree_expr.cast("long").alias("n_agree"))
+        .select("id_a", "id_b", agree.cast("long").alias("n_agree"))
     )
     sh = df.select(
         F.col(id_col).alias("id"), word_shingles(content_col, n).alias("sh")
@@ -798,27 +752,9 @@ def incremental_near_dups(
     (doc_id, dup_of, shared, size_new, size_hist), J ≥ num/den vs
     ``dup_of`` (the minimal matching history id).
     """
-    rows_per = num_hashes // bands
-    sigs = _minhash_flat(df, content_col, id_col, n, num_hashes)
     flags = df.select(F.col(id_col).alias("id"), is_new.alias("is_new"))
     banded = (
-        sigs.select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[F.col(f"h{b * rows_per + r}") for r in range(rows_per)]
-                            ).alias("band_sig"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bs"),
-        )
-        .select("id", "bs.band", "bs.band_sig")
+        banded_signatures(df, content_col, id_col, n, num_hashes, bands)
         .join(flags, "id")
         .localCheckpoint(eager=True)
     )
@@ -871,142 +807,31 @@ def incremental_near_dups(
 def simhash64(
     df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """64-bit SimHash per document.
+    """64-bit SimHash per document from MD5-NIBBLE token hashes.
 
-    Classic bit-vote: for each token hash, bit i votes +1 if set else -1;
-    fingerprint bit i = 1 iff the vote is positive.
-
-    Shape: explode distinct tokens to flat (id, hash) rows, then ONE
-    groupBy with 64 conditional sums. The sums are plain whole-stage-
-    codegen'd aggregates with map-side partial combine — the shuffle
-    carries 64 longs per (partition, id), and per-row work is 64 ANDs,
-    not 64 interpreted array-fold passes (the previous nested
-    ``F.aggregate`` form; this one measures ~5× faster at sf0.1).
-
-    Contract: ONE output row per DISTINCT id (duplicate-id input rows
-    collapse into a single vote — identical text votes identically, mixed
-    text yields the merged-token fingerprint).  Rows with NULL text are
-    PRESERVED (``explode_outer``) and get the all-zero fingerprint 0 —
-    they don't silently vanish from downstream anti-joins.
-    """
-
-    def bit_mask(i: int) -> F.Column:
-        # bit 63 is the sign bit: 1<<63 overflows signed long, use its
-        # two's-complement value instead
-        return F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
-
-    toks = F.array_distinct(F.split(F.col(content_col), " "))
-    flat = df.select(
-        F.col(id_col).alias("id"), F.explode_outer(toks).alias("t")
-    ).select(
-        # NULL text → one row with h NULL → every vote sums to NULL →
-        # every `v > 0` is false → fingerprint 0 (not a dropped row)
-        "id",
-        F.when(F.col("t").isNotNull(), F.xxhash64("t")).alias("h"),
-    )
-    votes = flat.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(F.col("h").bitwiseAND(bit_mask(i)) != 0, 1).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(64)
-        ]
-    )
-    fp = None
-    for i in range(64):
-        term = F.when(F.col(f"v{i}") > 0, bit_mask(i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        fp = term if fp is None else fp.bitwiseOR(term)
-    return votes.select("id", fp.alias("simhash"))
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    chunks: int = 4,
-) -> DataFrame:
-    """Fingerprint pairs by SimHash: band the 64 bits into ``chunks`` 16-bit
-    pieces — any pair within Hamming distance < chunks shares ≥1 piece
-    (pigeonhole) — then verify exact Hamming ≤ max_hamming.
-
-    SCOPE: SimHash proximity means near-identical token DISTRIBUTIONS
-    (order- and multiplicity-insensitive), NOT Jaccard overlap — measured
-    ~16% recall vs the exact J≥0.3 pair set on the synthetic corpus
-    (NOTES.md). Position it as a distribution-shift / boilerplate-family
-    detector; the near-dup production path is `verified_near_dups`.
-
-    The fingerprint relation is checkpointed before the banding
-    self-join: it is tiny (one long per doc), and without the
-    materialization BOTH join sides recompute the full explode +
-    64-aggregate fingerprint pipeline (measured ~2× at sf0.1)."""
-    fp = simhash64(df, content_col, id_col).localCheckpoint(eager=True)
-    pieces = fp.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("simhash", c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("piece"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("p"),
-    ).select("id", "simhash", "p.chunk", "p.piece")
-    a, b = pieces.alias("a"), pieces.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.piece") == F.col("b.piece"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
-def simhash64_sql(
-    df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per document from MD5-NIBBLE token hashes — the
-    engine-portable twin of :func:`simhash64` (``xxhash64`` is
-    Spark-private; md5 is bit-identical in any engine, so a DuckDB
-    oracle can replay the fingerprints, the banding, AND the Hamming
-    verification — the full SimHash mechanism, not just a downstream
-    check).
+    Classic bit-vote: for each distinct token hash, bit i votes +1 if
+    set else -1; fingerprint bit i = 1 iff the vote is positive.  md5 is
+    bit-identical in any engine, so a DuckDB oracle replays the
+    fingerprints, the banding AND the Hamming verification — the full
+    SimHash mechanism, not just a downstream check.
 
     Hash-bit convention (must only match the oracle, not any canonical
     integer layout): bit ``i`` of a token's 64-bit hash = bit ``i % 4``
     of the value of hex character ``i // 4`` (0-based, leftmost first)
     of ``md5(token)``.
 
-    Same shape as ``simhash64``: explode distinct tokens, decode the 16
-    nibbles once per (doc, token), then ONE groupBy with 64 conditional
-    sums — plain codegen aggregates with map-side partial combine; the
-    shuffle carries 64 longs per (partition, id).
+    Shape: explode distinct tokens, decode the 16 nibbles once per
+    (doc, token), then ONE groupBy with 64 conditional sums — plain
+    codegen aggregates with map-side partial combine; the shuffle
+    carries 64 longs per (partition, id).
 
-    Output: ``(id, c0..c3)`` — the fingerprint as four 16-bit chunks
-    (chunk c = vote bits [16c, 16c+16), LSB-first within the chunk).
-    Chunked output is exactly what the banding join needs, keeps every
-    value far from the BIGINT sign bit, and makes the Hamming distance
-    a sum of four small ``bit_count`` terms in both engines.
+    Contract: ONE output row per DISTINCT id (duplicate-id input rows
+    collapse into a single vote).  Output: ``(id, c0..c3)`` — the
+    fingerprint as four 16-bit chunks (chunk c = vote bits [16c, 16c+16),
+    LSB-first within the chunk).  Chunked output is exactly what the
+    banding join needs, keeps every value far from the BIGINT sign bit,
+    and makes the Hamming distance a sum of four small ``bit_count``
+    terms in both engines.
     """
     toks = F.array_distinct(F.split(F.col(content_col), " "))
     flat = df.select(
@@ -1044,15 +869,15 @@ def simhash64_sql(
     return votes.select("id", *chunk_cols)
 
 
-def simhash_sql_near_pairs(
+def simhash_near_pairs(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """SimHash near-pairs at ORACLE strength: md5-nibble fingerprints
-    (:func:`simhash64_sql`), banded into the four 16-bit chunks, exact
-    Hamming verify on candidates.
+    """Fingerprint pairs by SimHash (:func:`simhash64`): band the 64 bits
+    into the four 16-bit chunks, then verify exact Hamming ≤
+    ``max_hamming`` on candidates.
 
     EXACTNESS: with 4 bands and ``max_hamming <= 3``, pigeonhole
     guarantees every qualifying pair differs in at most 3 chunks, i.e.
@@ -1063,16 +888,23 @@ def simhash_sql_near_pairs(
     shuffles are the fingerprint groupBy and the piece-bucket join —
     never all O(n²) pairs.
 
-    Fingerprints are checkpointed pre-join for the same reason as
-    ``simhash_near_pairs``: tiny relation, and both join sides would
-    otherwise recompute the 64-aggregate pipeline.
+    SCOPE: SimHash proximity means near-identical token DISTRIBUTIONS
+    (order- and multiplicity-insensitive), NOT Jaccard overlap — measured
+    ~16% recall vs the exact J≥0.3 pair set on the synthetic corpus
+    (NOTES.md). Position it as a distribution-shift / boilerplate-family
+    detector; the near-dup production path is `verified_near_dups`.
+
+    The fingerprint relation is checkpointed before the banding
+    self-join: it is tiny (four ints per doc), and without the
+    materialization BOTH join sides recompute the full explode +
+    64-aggregate fingerprint pipeline (measured ~2× at sf0.1).
     """
     if max_hamming >= 4:
         raise ValueError(
-            "simhash_sql_near_pairs bands into 4 chunks; max_hamming must "
+            "simhash_near_pairs bands into 4 chunks; max_hamming must "
             "be < 4 for the pigeonhole-exact candidate set"
         )
-    fp = simhash64_sql(df, content_col, id_col).localCheckpoint(eager=True)
+    fp = simhash64(df, content_col, id_col).localCheckpoint(eager=True)
     pieces = fp.select(
         "id",
         "c0",
@@ -2196,79 +2028,38 @@ def embedding_near_pairs_lsh(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Approximate embedding near-dup: hyperplane-LSH bucket both sides,
-    score only same-bucket pairs. Replaces the O(n²) cross join with a
-    bucket equi-join (expected ~2^planes× fewer scored pairs); recall <1
-    for pairs straddling a hyperplane — raise recall by lowering
-    ``planes`` or multi-probing. Same output shape as the exact variant.
-    """
-    from icebergproject_spark.llm.similarity import _dot, hyperplane_bucket, l2_norm
+    """Approximate embedding near-dup: sign-LSH bucket every vector,
+    score only same-bucket pairs.  Replaces the O(n²) cross join with a
+    bucket equi-join (expected ~2^planes× fewer scored pairs, one
+    ReusedExchange on the identical-plan sides); recall < 1 for pairs
+    straddling a hyperplane — raise recall by lowering ``planes``.
 
-    bucketed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("__v"),
-        l2_norm(F.col(vec_col)).alias("__n"),
-        hyperplane_bucket(F.col(vec_col), dim, planes).alias("__bucket"),
-    )
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    score = F.round(
-        _dot(F.col("a.__v"), F.col("b.__v")) / (F.col("a.__n") * F.col("b.__n")), 6
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.__bucket") == F.col("b.__bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            score.alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
-    )
-
-
-def embedding_near_pairs_lsh_sql(
-    df: DataFrame,
-    dim: int,
-    threshold: float = 0.35,
-    planes: int = 4,
-    quant: int = 10000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """LSH-bucketed embedding near-dup at ORACLE strength: buckets come
-    from :func:`~icebergproject_spark.llm.similarity.int_sign_bucket`
+    Buckets come from
+    :func:`~icebergproject_spark.llm.similarity.int_sign_bucket`
     (md5-minted integer hyperplanes, exact BIGINT projections — the
     sign can never flip from float noise), and the same-bucket cosine
     is the sequential-order double fold both engines evaluate
     identically, so the pair set AND the threshold decision replay
     bit-exactly in ANSI SQL.  Same output shape and threshold semantics
-    as :func:`embedding_near_pairs_lsh` (which stays the xxhash
-    float-weight production arm).  Scale shape: one bucket-equi
-    self-join (ReusedExchange on the identical-plan sides) instead of
-    the O(n²) cross join."""
+    as the exact variant: (id_a, id_b, score), id_a < id_b."""
     from icebergproject_spark.llm.similarity import (
         _dot,
         int_sign_bucket,
         l2_norm,
+        lsh_quantized,
         lsh_weights,
     )
 
     W = lsh_weights(planes, dim)
-    qz = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x * quant).cast("long"),
-    )
+    vec = F.col(vec_col).cast("array<double>")
     # norms precomputed per VECTOR, not per pair — same doubles either
     # way (sqrt of the identical sequential fold), ~3× less per-pair
     # work on the O(pairs) hot path
     bucketed = df.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("__n"),
-        int_sign_bucket(qz, W).alias("__bucket"),
+        vec.alias("__v"),
+        l2_norm(vec).alias("__n"),
+        int_sign_bucket(lsh_quantized(vec), W).alias("__bucket"),
     )
     a, b = bucketed.alias("a"), bucketed.alias("b")
     score = F.round(
@@ -2808,7 +2599,6 @@ def density_clusters(
     ``pairs`` (an (id_a, id_b, score) ε-edge set, id_a < id_b) to swap
     it; the default exact all-pairs arm is the verification baseline,
     the LSH/cell-blocked generators (:func:`embedding_near_pairs_lsh`,
-    :func:`embedding_near_pairs_lsh_sql`,
     :func:`semantic_near_pairs`) the 100 TB path, identical downstream;
     components run through :func:`connected_components`
     (O(log²) rounds / driver union-find fast path); the border argmax

@@ -4,10 +4,12 @@
   set, cross-join against the corpus, dot products via ``F.zip_with`` +
   ``F.aggregate`` (JVM-side, no Python), window top-k. At 100 TB the
   corpus side stays partition-parallel; cost is O(corpus × queries).
-- **lsh_topk** — the scale path: random-hyperplane LSH. Sign bits against
-  ``planes`` deterministic hyperplanes → bucket id; only same-bucket
-  (or neighboring-probe) pairs are scored. Cuts the cross product by
-  ~2^planes at a small recall cost.
+- **lsh_topk** — the scale path: sign-LSH. Sign bits of exact BIGINT
+  projections of the quantized vector onto ``planes`` md5-minted integer
+  hyperplanes (:func:`lsh_weights`, :func:`int_sign_bucket`) → bucket
+  id; only same-bucket pairs are scored. Cuts the cross product by
+  ~2^planes at a small recall cost, and a SQL engine replays every
+  bucket (:func:`int_sign_bucket_sql`).
 - Norms/statistics helpers shared by both.
 """
 
@@ -75,31 +77,6 @@ def cosine_topk(
     )
 
 
-def hyperplane_bucket(
-    vec: Column, dim: int, planes: int = 8, seed: int = 42
-) -> Column:
-    """Deterministic random-hyperplane LSH bucket id (0..2^planes-1).
-
-    Plane p's component for dimension d is a pseudo-random ±1/±2/… weight
-    derived from xxhash64(d, p, seed) — reproducible on any executor with
-    no side data to ship. sign(Σ w_pd · v_d) gives bit p.
-    """
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda v, d: v.cast("double")
-                * ((F.pmod(F.xxhash64(d, F.lit(p), F.lit(seed)), F.lit(1000)) - 499.5) / 500.0),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -110,44 +87,66 @@ def lsh_topk(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Approximate top-k: score only same-LSH-bucket pairs.
+    """Sign-LSH approximate top-k: score only same-bucket pairs, with
+    every bucket decision made by EXACT integer arithmetic so any engine
+    replays the identical buckets, candidate set, and ranking:
 
-    Recall < 1.0 by design; at 100 TB this replaces the cross join with a
-    bucket-equi join (shuffle on bucket id, ~2^planes× less work). Output
-    shape matches cosine_topk.
-    """
+    - vectors quantize to BIGINT (:func:`lsh_quantized`);
+    - hyperplane weights are md5-minted integer literals
+      (:func:`lsh_weights`) — the projection Σ qᵢ·wᵢ is an exact BIGINT
+      sum (|q|·|w|·dim ≪ 2^53), so the sign bit can never flip from
+      float noise;
+    - bucket = Σ bit_p·2^p (:func:`int_sign_bucket`); same-bucket pairs
+      get the full-precision cosine (sequential-order array fold —
+      deterministic in both engines) with the proven ROUND(·, 6)
+      rendering.
+
+    Scale shape: at 100 TB this replaces the cross join with a
+    bucket-equi join (shuffle on bucket id, ~2^planes× less scoring),
+    one window over the scored candidates.  Recall < 1.0 by design; the
+    oracle checks that BOTH engines approximate identically.  Output
+    shape matches cosine_topk: (query_id, neighbor_id, score, rank)."""
+    W = lsh_weights(planes, dim)
+    vec = F.col(vec_col).cast("array<double>")
+    # norms once per vector (identical doubles; less per-pair work)
     cb = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-        hyperplane_bucket(F.col(vec_col), dim, planes).alias("__bucket"),
+        vec.alias("__cvec"),
+        l2_norm(vec).alias("__cn"),
+        int_sign_bucket(lsh_quantized(vec), W).alias("__bucket"),
     )
     qb = queries.select(
         F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        hyperplane_bucket(F.col(vec_col), dim, planes).alias("__bucket"),
+        vec.alias("__qvec"),
+        l2_norm(vec).alias("__qn"),
+        int_sign_bucket(lsh_quantized(vec), W).alias("__bucket"),
     )
-    scored = cb.join(F.broadcast(qb), "__bucket").select(
-        query_id_col,
-        "neighbor_id",
-        (
-            _dot(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn"))
-        ).alias("score"),
+    scored = (
+        cb.join(F.broadcast(qb), "__bucket")
+        .filter(F.col(query_id_col) != F.col("neighbor_id"))
+        .select(
+            query_id_col,
+            "neighbor_id",
+            (
+                _dot(F.col("__qvec"), F.col("__cvec"))
+                / (F.col("__qn") * F.col("__cn"))
+            ).alias("score"),
+        )
     )
-    scored = scored.filter(F.col(query_id_col) != F.col("neighbor_id"))
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", F.round("score", 6).alias("score"), "rank")
+        .select(
+            query_id_col, "neighbor_id", F.round("score", 6).alias("score"), "rank"
+        )
     )
 
 
 def lsh_weights(planes: int, dim: int) -> list[list[int]]:
-    """Hyperplane weights for the ORACLE-strength sign-LSH arm: plane
+    """Hyperplane weights for sign-LSH (:func:`int_sign_bucket`): plane
     p's component for dimension d is ``md5("<p>-<d>")``'s first 4 hex
     digits mod 1000, shifted to [-500, 499] — minted driver-side with
     hashlib (pure Python, deterministic), embedded into the plan as
@@ -161,6 +160,19 @@ def lsh_weights(planes: int, dim: int) -> list[list[int]]:
         ]
         for p in range(planes)
     ]
+
+
+#: Quantization grid of every sign-LSH bucket decision (:func:`lsh_quantized`).
+LSH_QUANT = 10_000
+
+
+def lsh_quantized(vec: Column) -> Column:
+    """``round(x·LSH_QUANT)`` as BIGINTs — the integer grid sign-LSH
+    projects on, so bucket bits never depend on float summation order
+    (the DuckDB oracles render the same ``ROUND(x * 10000)``)."""
+    return F.transform(
+        vec.cast("array<double>"), lambda x: F.round(x * LSH_QUANT).cast("long")
+    )
 
 
 def int_quantized_base(
@@ -298,79 +310,14 @@ def int_sign_bucket(qcol: Column, W: list[list[int]]) -> Column:
     return b.cast("int")
 
 
-def lsh_sql_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    planes: int = 4,
-    quant: int = 10000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Sign-LSH approximate top-k at ORACLE strength — :func:`lsh_topk`
-    with every bucket decision made by EXACT integer arithmetic so any
-    engine replays the identical buckets, candidate set, and ranking:
-
-    - vectors quantize to BIGINT (``round(x·quant)``, the
-      ``ivf_sql_topk`` move);
-    - hyperplane weights are md5-minted integer literals
-      (:func:`lsh_weights`) — the projection Σ qᵢ·wᵢ is an exact BIGINT
-      sum (|q|·|w|·dim ≪ 2^53), so the sign bit can never flip from
-      float noise, unlike the xxhash float-weight arm;
-    - bucket = Σ bit_p·2^p; same-bucket pairs get the full-precision
-      cosine (sequential-order array fold — deterministic in both
-      engines) with the proven ROUND(·, 6) rendering.
-
-    Scale shape matches :func:`lsh_topk`: bucket-equi join replaces the
-    cross join (~2^planes× less scoring), one window over the scored
-    candidates.  Recall < 1.0 by design; the oracle checks that BOTH
-    engines approximate identically.  Output: (query_id, neighbor_id,
-    score, rank)."""
-    W = lsh_weights(planes, dim)
-    qz = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x * quant).cast("long"),
-    )
-
-    def bucket_of(qcol: Column) -> Column:
-        return int_sign_bucket(qcol, W)
-
-    # norms once per vector (identical doubles; less per-pair work)
-    cb = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cvec"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("__cn"),
-        bucket_of(qz).alias("__bucket"),
-    )
-    qb = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).cast("array<double>").alias("__qvec"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("__qn"),
-        bucket_of(qz).alias("__bucket"),
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "__bucket")
-        .filter(F.col(query_id_col) != F.col("neighbor_id"))
-        .select(
-            query_id_col,
-            "neighbor_id",
-            (
-                _dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, "neighbor_id", F.round("score", 6).alias("score"), "rank"
-        )
+def int_sign_bucket_sql(W: list[list[int]], qcol: str = "q") -> str:
+    """DuckDB rendering of :func:`int_sign_bucket` over a quantized
+    ``DOUBLE[]`` column ``qcol`` (integer-valued doubles: exact sums
+    ≪ 2^53, so the sign matches the BIGINT projection bit for bit)."""
+    return " + ".join(
+        f"(CASE WHEN list_dot_product({qcol}, CAST({row} AS DOUBLE[])) >= 0 "
+        f"THEN {2 ** p} ELSE 0 END)"
+        for p, row in enumerate(W)
     )
 
 
@@ -1025,12 +972,11 @@ def ann_knn_graph(
     verification tier.
 
     Bucketing reuses the md5-minted integer hyperplanes of
-    :func:`lsh_sql_topk` (:func:`lsh_weights` + :func:`int_sign_bucket`):
+    :func:`lsh_topk` (:func:`lsh_weights` + :func:`int_sign_bucket`):
     the bucket decision is an exact BIGINT projection sign, and the
     same-bucket cosine is the sequential double fold both engines
     evaluate identically, so the graph — buckets, candidates, ranks —
-    replays bit-exactly in ANSI SQL (unlike the xxhash float-weight
-    arm, which stays rows-only).
+    replays bit-exactly in ANSI SQL.
 
     Recall < 1.0 by design, and it is GOVERNED, not guessed: with
     ``tables`` = L independent hyperplane sets (plane rows

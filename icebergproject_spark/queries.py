@@ -518,24 +518,20 @@ HAVING 10 * COUNT(*) >= 3 * (ANY_VALUE(a.sz) + ANY_VALUE(b.sz) - COUNT(*))
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs (approximate; rows-only check — the
-    xxhash64 permutations have no DuckDB equivalent)."""
+    """MinHash-LSH candidate pairs at 32 hashes / 8 bands (oracle-checked).
+
+    Each pair carries its number of shared bands.  md5-prefix shingle
+    hashes and md5-minted affine permutations
+    (llm/dedup.minhash_signatures) make the signatures, band keys and
+    candidate set bit-identical in DuckDB."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
 
 
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash fingerprint pairs within Hamming distance 3 (rows-only).
-
-    SCOPE (measured, NOTES.md): SimHash detects near-identical token
-    DISTRIBUTIONS — token-order- and multiplicity-insensitive — not
-    Jaccard overlap (~16% recall vs the exact J≥0.3 pair set on this
-    corpus). Use it as a distribution-shift / boilerplate detector;
-    for near-dup DEDUP use `dedup_verified` (MinHash-LSH + exact
-    verify). The shift contract is pytest-pinned
-    (test_simhash_distribution_shift)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs(docs, max_hamming=3)
+ORACLE_DEDUP_MINHASH_LSH = f"""
+WITH {dedup.minhash_bands_sql(32, 8)}
+SELECT id_a, id_b, n_shared_bands FROM pairs
+"""
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -636,17 +632,6 @@ SELECT * FROM ranked WHERE rank <= 5
 """
 
 
-def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k (rows-only — hyperplanes derive from
-    xxhash64)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()[0])
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.lsh_topk(emb, queries, dim=dim, k=5, planes=4)
-
-
 def q_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.embedding_stats(emb)
@@ -711,14 +696,12 @@ REGISTRY: dict[str, Query] = {
     # LLM data-pipeline operators
     "dedup_exact": Query(q_dedup_exact, ORACLE_DEDUP_EXACT),
     "dedup_ngram_jaccard": Query(q_dedup_ngram_jaccard, ORACLE_DEDUP_NGRAM),
-    "dedup_minhash_lsh": Query(q_dedup_minhash_lsh, None),
-    "dedup_simhash": Query(q_dedup_simhash, None),
+    "dedup_minhash_lsh": Query(q_dedup_minhash_lsh, ORACLE_DEDUP_MINHASH_LSH),
     "text_stats": Query(q_text_stats, ORACLE_TEXT_STATS),
     "lang_id": Query(q_lang_id, _lang_oracle()),
     "token_count_bpe": Query(q_token_count_bpe, ORACLE_TOKEN_BPE),
     "doc_fingerprint": Query(q_doc_fingerprint, ORACLE_FINGERPRINT),
     "similarity_topk": Query(q_similarity_topk, ORACLE_SIMILARITY_TOPK),
-    "similarity_lsh": Query(q_similarity_lsh, None),
     "embedding_stats": Query(q_embedding_stats, ORACLE_EMBEDDING_STATS),
     "multimodal_meta": Query(q_multimodal_meta, ORACLE_MULTIMODAL_META),
     "multimodal_features": Query(q_multimodal_features, None),

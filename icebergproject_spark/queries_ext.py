@@ -498,15 +498,6 @@ SELECT id_a, id_b, score FROM (
 """
 
 
-def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed embedding near-dup (rows-only: bucket pruning is not
-    SQL-expressible; recall vs the exact variant is pytest-checked)."""
-    from icebergproject_spark.llm.dedup import embedding_near_pairs_lsh
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_near_pairs_lsh(emb, dim=64, threshold=0.35, planes=4)
-
-
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5 neighbors for query vectors vec_id < 5
     (rows-only: the 10-iteration k-means training is iterative and
@@ -539,6 +530,5 @@ EXT_REGISTRY: dict[str, Query] = {
     "scalar_suite": Query(q_scalar_suite, ORACLE_SCALAR_SUITE),
     "user_points_salted": Query(q_user_points_salted, ORACLE_USER_POINTS_SALTED),
     "dedup_embedding": Query(q_dedup_embedding, ORACLE_DEDUP_EMBEDDING),
-    "dedup_embedding_lsh": Query(q_dedup_embedding_lsh, None),
     "similarity_ivf": Query(q_similarity_ivf, None),
 }

@@ -945,8 +945,9 @@ def q_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SAME inverted-index SQL as the exact tier: the verify
     stage eliminates every LSH false positive, and the banding (32
     hashes × 8 bands) is measured at 100% recall on the exact-threshold
-    pair set at sf0.01 (deterministic xxhash seeds, so the match is
-    stable round-to-round; recall-vs-exact is also pytest-asserted)."""
+    pair set at sf0.01 (deterministic md5-derived permutations, so the
+    match is stable round-to-round; recall-vs-exact is also
+    pytest-asserted)."""
     from icebergproject_spark.llm import dedup
 
     docs = _t(spark, sf_dir, "documents")
@@ -965,8 +966,8 @@ def q_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB dedup composition end-to-end: MinHash-LSH candidate
-    pairs (approximate, xxhash-based — rows-only check) resolved into
-    clusters by connected components, singletons included. This is
+    pairs at 32 hashes / 8 bands (approximate, md5-replayable) resolved
+    into clusters by connected components, singletons included. This is
     exactly `dedup_clusters` with the exact-Jaccard edge generator
     swapped for the scalable one; the cluster algebra is shared."""
     from icebergproject_spark.llm import dedup
@@ -977,6 +978,16 @@ def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs, nodes=docs.select("doc_id"), node_col="doc_id"
     )
     return comp.select(F.col("node").alias("doc_id"), "cluster_id")
+
+
+def _dedup_clusters_lsh_oracle() -> str:
+    # same closure as dedup_clusters_lsh_sql, at this head's 32/8 bands
+    from icebergproject_spark.queries_r4 import _lsh_components_sql
+
+    return f"""
+WITH RECURSIVE {_lsh_components_sql(32, 8)}
+SELECT doc_id, cluster_id FROM lab
+"""
 
 
 def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2217,7 +2228,9 @@ EXT2_REGISTRY: dict[str, Query] = {
     "supplier_revenue_share": Query(q_supplier_revenue_share, ORACLE_SUPPLIER_SHARE),
     "local_supplier_volume": Query(q_local_supplier_volume, ORACLE_LOCAL_SUPPLIER),
     "dedup_clusters": Query(q_dedup_clusters, ORACLE_DEDUP_CLUSTERS),
-    "dedup_clusters_lsh": Query(q_dedup_clusters_lsh, None),
+    "dedup_clusters_lsh": Query(
+        q_dedup_clusters_lsh, _dedup_clusters_lsh_oracle()
+    ),
     "dedup_verified": Query(q_dedup_verified, _ngram_oracle()),
     "lm_quality_score": Query(q_lm_quality_score, None),
     "repetition_score": Query(q_repetition_score, ORACLE_REPETITION),

@@ -51,6 +51,7 @@ from icebergproject_spark.queries_r9 import (
     _materialized_with_stats,
 )
 from icebergproject_spark.queries_r10 import INC_SPLIT_MOD, INC_SPLIT_REM
+from icebergproject_spark.queries_r4 import _lsh_components_sql
 
 # guard threshold for the registered head: the %10 split floods most of
 # the 2^4 bucket space at every fixture SF, so the guard chooses rebuild
@@ -303,7 +304,7 @@ def _cc_maintenance_parts(spark: SparkSession, sf_dir: str):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = (
-        dedup.minhash_lsh_sql_candidates(docs)
+        dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
@@ -398,60 +399,12 @@ def q_dedup_clusters_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ups.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
-def _closure_cte(sfx: str, where: str) -> str:
-    """One md5-LSH-edges + recursive-min-closure block (the
-    ORACLE_DEDUP_CLUSTERS_LSH_SQL pipeline) over ``documents WHERE
-    {where}``, CTE names suffixed so two instances can coexist."""
-    from icebergproject_spark.queries_r4 import _md5_prefix12_sql
-
-    return f"""
-toks{sfx} AS (
-  SELECT doc_id, text, string_split(text, ' ') AS t
-  FROM documents WHERE {where}
-),
-grams{sfx} AS (
-  SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
-           THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
-           ELSE [text] END) AS g
-  FROM toks{sfx}
-),
-hashed{sfx} AS (
-  SELECT doc_id, i, md5(CAST(i AS VARCHAR) || '-' || g) AS hx
-  FROM grams{sfx} CROSS JOIN (SELECT UNNEST(range(16)) AS i)
-),
-hmin{sfx} AS (
-  SELECT doc_id, i, MIN({_md5_prefix12_sql('hx')}) AS h
-  FROM hashed{sfx} GROUP BY doc_id, i
-),
-bands{sfx} AS (
-  SELECT doc_id, i // 2 AS band,
-         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
-  FROM hmin{sfx} GROUP BY doc_id, i // 2
-),
-pairs{sfx} AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands{sfx} a
-  JOIN bands{sfx} b ON a.band = b.band AND a.band_sig = b.band_sig
-              AND a.doc_id < b.doc_id
-),
-edges{sfx} AS (
-  SELECT id_a AS s, id_b AS d FROM pairs{sfx}
-  UNION ALL SELECT id_b, id_a FROM pairs{sfx}
-),
-reach{sfx}(node, r) AS (
-  SELECT doc_id, doc_id FROM documents WHERE {where}
-  UNION
-  SELECT e.d, reach{sfx}.r FROM reach{sfx} JOIN edges{sfx} e ON e.s = reach{sfx}.node
-),
-lab{sfx} AS (SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach{sfx} GROUP BY node)"""
-
-
 # the full-corpus closure and the base-only closure, diffed: batch rows
 # always emitted, stored rows only when the merged label differs
 ORACLE_DEDUP_CLUSTERS_UPSERTS = f"""
 WITH RECURSIVE
-{_closure_cte('_a', 'TRUE')},
-{_closure_cte('_b', f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}')}
+{_lsh_components_sql(16, 8, sfx='_a')},
+{_lsh_components_sql(16, 8, f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}', '_b')}
 SELECT a.doc_id, a.cluster_id
 FROM lab_a a LEFT JOIN lab_b b USING (doc_id)
 WHERE a.doc_id % {CC_SPLIT_MOD} = {CC_SPLIT_REM}

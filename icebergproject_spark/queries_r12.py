@@ -45,11 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from icebergproject_spark.queries import Query
+from icebergproject_spark.queries_r4 import _lsh_components_sql
 from icebergproject_spark.queries_r11 import (
     CC_SPLIT_MOD,
     CC_SPLIT_REM,
     _cc_maintenance_parts,
-    _closure_cte,
     _mkdtemp_for_run,
 )
 
@@ -109,8 +109,8 @@ def q_dedup_clusters_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # full-closure label differs (exactly the relabel map's domain)
 ORACLE_DEDUP_CLUSTERS_BUCKETED = f"""
 WITH RECURSIVE
-{_closure_cte('_a', 'TRUE')},
-{_closure_cte('_b', f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}')},
+{_lsh_components_sql(16, 8, sfx='_a')},
+{_lsh_components_sql(16, 8, f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}', '_b')},
 changed AS (
   SELECT DISTINCT b.cluster_id AS old_label
   FROM lab_a a JOIN lab_b b USING (doc_id)
@@ -169,8 +169,8 @@ def q_dedup_clusters_flood_guard(
 # endpoints ∪ the batch docs; fraction in exact integer ppm at ≥ 0.5
 ORACLE_DEDUP_CLUSTERS_FLOOD_GUARD = f"""
 WITH RECURSIVE
-{_closure_cte('_a', 'TRUE')},
-{_closure_cte('_b', f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}')},
+{_lsh_components_sql(16, 8, sfx='_a')},
+{_lsh_components_sql(16, 8, f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}', '_b')},
 touched AS (
   SELECT id_a AS node FROM pairs_a
   WHERE id_a % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
@@ -244,8 +244,8 @@ def q_dedup_clusters_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on a freshly-seeded store)
 ORACLE_DEDUP_CLUSTERS_STORED = f"""
 WITH RECURSIVE
-{_closure_cte('_a', 'TRUE')},
-{_closure_cte('_b', f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}')},
+{_lsh_components_sql(16, 8, sfx='_a')},
+{_lsh_components_sql(16, 8, f'doc_id % {CC_SPLIT_MOD} <> {CC_SPLIT_REM}', '_b')},
 touched AS (
   SELECT id_a AS node FROM pairs_a
   WHERE id_a % {CC_SPLIT_MOD} = {CC_SPLIT_REM}

@@ -5,7 +5,7 @@ candidate feed) gets its own driver-facing CORRECTNESS row.
 ``dedup_lsh_candidates_incremental`` — the INCREMENTAL path itself at
 oracle strength: the corpus splits into a stored base (doc_id % 13 != 0)
 and an append batch; the Spark arm bands ONLY the two slices with the
-md5-replayable band stream (:func:`llm.dedup.banded_sql_signatures` —
+md5-replayable band stream (:func:`llm.dedup.banded_signatures` —
 the stored-state schema production persists) and generates the batch's
 candidate edges via :func:`llm.dedup.incremental_lsh_candidates`
 (batch×stored broadcast probe + batch×batch intra hits — NO corpus
@@ -39,13 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql.window import Window
 
+from icebergproject_spark.llm.dedup import minhash_bands_sql
 from icebergproject_spark.queries import Query, _t
-from icebergproject_spark.queries_r4 import _md5_prefix12_sql
-from icebergproject_spark.queries_r11 import (
-    CC_SPLIT_MOD,
-    CC_SPLIT_REM,
-    _closure_cte,
-)
+from icebergproject_spark.queries_r4 import _lsh_components_sql
+from icebergproject_spark.queries_r11 import CC_SPLIT_MOD, CC_SPLIT_REM
 from icebergproject_spark.queries_r12 import CC_BUCKETS
 
 
@@ -61,8 +58,12 @@ def q_dedup_lsh_candidates_incremental(
 
     docs = _t(spark, sf_dir, "documents")
     in_batch = F.col("doc_id") % CC_SPLIT_MOD == CC_SPLIT_REM
-    stored_bands = dedup.banded_sql_signatures(docs.where(~in_batch))
-    batch_bands = dedup.banded_sql_signatures(docs.where(in_batch))
+    stored_bands = dedup.banded_signatures(
+        docs.where(~in_batch), num_hashes=16, bands=8
+    )
+    batch_bands = dedup.banded_signatures(
+        docs.where(in_batch), num_hashes=16, bands=8
+    )
     cands = dedup.incremental_lsh_candidates(batch_bands, stored_bands)
     intra = (
         (F.col("id_a") % CC_SPLIT_MOD == CC_SPLIT_REM)
@@ -75,41 +76,18 @@ def q_dedup_lsh_candidates_incremental(
     )
 
 
-# the oracle re-runs the FULL md5-LSH generator (identical CTEs to
-# ORACLE_DEDUP_MINHASH_LSH_SQL, queries_r4.py) and slices it to pairs
-# touching the batch — pair-locality makes the slice exactly the
-# incremental generator's output
+# the oracle re-runs the FULL md5-LSH generator (llm/dedup.minhash_bands_sql)
+# and slices it to pairs touching the batch — pair-locality makes the
+# slice exactly the incremental generator's output
 ORACLE_DEDUP_LSH_CANDIDATES_INCREMENTAL = f"""
-WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-grams AS (
-  SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
-           THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
-           ELSE [text] END) AS g
-  FROM toks
-),
-hashed AS (
-  SELECT doc_id, i, md5(CAST(i AS VARCHAR) || '-' || g) AS hx
-  FROM grams CROSS JOIN (SELECT UNNEST(range(16)) AS i)
-),
-hmin AS (
-  SELECT doc_id, i, MIN({_md5_prefix12_sql('hx')}) AS h
-  FROM hashed GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, i // 2 AS band,
-         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
-  FROM hmin GROUP BY doc_id, i // 2
-)
-SELECT DISTINCT CAST(a.doc_id AS BIGINT) AS id_a,
-       CAST(b.doc_id AS BIGINT) AS id_b,
-       CAST(CASE WHEN a.doc_id % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
-                  AND b.doc_id % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
+WITH {minhash_bands_sql(16, 8)}
+SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
+       CAST(CASE WHEN id_a % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
+                  AND id_b % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
              THEN 1 ELSE 0 END AS BIGINT) AS is_intra
-FROM bands a
-JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-            AND a.doc_id < b.doc_id
-WHERE a.doc_id % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
-   OR b.doc_id % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
+FROM pairs
+WHERE id_a % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
+   OR id_b % {CC_SPLIT_MOD} = {CC_SPLIT_REM}
 """
 
 
@@ -138,7 +116,9 @@ def q_dedup_clusters_backfill_reseed(
     base_docs = docs.where(in_base).select("doc_id", "text")
     backfill = docs.where(~in_base).select("doc_id", "text")
     stored = dedup.connected_components(
-        dedup.minhash_lsh_sql_candidates(base_docs).select("id_a", "id_b"),
+        dedup.minhash_lsh_candidates(
+            base_docs, num_hashes=16, bands=8
+        ).select("id_a", "id_b"),
         nodes=base_docs.select("doc_id"),
         node_col="doc_id",
     )
@@ -159,7 +139,9 @@ def q_dedup_clusters_backfill_reseed(
             f"(batch={stats['batch_rows']}, est={stats['stored_rows_est']})"
         )
     cold = dedup.connected_components(
-        dedup.minhash_lsh_sql_candidates(docs).select("id_a", "id_b"),
+        dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8).select(
+            "id_a", "id_b"
+        ),
         nodes=docs.select(F.col("doc_id")),
         node_col="doc_id",
     )
@@ -196,7 +178,7 @@ def q_dedup_clusters_backfill_reseed(
 # memberships (mod CC_BUCKETS)
 ORACLE_DEDUP_CLUSTERS_BACKFILL_RESEED = f"""
 WITH RECURSIVE
-{_closure_cte('_a', 'TRUE')},
+{_lsh_components_sql(16, 8, sfx='_a')},
 counts AS (
   SELECT
     (SELECT CAST(COUNT(*) AS BIGINT) FROM documents

@@ -23,8 +23,9 @@
   per-doc sums, ranking on the exact integer-division mean.  Their float
   arms stay registered rows-only.
 - ``dedup_minhash_lsh_sql`` — the LSH mechanism itself at ORACLE
-  strength: md5-derived minhash permutations make signatures, band
-  buckets and the candidate-pair set bit-identical across engines.
+  strength: md5-prefix shingle hashes and md5-minted affine
+  permutations make signatures, band buckets and the candidate-pair set
+  bit-identical across engines.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from icebergproject_spark.llm import dedup
 from icebergproject_spark.queries import Query, _t
 
 
@@ -375,99 +377,78 @@ FROM b
 
 def q_dedup_minhash_lsh_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate generation at ORACLE strength
-    (llm/dedup.minhash_lsh_sql_candidates): md5-derived hash
-    permutations (first 12 hex digits of md5("<i>-<gram>")) make the
+    (llm/dedup.minhash_lsh_candidates) at the 16-hash / 8-band / 2-row
+    operating point (knee ≈ 0.35, protecting J ≥ 0.3): one md5-prefix
+    hash per shingle and md5-minted affine permutations make the
     signatures, band buckets, and candidate-pair set bit-identical
-    across engines — DuckDB replays the LSH mechanism itself, not just
-    a downstream verification.  16 hashes / 8 bands / 2 rows
-    (knee ≈ 0.35).  The xxhash64 arm stays the production default
-    (``dedup_minhash_lsh``, rows-only)."""
-    from icebergproject_spark.llm import dedup
-
+    across engines — DuckDB replays the LSH mechanism itself, not just a
+    downstream verification."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_sql_candidates(docs)
+    return dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8)
 
 
-def _md5_prefix12_sql(hx: str) -> str:
-    """BIGINT value of the first 12 hex digits of md5 column `hx`."""
-    return (
-        "("
-        + " + ".join(
-            f"(instr('0123456789abcdef', substr({hx}, {j + 1}, 1)) - 1) * {16 ** (11 - j)}"
-            for j in range(12)
-        )
-        + ")"
-    )
-
-
-# stage-for-stage mirror of minhash_lsh_sql_candidates: same shingles,
-# same md5-derived permutations (md5 computed once per (gram, perm) in
-# `hashed`, nibbles decoded in `hmin`), same ':'-joined band keys
 ORACLE_DEDUP_MINHASH_LSH_SQL = f"""
-WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-grams AS (
-  SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
-           THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
-           ELSE [text] END) AS g
-  FROM toks
-),
-hashed AS (
-  SELECT doc_id, i, md5(CAST(i AS VARCHAR) || '-' || g) AS hx
-  FROM grams CROSS JOIN (SELECT UNNEST(range(16)) AS i)
-),
-hmin AS (
-  SELECT doc_id, i, MIN({_md5_prefix12_sql('hx')}) AS h
-  FROM hashed GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, i // 2 AS band,
-         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
-  FROM hmin GROUP BY doc_id, i // 2
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(COUNT(*) AS BIGINT) AS n_shared_bands
-FROM bands a
-JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-            AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
+WITH {dedup.minhash_bands_sql(16, 8)}
+SELECT id_a, id_b, n_shared_bands FROM pairs
 """
+
+
+def _lsh_components_sql(
+    num_hashes: int, bands: int, where: str = "TRUE", sfx: str = ""
+) -> str:
+    """The md5-LSH candidate CTEs (llm/dedup.minhash_bands_sql) over
+    ``documents WHERE {where}`` feeding the recursive min-reachable-id
+    closure — ``lab{sfx}(doc_id, cluster_id)`` is the SQL replay of
+    ``connected_components`` over ``minhash_lsh_candidates``.  CTE names
+    carry ``sfx`` so two instances (base slice, full corpus) coexist.
+    Needs ``WITH RECURSIVE``."""
+    return f"""{dedup.minhash_bands_sql(num_hashes, bands, where, sfx)},
+edges{sfx} AS (
+  SELECT id_a AS s, id_b AS d FROM pairs{sfx}
+  UNION ALL SELECT id_b, id_a FROM pairs{sfx}
+),
+reach{sfx}(node, r) AS (
+  SELECT doc_id, doc_id FROM documents WHERE {where}
+  UNION
+  SELECT e.d, reach{sfx}.r FROM reach{sfx} JOIN edges{sfx} e ON e.s = reach{sfx}.node
+),
+lab{sfx} AS (SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach{sfx} GROUP BY node)"""
 
 
 def q_similarity_lsh_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH approximate top-5 at ORACLE strength
-    (llm/similarity.lsh_sql_topk): md5-minted integer hyperplane
-    weights + BIGINT projections mean the sign bit can never flip from
-    float noise — DuckDB replays the identical buckets, candidate set,
-    and ranking.  4 planes, query vectors vec_id < 5.  The xxhash
-    float-weight arm stays rows-only (``similarity_lsh``)."""
-    from icebergproject_spark.llm.similarity import lsh_sql_topk
+    (llm/similarity.lsh_topk): md5-minted integer hyperplane weights +
+    BIGINT projections mean the sign bit can never flip from float
+    noise — DuckDB replays the identical buckets, candidate set, and
+    ranking.  4 planes, query vectors vec_id < 5."""
+    from icebergproject_spark.llm.similarity import lsh_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return lsh_sql_topk(emb, queries, dim=64, k=5, planes=4)
+    return lsh_topk(emb, queries, dim=64, k=5, planes=4)
 
 
-def _lsh_oracle_sql(planes: int = 4, dim: int = 64) -> str:
-    """Mirror of lsh_sql_topk: per-plane weight literals regenerated
-    with the same hashlib derivation (llm/similarity.lsh_weights)."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+def _sign_bucket_ctes(planes: int, dim: int) -> str:
+    """``v(cid, e, q)`` + ``b(cid, e, n, bucket)``: every vector with its
+    norm and its sign-LSH bucket — the SQL replay of the bucketing
+    shared by lsh_topk and embedding_near_pairs_lsh (quantized grid,
+    llm/similarity.lsh_weights planes, int_sign_bucket_sql)."""
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
-    W = lsh_weights(planes, dim)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(planes)
-    )
-    return f"""
-WITH v AS (
+    bucket = int_sign_bucket_sql(lsh_weights(planes, dim))
+    return f"""v AS (
   SELECT vec_id AS cid,
          CAST(embedding AS DOUBLE[]) AS e,
          [CAST(ROUND(x * 10000) AS DOUBLE) FOR x IN CAST(embedding AS DOUBLE[])] AS q
   FROM embeddings
 ),
-b AS (SELECT cid, e, sqrt(list_dot_product(e, e)) AS n, {bucket} AS bucket FROM v),
+b AS (SELECT cid, e, sqrt(list_dot_product(e, e)) AS n, {bucket} AS bucket FROM v)"""
+
+
+ORACLE_SIMILARITY_LSH_SQL = f"""
+WITH {_sign_bucket_ctes(4, 64)},
 scored AS (
   SELECT qb.cid AS query_id, cb.cid AS neighbor_id,
          list_dot_product(qb.e, cb.e) / (qb.n * cb.n) AS s
@@ -484,47 +465,24 @@ SELECT * FROM ranked WHERE rank <= 5
 """
 
 
-ORACLE_SIMILARITY_LSH_SQL = _lsh_oracle_sql()
-
-
 def q_dedup_embedding_lsh_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed embedding near-dup at ORACLE strength
-    (llm/dedup.embedding_near_pairs_lsh_sql): integer sign-LSH buckets
-    + bit-identical double cosine make the bucket pruning itself
-    SQL-replayable — retiring the old claim that it isn't.  4 planes,
-    threshold 0.35.  The xxhash arm stays rows-only
-    (``dedup_embedding_lsh``)."""
-    from icebergproject_spark.llm.dedup import embedding_near_pairs_lsh_sql
+    (llm/dedup.embedding_near_pairs_lsh): integer sign-LSH buckets +
+    bit-identical double cosine make the bucket pruning itself
+    SQL-replayable.  4 planes, threshold 0.35."""
+    from icebergproject_spark.llm.dedup import embedding_near_pairs_lsh
 
     emb = _t(spark, sf_dir, "embeddings")
-    return embedding_near_pairs_lsh_sql(emb, dim=64, threshold=0.35, planes=4)
+    return embedding_near_pairs_lsh(emb, dim=64, threshold=0.35, planes=4)
 
 
-def _embedding_lsh_oracle_sql(planes: int = 4, dim: int = 64) -> str:
-    from icebergproject_spark.llm.similarity import lsh_weights
-
-    W = lsh_weights(planes, dim)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(planes)
-    )
-    return f"""
-WITH v AS (
-  SELECT vec_id AS cid,
-         CAST(embedding AS DOUBLE[]) AS e,
-         [CAST(ROUND(x * 10000) AS DOUBLE) FOR x IN CAST(embedding AS DOUBLE[])] AS q
-  FROM embeddings
-),
-b AS (SELECT cid, e, sqrt(list_dot_product(e, e)) AS n, {bucket} AS bucket FROM v)
+ORACLE_DEDUP_EMBEDDING_LSH_SQL = f"""
+WITH {_sign_bucket_ctes(4, 64)}
 SELECT a.cid AS id_a, c.cid AS id_b,
        ROUND(list_dot_product(a.e, c.e) / (a.n * c.n), 6) AS score
 FROM b a JOIN b c ON a.bucket = c.bucket AND a.cid < c.cid
 WHERE ROUND(list_dot_product(a.e, c.e) / (a.n * c.n), 6) >= 0.35
 """
-
-
-ORACLE_DEDUP_EMBEDDING_LSH_SQL = _embedding_lsh_oracle_sql()
 
 
 def q_dedup_semantic_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,19 +623,16 @@ SELECT cid AS vec_id, CAST(cluster_id AS INTEGER) AS cluster_id FROM (
 def q_dedup_clusters_lsh_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB dedup composition — LSH candidate edges resolved into
     clusters by connected components — at ORACLE strength end to end:
-    edges are the md5-permutation LSH candidate set
-    (llm/dedup.minhash_lsh_sql_candidates — bit-identical across
-    engines, false positives included BY DESIGN, no Jaccard verify
-    tier), clusters are the same large-star/small-star components as
+    edges are the md5-LSH candidate set at 16 hashes / 8 bands
+    (llm/dedup.minhash_lsh_candidates — bit-identical across engines,
+    false positives included BY DESIGN, no Jaccard verify tier),
+    clusters are the same large-star/small-star components as
     ``dedup_clusters``.  DuckDB replays the approximate edge generator
-    AND the transitive closure, so the whole pipeline is hash-checked —
-    unlike ``dedup_clusters_lsh`` (xxhash edges, rows-only) and unlike
-    ``dedup_clusters`` (exact edges; its LSH generator is equal only by
-    the pinned corpus bet)."""
-    from icebergproject_spark.llm import dedup
-
+    AND the transitive closure, so the whole pipeline is hash-checked
+    (``dedup_clusters`` uses exact edges; its LSH generator is equal
+    only by the pinned corpus bet)."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_sql_candidates(docs).select("id_a", "id_b")
+    pairs = dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8)
     comp = dedup.connected_components(
         pairs, nodes=docs.select("doc_id"), node_col="doc_id"
     )
@@ -688,47 +643,8 @@ def q_dedup_clusters_lsh_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the md5-LSH candidate CTEs (ORACLE_DEDUP_MINHASH_LSH_SQL) feeding the
-# recursive min-reachable-id closure (ORACLE_DEDUP_CLUSTERS' shape)
 ORACLE_DEDUP_CLUSTERS_LSH_SQL = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, text, string_split(text, ' ') AS t FROM documents
-),
-grams AS (
-  SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
-           THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
-           ELSE [text] END) AS g
-  FROM toks
-),
-hashed AS (
-  SELECT doc_id, i, md5(CAST(i AS VARCHAR) || '-' || g) AS hx
-  FROM grams CROSS JOIN (SELECT UNNEST(range(16)) AS i)
-),
-hmin AS (
-  SELECT doc_id, i, MIN({_md5_prefix12_sql('hx')}) AS h
-  FROM hashed GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, i // 2 AS band,
-         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
-  FROM hmin GROUP BY doc_id, i // 2
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-              AND a.doc_id < b.doc_id
-),
-edges AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION ALL SELECT id_b, id_a FROM pairs
-),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.d, reach.r FROM reach JOIN edges e ON e.s = reach.node
-),
-lab AS (SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node)
+WITH RECURSIVE {_lsh_components_sql(16, 8)}
 SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
 FROM lab

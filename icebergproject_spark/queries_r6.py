@@ -182,7 +182,7 @@ def q_text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _md5_prefix4_sql(hx: str) -> str:
     """BIGINT value of the first 4 hex digits of md5 column `hx` (the
-    queries_r4._md5_prefix12_sql idiom at hash_shard's width)."""
+    llm.dedup.md5_prefix12_sql idiom at hash_shard's width)."""
     return (
         "("
         + " + ".join(
@@ -482,21 +482,19 @@ ORACLE_BPE_TOKENIZE_SQL = _oracle_bpe_tokenize(12)
 
 def q_dedup_simhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming <= 3) at ORACLE strength
-    (llm/dedup.simhash_sql_near_pairs): md5-nibble token hashes make the
+    (llm/dedup.simhash_near_pairs): md5-nibble token hashes make the
     64 bit-votes, the 4x16-bit banding, and the Hamming verification
     bit-identical across engines — DuckDB replays the SimHash mechanism
     itself.  With 4 bands and distance <= 3 the pigeonhole candidate set
-    is EXACT (equals brute-force all-pairs; pytest-pinned), retiring the
-    'approximate, rows-only' caveat the xxhash arm carries.  The xxhash
-    arm stays the production default (``dedup_simhash``, rows-only)."""
+    is EXACT (equals brute-force all-pairs; pytest-pinned)."""
     from icebergproject_spark.llm import dedup
 
     docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_sql_near_pairs(docs, max_hamming=3)
+    return dedup.simhash_near_pairs(docs, max_hamming=3)
 
 
 def _simhash_oracle_sql(max_hamming: int = 3) -> str:
-    """Stage-for-stage mirror of simhash_sql_near_pairs: same md5-nibble
+    """Stage-for-stage mirror of simhash_near_pairs: same md5-nibble
     decode (bit i of a token hash = bit i%4 of hex char i//4), same 64
     vote sums, same 16-bit chunks, same piece-bucket join + bit_count
     Hamming."""
@@ -584,41 +582,17 @@ def q_minhash_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_audit_oracle_sql(num_hashes: int = 16, bands: int = 8) -> str:
-    """Mirror of minhash_error_audit: the ORACLE_DEDUP_MINHASH_LSH_SQL
-    chain (same grams, same md5 permutations, same band keys) extended
-    with per-pair signature agreement and exact distinct-gram Jaccard.
-    Zero-shared candidates survive via LEFT JOIN + COALESCE (the Spark
-    arm joins on id, so a no-overlap pair scores shared=0 there too)."""
-    from icebergproject_spark.queries_r4 import _md5_prefix12_sql
+    """Mirror of minhash_error_audit: the md5-LSH CTEs
+    (llm/dedup.minhash_bands_sql — same grams, same permutations, same
+    band keys) extended with per-pair signature agreement and exact
+    distinct-gram Jaccard.  Zero-shared candidates survive via LEFT
+    JOIN + COALESCE (the Spark arm joins on id, so a no-overlap pair
+    scores shared=0 there too)."""
+    from icebergproject_spark.llm.dedup import minhash_bands_sql
 
-    rows = num_hashes // bands
     return f"""
-WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-grams AS (
-  SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
-           THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
-           ELSE [text] END) AS g
-  FROM toks
-),
-hashed AS (
-  SELECT doc_id, i, md5(CAST(i AS VARCHAR) || '-' || g) AS hx
-  FROM grams CROSS JOIN (SELECT UNNEST(range({num_hashes})) AS i)
-),
-hmin AS (
-  SELECT doc_id, i, MIN({_md5_prefix12_sql('hx')}) AS h
-  FROM hashed GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, i // {rows} AS band,
-         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
-  FROM hmin GROUP BY doc_id, i // {rows}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-              AND a.doc_id < b.doc_id
-),
+WITH {minhash_bands_sql(num_hashes, bands)},
+cand AS (SELECT id_a, id_b FROM pairs),
 agree AS (
   SELECT c.id_a, c.id_b,
          CAST(SUM(CASE WHEN ha.h = hb.h THEN 1 ELSE 0 END) AS BIGINT) AS n_agree

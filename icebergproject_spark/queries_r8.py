@@ -654,7 +654,7 @@ GROUP BY doc_id
 def _hexval_sql(col: str, start: int, n: int) -> str:
     """BIGINT value of ``n`` lowercase hex digits of ``col`` starting
     at 1-based ``start`` (DuckDB instr arithmetic, the
-    _md5_prefix12_sql pattern generalized)."""
+    md5_prefix12_sql pattern generalized)."""
     return (
         "("
         + " + ".join(

@@ -29,7 +29,7 @@ asked for (asks #1, #2, #4, #5), each at ORACLE strength:
   ``pagerank_sql`` — a hash match IS the incremental-equals-full proof.
 - ``density_clusters_lsh`` — DBSCAN with the ε-neighbor generator
   swapped from the exact all-pairs gemm to the integer sign-LSH
-  bucket join (llm/dedup.embedding_near_pairs_lsh_sql): sub-quadratic
+  bucket join (llm/dedup.embedding_near_pairs_lsh): sub-quadratic
   candidate generation, identical core/border/noise machinery.
 
 Reference anchor: the reference (twelve Flink job scripts,
@@ -105,7 +105,7 @@ def _ann_edges_ctes(suffix: str = "", with_deg: bool = True) -> str:
     """DuckDB CTE block producing the SAME interface as KNN_EDGES_CTES
     (CTEs ``e`` / ``und`` / ``deg``) from the sign-LSH candidate join:
     bucket = Σ bit_p·2^p over exact integer-grid projections (the
-    lsh_sql_topk derivation — llm/similarity.lsh_weights /
+    lsh_topk derivation — llm/similarity.lsh_weights /
     int_sign_bucket), candidates = same-bucket pairs, ranking = the
     identical (rounded score desc, neighbor asc) window."""
     from icebergproject_spark.llm.similarity import lsh_weights
@@ -576,7 +576,7 @@ ORACLE_PAGERANK_DELTA_LOCAL = _oracle_pagerank_ann(5)
 
 def q_density_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN with the ε-neighbor generator swapped to the integer
-    sign-LSH bucket join (llm/dedup.embedding_near_pairs_lsh_sql) — the
+    sign-LSH bucket join (llm/dedup.embedding_near_pairs_lsh) — the
     scale-path twin of ``density_clusters`` (VERDICT r8 ask #5):
     candidate pairs are same-bucket only (~n²/2^planes), the
     core/border/noise machinery is llm/dedup.density_clusters
@@ -586,12 +586,12 @@ def q_density_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked."""
     from icebergproject_spark.llm.dedup import (
         density_clusters,
-        embedding_near_pairs_lsh_sql,
+        embedding_near_pairs_lsh,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = _materialized_with_stats(
-        embedding_near_pairs_lsh_sql(
+        embedding_near_pairs_lsh(
             emb, dim=ANN_DIM, threshold=DBSCAN_TAU, planes=ANN_PLANES
         )
     )  # same move as _ann_edges: give Catalyst the true ε-edge count,

@@ -26,8 +26,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from icebergproject_spark.llm.dedup import md5_prefix12_sql, minhash_bands_sql
 from icebergproject_spark.queries import Query, _t
-from icebergproject_spark.queries_r4 import _md5_prefix12_sql
+from icebergproject_spark.queries_r4 import _lsh_components_sql
 from icebergproject_spark.queries_r9 import (
     ANN_EDGES_CTES,
     _ann_edges,
@@ -52,7 +53,7 @@ def q_kmv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_audit(ev, value_col="event_id", group_col="event_type", k=KMV_K)
 
 
-_KMV_HV = _md5_prefix12_sql("md5(CAST(event_id AS VARCHAR))")
+_KMV_HV = md5_prefix12_sql("md5(CAST(event_id AS VARCHAR))")
 
 ORACLE_KMV_AUDIT = f"""
 WITH dv AS (
@@ -108,7 +109,7 @@ def q_bloom_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bloom_pos_sql(j: int) -> str:
     return (
-        _md5_prefix12_sql(f"md5('{j}' || '-' || CAST(v AS VARCHAR))")
+        md5_prefix12_sql(f"md5('{j}' || '-' || CAST(v AS VARCHAR))")
         + f" % {BLOOM_M}"
     )
 
@@ -552,7 +553,9 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from icebergproject_spark.llm import dedup
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_sql_candidates(docs).select("id_a", "id_b")
+    pairs = dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8).select(
+        "id_a", "id_b"
+    )
     assigned = docs.select(
         "doc_id", _split_tier(F.col("doc_id")).alias("split")
     )
@@ -570,7 +573,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from icebergproject_spark.llm import dedup
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_sql_candidates(docs).select(
+    pairs = dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8).select(
         "id_a", "id_b"
     ).localCheckpoint(eager=False)  # consumed by the closure AND the audit
     comp = dedup.connected_components(
@@ -582,37 +585,6 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _split_audit(assigned, pairs)
 
-
-# shared CTE prefix: the md5-minhash banding candidate pairs (verbatim
-# from ORACLE_DEDUP_CLUSTERS_LSH_SQL / ORACLE_DEDUP_MINHASH_LSH_SQL)
-_SPLIT_PAIR_CTES = f"""toks AS (
-  SELECT doc_id, text, string_split(text, ' ') AS t FROM documents
-),
-grams AS (
-  SELECT doc_id, UNNEST(CASE WHEN len(t) >= 3
-           THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)]
-           ELSE [text] END) AS g
-  FROM toks
-),
-hashed AS (
-  SELECT doc_id, i, md5(CAST(i AS VARCHAR) || '-' || g) AS hx
-  FROM grams CROSS JOIN (SELECT UNNEST(range(16)) AS i)
-),
-hmin AS (
-  SELECT doc_id, i, MIN({_md5_prefix12_sql('hx')}) AS h
-  FROM hashed GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, i // 2 AS band,
-         string_agg(CAST(h AS VARCHAR), ':' ORDER BY i) AS band_sig
-  FROM hmin GROUP BY doc_id, i // 2
-),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
-              AND a.doc_id < b.doc_id
-)"""
 
 _SPLIT_TIER_SQL = (
     "CASE WHEN {h} % 100 < "
@@ -639,11 +611,11 @@ SELECT c.split, c.n_docs,
 FROM counts c, tot, cross_p"""
 
 _DOC_TIER = _SPLIT_TIER_SQL.format(
-    h="(" + _md5_prefix12_sql("md5(CAST(doc_id AS VARCHAR))") + ")"
+    h="(" + md5_prefix12_sql("md5(CAST(doc_id AS VARCHAR))") + ")"
 )
 
 ORACLE_DATASET_SPLIT = f"""
-WITH {_SPLIT_PAIR_CTES},
+WITH {minhash_bands_sql(16, 8)},
 assigned AS MATERIALIZED (
   SELECT doc_id, {_DOC_TIER} AS split FROM documents
 ),
@@ -651,23 +623,11 @@ assigned AS MATERIALIZED (
 """
 
 _CLUSTER_TIER = _SPLIT_TIER_SQL.format(
-    h="(" + _md5_prefix12_sql("md5(CAST(cluster_id AS VARCHAR))") + ")"
+    h="(" + md5_prefix12_sql("md5(CAST(cluster_id AS VARCHAR))") + ")"
 )
 
 ORACLE_LEAKAGE_SAFE_SPLIT = f"""
-WITH RECURSIVE {_SPLIT_PAIR_CTES},
-edges AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION ALL SELECT id_b, id_a FROM pairs
-),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.d, reach.r FROM reach JOIN edges e ON e.s = reach.node
-),
-lab AS MATERIALIZED (
-  SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node
-),
+WITH RECURSIVE {_lsh_components_sql(16, 8)},
 assigned AS MATERIALIZED (
   SELECT doc_id, {_CLUSTER_TIER} AS split FROM lab
 ),

@@ -209,7 +209,9 @@ def near_dup_filter_batch(
     State is the lakehouse ``sig_table`` (band, band_sig, doc_id) — it
     outlives the stream, is shared across restarts without checkpoint
     surgery, and its growth is one row per (band, new doc), not per pair.
-    The collision join is an equi-join on 16-byte band keys; at scale the
+    Band keys are :func:`~icebergproject_spark.llm.dedup.banded_signatures`'
+    ':'-joined strings, the same keys the batch dedup tier stores.  The
+    collision join is an equi-join on short band keys; at scale the
     signature table is bucketed by band_sig so the probe is co-located.
     Returns the batch rows that survived (new, non-duplicate documents).
 
@@ -221,26 +223,9 @@ def near_dup_filter_batch(
     never a duplicate of itself, and (b) the signature write goes through
     ``idempotent_append``, so the replay's append is a no-op.
     """
-    from icebergproject_spark.llm.dedup import _minhash_flat
+    from icebergproject_spark.llm.dedup import banded_signatures
 
-    rows = num_hashes // bands
-    sigs = _minhash_flat(batch, content_col, id_col, n=3, num_hashes=num_hashes)
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                        ).alias("band_sig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bs"),
-    ).select("id", "bs.band", "bs.band_sig")
+    banded = banded_signatures(batch, content_col, id_col, 3, num_hashes, bands)
     try:
         seen = sig_table.read().select(
             "band", "band_sig", F.col("doc_id").alias("seen_doc_id")

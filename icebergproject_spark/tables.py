@@ -15,10 +15,13 @@ UTC (session.build_session), so the NTZ→TZ cast is value-preserving.
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -64,15 +67,23 @@ def _parse_bytes_conf(raw: str, default: int = 128 * 1024 * 1024) -> int:
     """Spark byte-size conf → bytes, honoring the full k/m/g/t/p suffix
     set (binary multipliers, optional trailing 'b') like Spark's own
     ``JavaUtils.byteStringAsBytes`` — the r13 parser silently mapped
-    e.g. ``512k`` to the default (VERDICT r13 what's-wrong #4)."""
+    e.g. ``512k`` to the default (VERDICT r13 what's-wrong #4).
+    Unparseable and negative values fall back to ``default`` with a
+    warning, so a bad conf string is visible instead of silently
+    disabling (negative) or resizing the spread guard."""
     s = raw.strip().lower().removesuffix("b")
     mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
     try:
         if s and s[-1] in mult:
-            return int(s[:-1]) * mult[s[-1]]
-        return int(s)
+            value = int(s[:-1]) * mult[s[-1]]
+        else:
+            value = int(s)
     except ValueError:
+        value = -1
+    if value < 0:
+        _log.warning("byte-size conf %r is not a size; using %d", raw, default)
         return default
+    return value
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

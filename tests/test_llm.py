@@ -65,11 +65,11 @@ def test_simhash_distribution_shift(spark):
     property a boilerplate-family detector needs and a Jaccard op lacks.
     (b) Monotone shift response: replacing a growing fraction of the
     vocabulary moves the fingerprint monotonically further in mean
-    Hamming distance (deterministic xxhash votes, so the measured means
-    are stable)."""
+    Hamming distance (deterministic md5-nibble votes, so the measured
+    means are stable)."""
 
-    def ham(a: int, b: int) -> int:
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+    def ham(a: tuple, b: tuple) -> int:
+        return sum((x ^ y).bit_count() for x, y in zip(a, b))
 
     base_vocab = [f"tok{i}" for i in range(64)]
     rows = [(0, " ".join(base_vocab)),
@@ -87,7 +87,7 @@ def test_simhash_distribution_shift(spark):
             rows.append((rid, " ".join(repl)))
             rid += 1
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fp = {r.id: r.simhash for r in dedup.simhash64(docs).collect()}
+    fp = {r.id: (r.c0, r.c1, r.c2, r.c3) for r in dedup.simhash64(docs).collect()}
     # (a) invariance under order + multiplicity
     assert fp[0] == fp[1]
     # (b) monotone mean distance across shift fractions
@@ -102,17 +102,24 @@ def test_simhash_distribution_shift(spark):
 
 
 def test_simhash_is_64bit_stable(docs):
-    fp1 = {r.id: r.simhash for r in dedup.simhash64(docs).collect()}
-    fp2 = {r.id: r.simhash for r in dedup.simhash64(docs).collect()}
+    def fingerprints():
+        return {
+            r.id: (r.c0, r.c1, r.c2, r.c3) for r in dedup.simhash64(docs).collect()
+        }
+
+    fp1, fp2 = fingerprints(), fingerprints()
     assert fp1 == fp2  # deterministic
     assert fp1[0] == fp1[1]
+    # four 16-bit chunks carry the 64 bits; a non-trivial text sets some
+    assert all(0 <= c < 1 << 16 for fp in fp1.values() for c in fp)
+    assert any(c for c in fp1[0])
 
 
 def test_simhash_sql_equals_bruteforce(spark):
-    """Pigeonhole exactness of the ORACLE-strength SimHash arm: with 4
-    bands and max_hamming=3, any pair within distance 3 differs in at
-    most 3 of the 4 chunks, so banding provably loses nothing —
-    simhash_sql_near_pairs must EQUAL the brute-force all-pairs Hamming
+    """Pigeonhole exactness of the SimHash banding: with 4 bands and
+    max_hamming=3, any pair within distance 3 differs in at most 3 of
+    the 4 chunks, so banding provably loses nothing —
+    simhash_near_pairs must EQUAL the brute-force all-pairs Hamming
     filter over the same md5-nibble fingerprints.  Brute force is an
     independent driver-side reimplementation (python int.bit_count over
     collected chunk fingerprints), not a replay of the Spark ops."""
@@ -121,11 +128,11 @@ def test_simhash_sql_equals_bruteforce(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     got = {
         (r.id_a, r.id_b): r.hamming
-        for r in dedup.simhash_sql_near_pairs(docs, max_hamming=3).collect()
+        for r in dedup.simhash_near_pairs(docs, max_hamming=3).collect()
     }
     fps = {
         r.id: (r.c0, r.c1, r.c2, r.c3)
-        for r in dedup.simhash64_sql(docs).collect()
+        for r in dedup.simhash64(docs).collect()
     }
     expect = {}
     for x, y in itertools.combinations(sorted(fps), 2):
@@ -135,7 +142,7 @@ def test_simhash_sql_equals_bruteforce(spark):
     assert got == expect
     assert expect  # non-vacuous: the corpus does contain qualifying pairs
     with pytest.raises(ValueError):
-        dedup.simhash_sql_near_pairs(docs, max_hamming=4)  # exactness guard
+        dedup.simhash_near_pairs(docs, max_hamming=4)  # exactness guard
 
 
 def test_minhash_error_audit_properties(spark):
@@ -155,7 +162,7 @@ def test_minhash_error_audit_properties(spark):
     }
     cand = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_sql_candidates(
+        for r in dedup.minhash_lsh_candidates(
             docs, num_hashes=16, bands=8
         ).collect()
     }
@@ -940,7 +947,7 @@ def test_incremental_lsh_candidates_equal_filtered_full(spark, sf_dir):
         "doc_id", "text"
     )
     is_b = F.col("doc_id") % 13 == 0
-    full = dedup.minhash_lsh_candidates(docs)
+    full = dedup.minhash_lsh_candidates(docs).select("id_a", "id_b")
     want = sorted(
         map(
             tuple,
@@ -1633,13 +1640,14 @@ def test_ngram_jaccard_max_df_drops_hot_shingles(spark):
 
 
 def test_minhash_lsh_sql_recall_and_hashlib_replay(spark, sf_dir):
-    """The md5-permutation LSH arm (oracle-strength) must (a) recall
-    every exact J >= 0.3 pair on the corpus — its 8-band x 2-row knee
-    sits at (1/8)^(1/2) ~ 0.35, protecting the operating point the
-    xxhash arm only covers by the pinned corpus bet — and (b) reproduce
-    a pure-Python hashlib replay of signatures -> bands -> pairs on a
-    small slice, pinning the cross-engine hash contract the DuckDB
-    oracle relies on."""
+    """The MinHash-LSH candidate generator at 16 hashes / 8 bands must
+    (a) recall every exact J >= 0.3 pair on the corpus — its 8-band x
+    2-row knee sits at (1/8)^(1/2) ~ 0.35 — and (b) reproduce a
+    pure-Python hashlib replay of shingle hash -> affine permutations ->
+    signatures -> ':'-joined band keys -> pairs on a small slice,
+    pinning the cross-engine hash contract the DuckDB oracles rely on.
+    The replay mints its own coefficients from the documented md5
+    derivation; it shares no code with the Spark arm."""
     import hashlib
 
     from icebergproject_spark.tables import load_table
@@ -1653,11 +1661,19 @@ def test_minhash_lsh_sql_recall_and_hashlib_replay(spark, sf_dir):
     }
     cand = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_sql_candidates(docs).collect()
+        for r in dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=8).collect()
     }
     assert exact <= cand  # 100% recall at J >= 0.3
 
     # (b) hashlib replay on a small deterministic slice
+    def md5_int(s: str, digits: int) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:digits], 16)
+
+    p = (1 << 31) - 1
+    coeffs = [
+        (1 + md5_int(f"a-{i}", 8) % (p - 1), md5_int(f"b-{i}", 8) % p)
+        for i in range(16)
+    ]
     rows = docs.filter(F.col("doc_id") < 40).select("doc_id", "text").collect()
     sigs = {}
     for r in rows:
@@ -1667,13 +1683,8 @@ def test_minhash_lsh_sql_recall_and_hashlib_replay(spark, sf_dir):
             if len(ws) >= 3
             else [r.text]
         )
-        sigs[r.doc_id] = [
-            min(
-                int(hashlib.md5(f"{i}-{g}".encode()).hexdigest()[:12], 16)
-                for g in grams
-            )
-            for i in range(16)
-        ]
+        xs = [md5_int(g, 12) % p for g in grams]
+        sigs[r.doc_id] = [min((a * x + b) % p for x in xs) for a, b in coeffs]
     buckets: dict = {}
     for d, s in sigs.items():
         for b in range(8):
@@ -1686,15 +1697,16 @@ def test_minhash_lsh_sql_recall_and_hashlib_replay(spark, sf_dir):
                 want[(ms[x], ms[y])] = want.get((ms[x], ms[y]), 0) + 1
     got = {
         (r.id_a, r.id_b): r.n_shared_bands
-        for r in dedup.minhash_lsh_sql_candidates(
-            docs.filter(F.col("doc_id") < 40)
+        for r in dedup.minhash_lsh_candidates(
+            docs.filter(F.col("doc_id") < 40), num_hashes=16, bands=8
         ).collect()
     }
     assert got == want
+    assert want  # non-vacuous: the slice holds colliding docs
 
 
 def test_lsh_sql_topk_matches_hashlib_bucket_replay(spark, sf_dir):
-    """The oracle-strength sign-LSH arm: (a) buckets replay exactly in
+    """Sign-LSH top-k (lsh_topk): (a) buckets replay exactly in
     pure Python (same md5-minted weights, same integer projections —
     the no-float-noise contract the DuckDB oracle rests on), (b) output
     is well-formed and every returned neighbor genuinely shares the
@@ -1702,10 +1714,7 @@ def test_lsh_sql_topk_matches_hashlib_bucket_replay(spark, sf_dir):
     import hashlib
 
     from icebergproject_spark.tables import load_table
-    from icebergproject_spark.llm.similarity import (
-        lsh_sql_topk,
-        lsh_weights,
-    )
+    from icebergproject_spark.llm.similarity import lsh_topk, lsh_weights
 
     emb = load_table(spark, "embeddings", sf_dir)
     dim = len(emb.select("embedding").first()[0])
@@ -1726,7 +1735,7 @@ def test_lsh_sql_topk_matches_hashlib_bucket_replay(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = lsh_sql_topk(emb, q, dim=dim, k=5, planes=4).collect()
+    out = lsh_topk(emb, q, dim=dim, k=5, planes=4).collect()
     assert len(out) > 0 and all(1 <= r.rank <= 5 for r in out)
     for r in out:
         if r.query_id in py_bucket and r.neighbor_id in py_bucket:
@@ -1734,13 +1743,13 @@ def test_lsh_sql_topk_matches_hashlib_bucket_replay(spark, sf_dir):
 
 
 def test_embedding_lsh_sql_subset_of_exact_with_threshold(spark, sf_dir):
-    """Oracle-strength bucketed near-pairs must be a SUBSET of the exact
+    """Sign-LSH bucketed near-pairs must be a SUBSET of the exact
     all-pairs result at the same threshold (bucketing only prunes,
     never invents), with identical scores on shared pairs."""
     from icebergproject_spark.tables import load_table
     from icebergproject_spark.llm.dedup import (
         embedding_near_pairs,
-        embedding_near_pairs_lsh_sql,
+        embedding_near_pairs_lsh,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -1750,7 +1759,9 @@ def test_embedding_lsh_sql_subset_of_exact_with_threshold(spark, sf_dir):
     }
     lsh = {
         (r.id_a, r.id_b): r.score
-        for r in embedding_near_pairs_lsh_sql(emb, dim=64, threshold=0.35).collect()
+        for r in embedding_near_pairs_lsh(
+            emb, dim=64, threshold=0.35, planes=4
+        ).collect()
     }
     assert len(lsh) > 0
     assert set(lsh) <= set(exact)

@@ -1,0 +1,111 @@
+"""One hash convention per LSH family, checked across engines.
+
+MinHash, SimHash and sign-LSH each have ONE Spark implementation whose
+every hash is md5-derived, and one SQL rendering (llm/dedup.
+minhash_bands_sql for MinHash bands; the head oracles built on it and on
+llm/similarity.int_sign_bucket_sql).  These tests run both engines at
+sf0.001 so a Spark/SQL hash drift fails here, not only in the full
+oracle run (tools/check_oracle.py, whose row rendering and hash they
+import rather than copy).
+"""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+import duckdb
+import pytest
+
+from icebergproject_spark.llm import dedup
+from icebergproject_spark.queries import REGISTRY
+from icebergproject_spark.tables import TABLE_NAMES, load_table
+
+
+def _check_oracle_module():
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "check_oracle.py",
+    )
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+check_oracle = _check_oracle_module()
+
+#: every head whose oracle comes from the shared LSH generators: the
+#: twelve md5-permutation heads (minhash_bands_sql at 16/8), the two
+#: 32/8 MinHash heads, SimHash, and the two sign-LSH heads
+#: (int_sign_bucket_sql)
+LSH_ORACLE_HEADS = [
+    "dedup_minhash_lsh_sql",
+    "dedup_clusters_lsh_sql",
+    "minhash_error_audit",
+    "dataset_split",
+    "leakage_safe_split",
+    "dedup_clusters_incremental",
+    "dedup_clusters_upserts",
+    "dedup_clusters_bucketed",
+    "dedup_clusters_flood_guard",
+    "dedup_clusters_stored",
+    "dedup_lsh_candidates_incremental",
+    "dedup_clusters_backfill_reseed",
+    "dedup_minhash_lsh",
+    "dedup_clusters_lsh",
+    "dedup_simhash_sql",
+    "similarity_lsh_sql",
+    "dedup_embedding_lsh_sql",
+]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "num_hashes,bands", [(16, 8), (32, 8), (64, 16)]
+)  # (64, 16) is the corpus benchmark's setting
+def test_banded_signatures_equal_sql_generator(spark, sf_dir, duck, num_hashes, bands):
+    """Spark's band stream and the SQL generator's ``bands`` CTE are the
+    same rows — same shingle hashes, permutations, band keys."""
+    docs = load_table(spark, "documents", sf_dir)
+    got = sorted(
+        (r.id, r.band, r.band_sig)
+        for r in dedup.banded_signatures(
+            docs, num_hashes=num_hashes, bands=bands
+        ).collect()
+    )
+    want = sorted(
+        duck.execute(
+            f"WITH {dedup.minhash_bands_sql(num_hashes, bands)} "
+            "SELECT doc_id, band, band_sig FROM bands"
+        ).fetchall()
+    )
+    assert len(got) == bands * docs.count()
+    assert got == want
+
+
+@pytest.mark.parametrize("name", LSH_ORACLE_HEADS)
+def test_lsh_head_matches_oracle(spark, sf_dir, duck, name):
+    """Row count, column names and the order-insensitive value hash of
+    the head equal its DuckDB oracle's, rendered as the oracle gate
+    renders them."""
+    q = REGISTRY[name]
+    assert q.oracle, f"{name} lost its oracle"
+    scols, srows = check_oracle.pandas_rows(q.fn(spark, sf_dir).toPandas())
+    ocols, orows = check_oracle.pandas_rows(duck.execute(q.oracle).df())
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows)
+    assert check_oracle.table_hash(srows, scols) == check_oracle.table_hash(
+        orows, ocols
+    )

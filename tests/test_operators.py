@@ -917,3 +917,22 @@ def test_parse_bytes_conf_suffixes():
     assert _parse_bytes_conf("2t") == 2 << 40
     assert _parse_bytes_conf("garbage") == 128 * 1024 * 1024
     assert _parse_bytes_conf("", default=7) == 7
+
+
+def test_parse_bytes_conf_falls_back_loudly(caplog):
+    """Negative sizes fall back to the default like unparseable ones
+    (a negative max-split would silently disable the spread guard), and
+    every fallback logs a warning naming the bad string."""
+    import logging
+
+    from icebergproject_spark.tables import _parse_bytes_conf
+
+    with caplog.at_level(logging.WARNING, logger="icebergproject_spark.tables"):
+        assert _parse_bytes_conf("512k", default=7) == 512 * 1024
+        assert not caplog.records
+        assert _parse_bytes_conf("-1", default=7) == 7
+        assert _parse_bytes_conf("-2m", default=7) == 7
+        assert _parse_bytes_conf("abc", default=7) == 7
+    assert [r.levelno for r in caplog.records] == [logging.WARNING] * 3
+    assert "'-1'" in caplog.records[0].getMessage()
+    assert "'abc'" in caplog.records[2].getMessage()

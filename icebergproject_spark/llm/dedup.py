@@ -391,6 +391,26 @@ def md5_prefix12_sql(hx: str) -> str:
     )
 
 
+def require_string_band_sig(stored: DataFrame) -> DataFrame:
+    """``stored`` unchanged if its ``band_sig`` is the ':'-joined string
+    key :func:`banded_signatures` builds; ``ValueError`` otherwise.
+
+    Band state persisted under the earlier xxhash MinHash convention
+    holds BIGINT keys of a different hash family: joined against string
+    keys it matches nothing (and a bucketed table's ``bucket<N>`` ids
+    were hashed from the long), so every stored near-duplicate would
+    pass as new without an error.  Such a table must be rebuilt from
+    its documents with :func:`banded_signatures`."""
+    dtype = dict(stored.dtypes).get("band_sig")
+    if dtype != "string":
+        raise ValueError(
+            f"stored band_sig is {dtype}, not string: the band state was "
+            "written under an older MinHash convention — rebuild it from "
+            "the documents with banded_signatures"
+        )
+    return stored
+
+
 def incremental_lsh_candidates(
     batch_bands: DataFrame, stored_bands: DataFrame
 ) -> DataFrame:
@@ -403,8 +423,10 @@ def incremental_lsh_candidates(
     so the O(corpus) stored-bands table is met by ONE streamed
     broadcast-hash join — no shuffle of the stored side, the same
     two-broadcast contract as the assignment write-back.  Output:
-    distinct (id_a, id_b), id_a < id_b.
+    distinct (id_a, id_b), id_a < id_b.  Raises if ``stored_bands``
+    predates the string band keys (:func:`require_string_band_sig`).
     """
+    require_string_band_sig(stored_bands)
     nb = batch_bands.select(
         F.col("id").alias("nid"), "band", "band_sig"
     )
@@ -482,7 +504,9 @@ def incremental_lsh_candidates_bucketed(
     ``n_buckets`` must equal the table's ``bucket<N>`` width or bucket
     ids are computed under the wrong modulus and stored candidates are
     silently dropped — validated here against the table's own partition
-    spec (mirroring ``connected_components_incremental_bucketed``)."""
+    spec (mirroring ``connected_components_incremental_bucketed``);
+    a table written before the string band keys is refused too
+    (:func:`require_string_band_sig`)."""
     spec = bands_tbl._partition_spec()
     want = {"column": "band_sig", "transform": f"bucket{n_buckets}"}
     if spec != want:
@@ -502,7 +526,9 @@ def incremental_lsh_candidates_bucketed(
         .distinct()
         .collect()
     )
-    stored = bands_tbl.read(partition_values=bucket_ids)
+    stored = require_string_band_sig(
+        bands_tbl.read(partition_values=bucket_ids)
+    )
     hist = stored.join(F.broadcast(nb), ["band", "band_sig"]).filter(
         F.col("id") != F.col("nid")
     )

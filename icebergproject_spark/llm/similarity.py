@@ -169,7 +169,7 @@ LSH_QUANT = 10_000
 def lsh_quantized(vec: Column) -> Column:
     """``round(x·LSH_QUANT)`` as BIGINTs — the integer grid sign-LSH
     projects on, so bucket bits never depend on float summation order
-    (the DuckDB oracles render the same ``ROUND(x * 10000)``)."""
+    (``queries_r4._sign_bucket_ctes`` renders the same grid in SQL)."""
     return F.transform(
         vec.cast("array<double>"), lambda x: F.round(x * LSH_QUANT).cast("long")
     )
@@ -310,12 +310,12 @@ def int_sign_bucket(qcol: Column, W: list[list[int]]) -> Column:
     return b.cast("int")
 
 
-def int_sign_bucket_sql(W: list[list[int]], qcol: str = "q") -> str:
-    """DuckDB rendering of :func:`int_sign_bucket` over a quantized
-    ``DOUBLE[]`` column ``qcol`` (integer-valued doubles: exact sums
+def int_sign_bucket_sql(W: list[list[int]]) -> str:
+    """DuckDB rendering of :func:`int_sign_bucket` over the quantized
+    ``DOUBLE[]`` column ``q`` (integer-valued doubles: exact sums
     ≪ 2^53, so the sign matches the BIGINT projection bit for bit)."""
     return " + ".join(
-        f"(CASE WHEN list_dot_product({qcol}, CAST({row} AS DOUBLE[])) >= 0 "
+        f"(CASE WHEN list_dot_product(q, CAST({row} AS DOUBLE[])) >= 0 "
         f"THEN {2 ** p} ELSE 0 END)"
         for p, row in enumerate(W)
     )

@@ -435,13 +435,17 @@ def _sign_bucket_ctes(planes: int, dim: int) -> str:
     norm and its sign-LSH bucket — the SQL replay of the bucketing
     shared by lsh_topk and embedding_near_pairs_lsh (quantized grid,
     llm/similarity.lsh_weights planes, int_sign_bucket_sql)."""
-    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
+    from icebergproject_spark.llm.similarity import (
+        LSH_QUANT,
+        int_sign_bucket_sql,
+        lsh_weights,
+    )
 
     bucket = int_sign_bucket_sql(lsh_weights(planes, dim))
     return f"""v AS (
   SELECT vec_id AS cid,
          CAST(embedding AS DOUBLE[]) AS e,
-         [CAST(ROUND(x * 10000) AS DOUBLE) FOR x IN CAST(embedding AS DOUBLE[])] AS q
+         [CAST(ROUND(x * {LSH_QUANT}) AS DOUBLE) FOR x IN CAST(embedding AS DOUBLE[])] AS q
   FROM embeddings
 ),
 b AS (SELECT cid, e, sqrt(list_dot_product(e, e)) AS n, {bucket} AS bucket FROM v)"""

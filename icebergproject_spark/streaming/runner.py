@@ -210,7 +210,10 @@ def near_dup_filter_batch(
     outlives the stream, is shared across restarts without checkpoint
     surgery, and its growth is one row per (band, new doc), not per pair.
     Band keys are :func:`~icebergproject_spark.llm.dedup.banded_signatures`'
-    ':'-joined strings, the same keys the batch dedup tier stores.  The
+    ':'-joined strings, the same keys the batch dedup tier stores; a
+    ``sig_table`` written with the older BIGINT keys raises
+    (:func:`~icebergproject_spark.llm.dedup.require_string_band_sig`)
+    instead of silently matching nothing.  The
     collision join is an equi-join on short band keys; at scale the
     signature table is bucketed by band_sig so the probe is co-located.
     Returns the batch rows that survived (new, non-duplicate documents).
@@ -223,11 +226,14 @@ def near_dup_filter_batch(
     never a duplicate of itself, and (b) the signature write goes through
     ``idempotent_append``, so the replay's append is a no-op.
     """
-    from icebergproject_spark.llm.dedup import banded_signatures
+    from icebergproject_spark.llm.dedup import (
+        banded_signatures,
+        require_string_band_sig,
+    )
 
     banded = banded_signatures(batch, content_col, id_col, 3, num_hashes, bands)
     try:
-        seen = sig_table.read().select(
+        seen = require_string_band_sig(sig_table.read()).select(
             "band", "band_sig", F.col("doc_id").alias("seen_doc_id")
         )
         hist_dup = (

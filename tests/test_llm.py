@@ -1130,6 +1130,20 @@ def test_incremental_lsh_candidates_bucketed_equal_and_pruned(
     # CC variant's layout validation
     with pytest.raises(ValueError, match="partitioned"):
         dedup.incremental_lsh_candidates_bucketed(bb, tbl, n_buckets=1024)
+    # band state stored with the older BIGINT band_sig keys would match
+    # none of today's string keys (and its bucket ids were hashed from
+    # the long): both generators refuse it instead of passing every
+    # stored near-duplicate as new
+    old = spark.createDataFrame(
+        [(7, 0, 123456789)], "id long, band int, band_sig long"
+    )
+    old_tbl = dedup.bands_table(
+        spark, str(tmp_path), "db", "old_bands", bands=old, n_buckets=512
+    )
+    with pytest.raises(ValueError, match="rebuild"):
+        dedup.incremental_lsh_candidates(bb, old)
+    with pytest.raises(ValueError, match="rebuild"):
+        dedup.incremental_lsh_candidates_bucketed(bb, old_tbl, n_buckets=512)
 
 
 def test_cc_stored_zero_full_scan_layout(spark, tmp_path):

@@ -4,6 +4,7 @@ deterministic replay of the reference's continuous Kafka pipelines)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from icebergproject_spark.lakehouse.tableformat import LakehouseCatalog
 from icebergproject_spark.plans.dim import upsert_dims
@@ -569,6 +570,27 @@ def test_near_dup_filter_batch_replay_safe(spark, tmp_path):
         ["doc_id", "text"],
     )
     assert near_dup_filter_batch(nxt, sig_table, batch_id="q-1").count() == 0
+
+
+def test_near_dup_filter_batch_refuses_bigint_band_keys(spark, tmp_path):
+    """A signature table written with the older BIGINT ``band_sig`` keys
+    is refused: joined against string keys it would match nothing and
+    admit every near-duplicate of its history."""
+    from icebergproject_spark.streaming import near_dup_filter_batch
+
+    catalog = LakehouseCatalog(spark, warehouse=str(tmp_path / "wh"), db="ob")
+    sig_table = catalog.table("DOC_SIGNATURES")
+    sig_table.append(
+        spark.createDataFrame(
+            [(1, 0, 123456789)], "doc_id long, band int, band_sig long"
+        )
+    )
+    batch = spark.createDataFrame(
+        [(2, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        ["doc_id", "text"],
+    )
+    with pytest.raises(ValueError, match="rebuild"):
+        near_dup_filter_batch(batch, sig_table)
 
 
 def test_watermark_drops_late_data(spark, tmp_path):

@@ -1267,9 +1267,6 @@ class LakehouseTable:
             # every file was empty (manifests skip zero-row files): the
             # snapshot's state is an empty table with the current schema
             return self.read(snapshot_id=sid).limit(0)
-        # field-id resolution (matching read()): group files by their
-        # data dir's rename map, scan per group with mergeSchema, rename,
-        # union by name — identity maps collapse to one scan
         schema_st = self._load_schema_state()
         if snapshot_id is None:
             # current read: render under the LIVE schema (metadata-only
@@ -1290,52 +1287,50 @@ class LakehouseTable:
             d = os.path.join(self.data_dir, rel.split(os.sep)[0])
             return self._dir_projection(schema_st, d, eff_sid)
 
-        def scan(files: list[str]) -> DataFrame:
-            groups: dict[tuple, list[str]] = {}
-            for f in files:
-                ren, drp = file_projection(f)
-                key = (tuple(sorted(ren.items())), tuple(sorted(drp)))
-                groups.setdefault(key, []).append(f)
-            parts = []
-            for (ren, drp), fs in groups.items():
-                # mergeSchema, matching read(): after additive schema
-                # evolution the first file's schema must not win
-                p = self.spark.read.option("mergeSchema", "true").parquet(*fs)
-                if drp:
-                    p = p.drop(*drp)
-                if ren:
-                    p = p.withColumnsRenamed(dict(ren))
-                parts.append(p)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p, allowMissingColumns=True)
-            return out
-
-        df = scan(data_files)
-        if "__p" in df.columns:
-            df = df.drop("__p")
         eq_entries = [
             e
             for s in ([s for s in self._snapshots() if s["snapshot_id"] == sid])
             for e in s.get("eq_delete_dirs", [])
             if e["dir"] in eq_delete_dirs
         ]
-        if delete_files or eq_entries:
-            addressed = self._address(scan(data_files))
-            if delete_files:
-                dels = self.spark.read.parquet(*delete_files).select(
-                    "__file", "__pos"
-                )
-                addressed = addressed.join(
-                    F.broadcast(dels), ["__file", "__pos"], "left_anti"
-                )
-            df = self._apply_eq_deletes(
-                addressed, eq_entries, eff_schema_id=eff_sid
-            ).drop(
+        need_addr = bool(delete_files or eq_entries)
+
+        # field-id resolution (matching read()): group files by their
+        # data dir's rename map, scan per group with mergeSchema, rename,
+        # address each group (the hidden _metadata column does not
+        # resolve through a union), union by name — identity maps
+        # collapse to one scan
+        groups: dict[tuple, list[str]] = {}
+        for f in data_files:
+            ren, drp = file_projection(f)
+            key = (tuple(sorted(ren.items())), tuple(sorted(drp)))
+            groups.setdefault(key, []).append(f)
+        parts = []
+        for (ren, drp), fs in groups.items():
+            # mergeSchema, matching read(): after additive schema
+            # evolution the first file's schema must not win
+            p = self.spark.read.option("mergeSchema", "true").parquet(*fs)
+            if drp:
+                p = p.drop(*drp)
+            if ren:
+                p = p.withColumnsRenamed(dict(ren))
+            if need_addr:
+                p = self._address(p)
+            parts.append(p)
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p, allowMissingColumns=True)
+        if delete_files:
+            dels = self.spark.read.parquet(*delete_files).select(
                 "__file", "__pos"
             )
-            if "__p" in df.columns:
-                df = df.drop("__p")
+            df = df.join(F.broadcast(dels), ["__file", "__pos"], "left_anti")
+        if need_addr:
+            df = self._apply_eq_deletes(
+                df, eq_entries, eff_schema_id=eff_sid
+            ).drop("__file", "__pos")
+        if "__p" in df.columns:
+            df = df.drop("__p")
         return df
 
     def _write_data(self, df: DataFrame) -> str:
@@ -2332,22 +2327,32 @@ class LakehouseTable:
         sequence-number scoping, so rows appended later with the same
         key survive).  ``df`` must carry the ``__file`` address column.
 
-        Scale shape: the key relation is O(deleted keys) — usually tiny
-        (AQE broadcasts the join); cost is one hash join per distinct
-        equality-column set, zero table rewrite at delete time.  The
-        delete columns are resolved by FIELD ID against the schema the
-        scan was RENDERED under (``eff_schema_id``; live schema when
-        None) — renames after the delete don't orphan it, and explicit
-        time travel to a pre-rename snapshot joins on the names that
-        snapshot's scan actually carries.
+        Scale shape: entries are grouped by equality-column set (stored
+        names + the names they resolve to), and each group costs ONE key
+        read over all its dirs, ONE aggregation and ONE join, however
+        many delete files the snapshot carries — the Spark job count of
+        a read does not grow with the debt.  Each key row is tagged with
+        its delete dir (``_metadata.file_path``) and aggregated to the
+        set of delete dirs holding that key (the dedup); the data joins
+        that relation once, null-safe, and a row is dead iff one of its
+        key's delete dirs applies to the row's data dir.  The
+        delete-dir → applies-to-dirs map is a plan literal, not another
+        joined relation.  The key relation is O(deleted keys) — usually
+        tiny (AQE broadcasts the join); zero table rewrite at delete
+        time.  The delete columns are resolved by FIELD ID against the
+        schema the scan was RENDERED under (``eff_schema_id``; live
+        schema when None) — renames after the delete don't orphan it,
+        and explicit time travel to a pre-rename snapshot joins on the
+        names that snapshot's scan actually carries.
 
         ``invert=True`` returns only the rows the deletes HIDE (matched
-        AND in scope) — the maintenance path
-        (:meth:`convert_equality_deletes`) materializes their row
-        addresses as positional deletes."""
+        AND in scope) — the same marked scan, filtered the other way;
+        the maintenance path (:meth:`convert_equality_deletes`)
+        materializes their row addresses as positional deletes."""
+        # an entry scoped to no data dir hides nothing
+        eq_deletes = [e for e in eq_deletes if e.get("applies_to_dirs")]
         if not eq_deletes:
             return df.limit(0) if invert else df
-        hidden: list[DataFrame] = []
         schema_st = self._load_schema_state()
         sid = (
             eff_schema_id
@@ -2356,49 +2361,80 @@ class LakehouseTable:
         )
         eff_fields = self._fields_of(schema_st, sid)
         by_id = {f["id"]: f["name"] for f in eff_fields if "id" in f}
+        groups: dict[tuple, list[dict]] = {}
         for e in eq_deletes:
             ids = e.get("field_ids") or []
             cols = [
                 by_id.get(i, c) for i, c in zip(ids, e["cols"])
             ] if ids else list(e["cols"])
+            groups.setdefault((tuple(e["cols"]), tuple(cols)), []).append(e)
+        dead = F.lit(False)
+        helper_cols: list[str] = []
+        for g, ((stored, cols), entries) in enumerate(groups.items()):
+            kcols = [f"__eqk{g}_{i}" for i in range(len(cols))]
+            dels_col = f"__eqdels{g}"
             keys = (
-                self.spark.read.parquet(e["dir"])
-                .withColumnsRenamed(
-                    dict(zip(e["cols"], cols)) if cols != list(e["cols"]) else {}
-                )
-                .select(*[F.col(c).alias(f"__k{i}") for i, c in enumerate(cols)])
-                .dropDuplicates()
-                .withColumn("__dead", F.lit(True))
+                self._read_eq_keys([e["dir"] for e in entries], list(stored))
+                .groupBy(*[F.col(s).alias(k) for s, k in zip(stored, kcols)])
+                .agg(F.collect_set("__eqdir").alias(dels_col))
             )
             cond = F.lit(True)
-            for i, c in enumerate(cols):
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__k{i}"))
-            applies = e.get("applies_to_dirs", [])
-            # __file is a file:// URI while dirs are plain paths — scope
-            # on the dir's uuid basename, unique within the table
-            in_scope = F.lit(False)
-            for d in applies:
-                in_scope = in_scope | F.col("__file").contains(
-                    "/" + os.path.basename(d.rstrip("/")) + "/"
+            for c, k in zip(cols, kcols):
+                cond = cond & F.col(c).eqNullSafe(F.col(k))
+            df = df.join(keys, cond, "left")
+            # delete-dir basename → the "/<data dir basename>/" fragments
+            # it applies to; __file is a file:// URI while dirs are plain
+            # paths, so scope on the dir's uuid basename, unique within
+            # the table
+            scope = F.create_map(*[
+                x
+                for e in entries
+                for x in (
+                    F.lit(os.path.basename(e["dir"].rstrip("/"))),
+                    F.array(*[
+                        F.lit("/" + os.path.basename(d.rstrip("/")) + "/")
+                        for d in e["applies_to_dirs"]
+                    ]),
                 )
-            marked = df.join(keys, cond, "left")
-            dead = F.coalesce(F.col("__dead"), F.lit(False)) & in_scope
-            if invert:
-                hidden.append(
-                    marked.filter(dead).drop(
-                        "__dead", *[f"__k{i}" for i in range(len(cols))]
-                    )
-                )
-            else:
-                df = marked.filter(~dead).drop(
-                    "__dead", *[f"__k{i}" for i in range(len(cols))]
-                )
-        if invert:
-            out = hidden[0]
-            for h in hidden[1:]:
-                out = out.unionByName(h)
-            return out.dropDuplicates(["__file", "__pos"])
-        return df
+            ])
+            dead = dead | F.coalesce(
+                F.exists(
+                    F.col(dels_col),
+                    lambda x: F.exists(
+                        scope[x], lambda s: F.col("__file").contains(s)
+                    ),
+                ),
+                F.lit(False),
+            )
+            helper_cols += kcols + [dels_col]
+        return df.filter(dead if invert else ~dead).drop(*helper_cols)
+
+    def _read_eq_keys(self, dirs: list[str], cols: list[str]) -> DataFrame:
+        """The key rows of equality-delete ``dirs`` (all written under
+        the same column names ``cols``), each tagged ``__eqdir`` with the
+        basename of the delete dir it came from.  One scan over every
+        dir; if the dirs disagree on a column type (parquet footer merge
+        refuses int→long widening) the dirs are read one by one and
+        unioned, which widens, like :meth:`read` does for data dirs."""
+
+        def tagged(p: DataFrame) -> DataFrame:
+            return p.select(
+                *cols,
+                F.regexp_extract(
+                    "_metadata.file_path", r"([^/]+)/[^/]+$", 1
+                ).alias("__eqdir"),
+            )
+
+        try:
+            return tagged(
+                self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+            )
+        except Exception:
+            parts = [tagged(self.spark.read.parquet(d)) for d in dirs]
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
+            return out
 
     def delete_by_key(
         self, keys: DataFrame, cols: list[str] | None = None
@@ -2509,8 +2545,11 @@ class LakehouseTable:
         INSERT`` with last-writer-wins per key inside ``updates``.  The
         equality delete is scoped to the data dirs present at commit
         time (sequence-number scoping), so the applied rows — committed
-        in the SAME snapshot — are not hidden by it.  Read cost grows by
-        one broadcast anti-join per accumulated upsert;
+        in the SAME snapshot — are not hidden by it.  Each upsert adds
+        one equality-delete file; a read scans the accumulated key files
+        once per equality-column set (one key scan, aggregation and join
+        however many files), so the debt grows the key relation and the
+        scope literal, not the job count;
         :meth:`convert_equality_deletes` + :meth:`compact` (or
         :meth:`maintain`) fold the debt down, same as Iceberg's
         rewrite-deletes + rewrite-data maintenance.
@@ -3010,9 +3049,12 @@ class LakehouseTable:
         write-cheap equality file at ingest → read-cheap positional file
         at maintenance → folded entirely at compaction).
 
-        Equality deletes cost one key hash join per read; after enough
-        reads that recurring cost exceeds the one-time scan this action
-        pays to materialize the hidden rows' (file, pos) addresses.
+        Equality deletes cost a key scan, aggregation and hash join per
+        equality-column set on every read; after enough reads that
+        recurring cost exceeds the one-time scan this action pays to
+        materialize the hidden rows' (file, pos) addresses.  The
+        conversion is the same marked scan a read runs, filtered to the
+        rows the deletes hide.
         Data files are untouched, time travel is unaffected (history
         snapshots keep their own delete state), and the read result is
         byte-identical before/after.  No-op (None) without equality
@@ -3032,7 +3074,10 @@ class LakehouseTable:
             if existing:
                 hidden = hidden.unionByName(
                     self.spark.read.parquet(*existing).select("__file", "__pos")
-                ).dropDuplicates(["__file", "__pos"])
+                )
+            # the dedup's exchange also sizes the output: AQE coalesces
+            # it to a few delete files, not one per data scan partition
+            hidden = hidden.dropDuplicates(["__file", "__pos"])
             del_dir = os.path.join(self.deletes_root, uuid.uuid4().hex)
             hidden.write.mode("overwrite").parquet(del_dir)
             return self._commit(
@@ -3066,18 +3111,21 @@ class LakehouseTable:
     def maybe_fold_eq_debt(self, max_eq_delete_files: int = 16) -> dict | None:
         """Auto-fold trigger for accumulated equality-delete READ debt
         (mirror of :meth:`maybe_compact`): each :meth:`upsert_by_key` /
-        :meth:`delete_by_key` adds one equality-delete file, and every
-        read pays one broadcast anti-join per file; past
+        :meth:`delete_by_key` adds one equality-delete file; a read
+        scans every accumulated key file (one scan, aggregation and join
+        per equality-column set, so the job count stays flat while the
+        key relation and the per-row scope check grow); past
         ``max_eq_delete_files`` this converts them all into ONE
         positional delete file (:meth:`convert_equality_deletes` — a
         one-time address-materialization scan; data files untouched, so
         partition pruning and time travel are unaffected).
 
-        The default threshold comes from the MEASURED knee (SCALE.md
-        r13 "eq-delete read-debt curve", tools/eq_debt_probe.py): the
-        per-file read tax is small but strictly cumulative, and by ~16
-        files the added latency rivals the one-time fold cost after a
-        handful of reads.  The incremental CC maintenance operators call
+        The default threshold comes from the knee measured when every
+        file still cost its own join (SCALE.md r13 "eq-delete read-debt
+        curve", tools/eq_debt_probe.py); the curve after files were
+        grouped per column set is flatter (SCALE.md, below the r13
+        table) and re-tuning the default is left open.  The incremental
+        CC maintenance operators call
         this after every applied batch (``fold_eq_debt=``), so a
         steady-state table's read cost stays bounded without an external
         scheduler.  Returns the fold commit, or None when under the
@@ -3108,9 +3156,10 @@ class LakehouseTable:
            cheaper *substitute* for compact on tables whose data layout
            is still healthy, not a prerequisite.
         2. Else, more than ``max_eq_delete_files`` equality-delete files
-           → :meth:`convert_equality_deletes`.  Each eq file costs one
-           hash join on every read; past the threshold the one-time
-           address-materialization scan beats the recurring read tax.
+           → :meth:`convert_equality_deletes`.  Every read scans the eq
+           key files and joins them (once per equality-column set); past
+           the threshold the one-time address-materialization scan beats
+           the recurring read tax.
         3. Else, more than ``max_pos_delete_dirs`` positional delete
            dirs → :meth:`rewrite_position_deletes` (fold to one
            deduplicated file; data untouched).

@@ -50,10 +50,13 @@ def upsert_dims(
     sink (key-addressed upserts, never a table rewrite,
     dim/DimDataToHBase.scala:100-110); identical final state
     (pytest-pinned).  ``fold_eq_debt``: each upsert batch adds one
-    equality-delete file and every dim READ pays one anti-join per file
-    (the r13-measured curve, SCALE.md); past the threshold the debt is
-    folded via :meth:`LakehouseTable.maybe_fold_eq_debt` — None
-    disables (leave folding to external `maintain`).
+    equality-delete file, and every dim READ scans the accumulated key
+    files and joins them once (one key scan, aggregation and join per
+    key-column set, so the job count does not grow with the files;
+    the key relation and the scope check do, SCALE.md); past the
+    threshold the debt is folded via
+    :meth:`LakehouseTable.maybe_fold_eq_debt` — None disables (leave
+    folding to external `maintain`).
 
     ``bloom_keys``: declare a dir-level Bloom filter on each dim's
     primary key before its first write

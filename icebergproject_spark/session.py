@@ -24,6 +24,8 @@ value) and ``maxPartitionBytes`` tuned to executor memory.
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -101,3 +103,43 @@ def enable_runtime_bloom_filters(spark, application_side_threshold: str | None =
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             application_side_threshold,
         )
+
+
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def count_jobs(spark: SparkSession, fn):
+    """Run ``fn()`` under a fresh Spark job group; return ``(fn's
+    result, number of Spark jobs it ran)``.  A job count does not depend
+    on the host's speed, so it is the counter to pin plan-shape claims
+    on where wall-clock is noise.  Counted through the public status
+    tracker (``getJobIdsForGroup``), which the asynchronous listener bus
+    feeds: the count is read until every listed job has finished and
+    three reads 50 ms apart agree.  The caller's job group is restored
+    afterwards."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    tracker = sc.statusTracker()
+    seen, stable = None, 0
+    while stable < 3:
+        time.sleep(0.05)
+        ids = tracker.getJobIdsForGroup(group)
+        done = all(
+            (info := tracker.getJobInfo(j)) is not None
+            and info.status != "RUNNING"
+            for j in ids
+        )
+        stable = stable + 1 if done and len(ids) == seen else 0
+        seen = len(ids)
+    return out, seen

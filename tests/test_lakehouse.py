@@ -1909,6 +1909,169 @@ def test_maybe_fold_eq_debt_trigger_and_equivalence(spark, catalog):
     assert after == (before - {("4", "v")}) | {("4", "u4")}
 
 
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_equality_delete_multi_file_debt_model_based(spark, catalog, partitioned):
+    """Ten equality-delete files from upsert_by_key and delete_by_key,
+    checked against a Python model of the spec semantics (a delete or
+    upsert hides every row live at its commit whose key matches,
+    null-safe; rows committed later survive).  The debt carries
+    overlapping keys across files, a key deleted and then re-upserted,
+    a null key, a two-column key set next to one-column sets, and a key
+    column renamed between two deletes (so the same resolved key names
+    come from two stored names).  read(), read(where=...),
+    read_via_manifests(), time travel to a mid-debt snapshot and the
+    positional rows convert_equality_deletes() writes all match."""
+    from collections import Counter
+
+    t = catalog.table("EQDEBT_PART" if partitioned else "EQDEBT")
+    if partitioned:
+        t.set_partitioning("sub", "identity")
+    pos_of = {"pk": 0, "id": 0, "sub": 1}
+    types = {"pk": "long", "id": "long", "sub": "string", "v": "string"}
+    names = ["pk", "sub", "v"]
+    seed = [(i, "ab"[i % 2], "s") for i in range(12)] + [(None, "a", "s")]
+    t.append(spark.createDataFrame(seed, "pk long, sub string, v string"))
+    live = list(seed)  # the model: rows a read must return
+    written = list(seed)  # every row ever committed
+
+    def schema(cols):
+        return ", ".join(f"{c} {types[c]}" for c in cols)
+
+    def kill(keys, key):
+        nonlocal live
+        keyset = {tuple(k) for k in keys}
+        live = [
+            r for r in live
+            if tuple(r[pos_of[k]] for k in key) not in keyset
+        ]
+
+    def upsert(rows, key):
+        t.upsert_by_key(spark.createDataFrame(rows, schema(names)), key)
+        # last writer wins inside the batch
+        applied = {tuple(r[pos_of[k]] for k in key): r for r in rows}
+        kill(applied, key)
+        live.extend(applied.values())
+        written.extend(applied.values())
+
+    def delete(keys, key):
+        t.delete_by_key(spark.createDataFrame(keys, schema(key)))
+        kill(keys, key)
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    def check(df, pred=lambda r: True):
+        assert rows(df) == sorted(repr(r) for r in live if pred(r))
+
+    steps = [
+        lambda: upsert([(1, "b", "u1"), (2, "a", "u1"), (3, "b", "u1")], ["pk"]),
+        # overlaps file 1 on keys 2 and 3; last writer wins for key 4
+        lambda: upsert(
+            [(2, "a", "u2"), (3, "b", "u2"), (4, "a", "u2"), (4, "a", "u2b")],
+            ["pk"],
+        ),
+        lambda: delete([(6,), (99,)], ["pk"]),
+        # key 6 re-upserted after its delete: the delete must not hide it
+        lambda: upsert([(6, "a", "re6")], ["pk"]),
+        lambda: delete([(None,)], ["pk"]),  # a null key matches null
+        # a two-column key set next to the one-column set; (8, b)
+        # matches nothing (row 8 is in sub a)
+        lambda: delete([(7, "b"), (8, "b"), (3, "b")], ["pk", "sub"]),
+        lambda: upsert([(3, "a", "u7"), (8, "b", "u7")], ["pk"]),
+    ]
+    for step in steps:
+        step()
+        check(t.read())
+    mid = t.current_snapshot()["snapshot_id"]
+    mid_rows = sorted(repr(r) for r in live)
+
+    t.rename_column("pk", "id")
+    names = ["id", "sub", "v"]
+    steps = [
+        lambda: delete([(2,), (5,)], ["id"]),
+        lambda: upsert(
+            [(5, "b", "u9"), (1, "b", "u9"), (None, "b", "unull")], ["id"]
+        ),
+        lambda: upsert([(1, "b", "u10"), (9, "a", "u10")], ["id", "sub"]),
+    ]
+    for step in steps:
+        step()
+        check(t.read())
+
+    entries = t.current_snapshot()["eq_delete_dirs"]
+    assert len(entries) == 10
+    assert {tuple(e["cols"]) for e in entries} == {
+        ("pk",), ("pk", "sub"), ("id",), ("id", "sub"),
+    }
+    for k in (1, 2, 3, 6, 9, 42):
+        check(t.read(where=f"id = {k}"), lambda r, k=k: r[0] == k)
+    check(t.read(where="id IS NULL"), lambda r: r[0] is None)
+    check(t.read_via_manifests())
+    if partitioned:
+        check(t.read(partition_values=["b"]), lambda r: r[1] == "b")
+    # time travel to the pre-rename, mid-debt snapshot renders its own
+    # column names and applies only the deletes it carried
+    old = t.read(snapshot_id=mid)
+    assert "pk" in old.columns and "id" not in old.columns
+    assert rows(old) == mid_rows
+
+    # the fold writes exactly the addresses of the rows the model hid
+    base = t.read(with_address=True, apply_eq_deletes=False)
+    snap = t.convert_equality_deletes()
+    assert snap["eq_delete_dirs"] == []
+    pos = spark.read.parquet(*snap["delete_dirs"])
+    assert pos.count() == pos.select("__file", "__pos").distinct().count()
+    hidden = base.join(pos, ["__file", "__pos"], "left_semi").drop(
+        "__file", "__pos"
+    )
+    assert Counter(rows(hidden)) == (
+        Counter(map(repr, written)) - Counter(map(repr, live))
+    )
+    check(t.read())
+    check(t.read(where="id = 3"), lambda r: r[0] == 3)
+    assert rows(t.read(snapshot_id=mid)) == mid_rows
+
+
+def test_equality_delete_key_files_disagreeing_on_type(spark, catalog):
+    """Key files of one column set are read in one scan; when they
+    disagree on the key's type (an int key file next to a long one) the
+    scan falls back to one read per dir, unioned, and every delete still
+    applies — to reads and to the fold."""
+    t = catalog.table("EQTYPES")
+    t.append(spark.createDataFrame([(i, "v") for i in range(6)], "pk long, v string"))
+    t.delete_by_key(spark.createDataFrame([(1,)], "pk int"))
+    t.delete_by_key(spark.createDataFrame([(2,), (4,)], "pk long"))
+    assert sorted(r.pk for r in t.read().collect()) == [0, 3, 5]
+    t.convert_equality_deletes()
+    assert sorted(r.pk for r in t.read().collect()) == [0, 3, 5]
+
+
+def test_equality_delete_job_count_independent_of_debt(spark, catalog):
+    """The Spark job count of a read and of the fold does not grow with
+    the number of equality-delete files: each equality-column set costs
+    one key scan, one aggregation and one join.  Jobs are counted with
+    the public job-group API (count_jobs), so this is a count, not a
+    wall-clock check."""
+    from icebergproject_spark.session import count_jobs
+
+    def jobs_at(debt: int) -> tuple[int, int]:
+        t = catalog.table(f"EQJOBS{debt}")
+        t.append(df_of(spark, [(str(i), "v") for i in range(40)]))
+        for i in range(debt):
+            t.upsert_by_key(
+                df_of(spark, [(str((i * 7 + j) % 40), f"u{i}") for j in range(5)]),
+                ["id"],
+            )
+        assert len(t.current_snapshot()["eq_delete_dirs"]) == debt
+        n, read_jobs = count_jobs(spark, lambda: t.read().count())
+        assert n == 40
+        _, fold_jobs = count_jobs(spark, t.convert_equality_deletes)
+        assert t.current_snapshot()["eq_delete_dirs"] == []
+        return read_jobs, fold_jobs
+
+    assert jobs_at(2) == jobs_at(16)
+
+
 def test_mod_partition_replay_formula_matches_duckdb(spark, tmp_path):
     """The mod<N> docs promise the sign-exact DuckDB replay
     ``((k % N) + N) % N`` (pmod vs DuckDB's signed ``%``) — execute

@@ -1,12 +1,15 @@
 """Equality-delete read-debt probe (VERDICT r12 ask #6).
 
-Each `upsert_by_key` adds ONE equality-delete file; every subsequent
-read pays one broadcast anti-join per accumulated file.  This probe
-measures that curve on the bucketed CC assignment layout — read latency
-at 1/4/16/64 accumulated upserts (full read and partition-pruned read),
+Each `upsert_by_key` adds ONE equality-delete file, and every
+subsequent read applies the accumulated files.  This probe measures
+that curve on the bucketed CC assignment layout — read latency at
+1/4/16/64 accumulated upserts (full read and partition-pruned read),
 the one-time fold cost (`convert_equality_deletes`, then `compact`),
 and the post-fold read — so the auto-fold threshold
-(`maybe_fold_eq_debt`) is a measured knee, not a guess.
+(`maybe_fold_eq_debt`) is a measured knee, not a guess.  Beside each
+latency it prints the number of Spark jobs the operation ran (`*_jobs`,
+counted per job group through the status tracker), a counter that does
+not depend on the host's speed.
 
 Usage: python tools/eq_debt_probe.py [--rows 256000] [--buckets 64]
        [--payload 1000] [--runs 3]
@@ -26,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
-from icebergproject_spark.session import build_session  # noqa: E402
+from icebergproject_spark.session import build_session, count_jobs  # noqa: E402
 
 
 def _arg(name: str, default: int) -> int:
@@ -34,16 +37,30 @@ def _arg(name: str, default: int) -> int:
     return int(argv[argv.index(name) + 1]) if name in argv else default
 
 
-def _median_read_sec(tbl, runs: int, partition_values=None) -> float:
+def _timed(spark, fn) -> tuple[float, int]:
+    """(wall seconds, Spark jobs) of one ``fn()``; the seconds leave out
+    the wait for the job count to settle."""
+    secs = []
+
+    def run():
+        t0 = time.time()
+        fn()
+        secs.append(round(time.time() - t0, 3))
+
+    _, jobs = count_jobs(spark, run)
+    return secs[0], jobs
+
+
+def _median_read(spark, tbl, runs: int, partition_values=None) -> tuple[float, int]:
+    """(median wall seconds, Spark jobs of one run) of a full noop-sink
+    read; the job count is the same on every run."""
     samples = []
     for _ in range(runs):
-        t0 = time.time()
-        tbl.read(partition_values=partition_values).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        samples.append(time.time() - t0)
-    samples.sort()
-    return round(samples[len(samples) // 2], 3)
+        samples.append(_timed(spark, lambda: tbl.read(
+            partition_values=partition_values
+        ).write.format("noop").mode("overwrite").save()))
+    secs = sorted(s for s, _ in samples)
+    return secs[len(secs) // 2], samples[0][1]
 
 
 def main() -> None:
@@ -69,14 +86,16 @@ def main() -> None:
         out = []
         for debt in range(checkpoints[-1] + 1):
             if debt in checkpoints:
-                full = _median_read_sec(tbl, runs)
-                pruned = _median_read_sec(
-                    tbl, runs, partition_values=[debt % buckets]
+                full, full_jobs = _median_read(spark, tbl, runs)
+                pruned, pruned_jobs = _median_read(
+                    spark, tbl, runs, partition_values=[debt % buckets]
                 )
                 rec = {
                     "debt_files": debt,
                     "read_full_sec": full,
+                    "read_full_jobs": full_jobs,
                     "read_pruned_sec": pruned,
+                    "read_pruned_jobs": pruned_jobs,
                 }
                 out.append(rec)
                 print(json.dumps(rec), flush=True)
@@ -90,16 +109,14 @@ def main() -> None:
             )
             tbl.upsert_by_key(ups, ["node"])
 
-        t0 = time.time()
-        tbl.convert_equality_deletes()
-        convert_sec = round(time.time() - t0, 3)
-        post_convert = _median_read_sec(tbl, runs)
-        t0 = time.time()
-        tbl.compact(target_partitions=buckets)
-        compact_sec = round(time.time() - t0, 3)
-        post_compact = _median_read_sec(tbl, runs)
-        post_compact_pruned = _median_read_sec(
-            tbl, runs, partition_values=[1]
+        convert_sec, convert_jobs = _timed(spark, tbl.convert_equality_deletes)
+        post_convert, post_convert_jobs = _median_read(spark, tbl, runs)
+        compact_sec, compact_jobs = _timed(
+            spark, lambda: tbl.compact(target_partitions=buckets)
+        )
+        post_compact, post_compact_jobs = _median_read(spark, tbl, runs)
+        post_compact_pruned, _ = _median_read(
+            spark, tbl, runs, partition_values=[1]
         )
         summary = {
             "rows": rows,
@@ -108,9 +125,13 @@ def main() -> None:
             "runs": runs,
             "curve": out,
             "convert_sec_at_64": convert_sec,
+            "convert_jobs_at_64": convert_jobs,
             "read_full_post_convert_sec": post_convert,
+            "read_full_post_convert_jobs": post_convert_jobs,
             "compact_sec": compact_sec,
+            "compact_jobs": compact_jobs,
             "read_full_post_compact_sec": post_compact,
+            "read_full_post_compact_jobs": post_compact_jobs,
             "read_pruned_post_compact_sec": post_compact_pruned,
         }
         print(json.dumps(summary), flush=True)

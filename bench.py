@@ -305,16 +305,27 @@ HOST_SENSITIVE_HEADS = {
 class _StageMeter:
     """Per-head task-parallelism meter (VERDICT r13 ask #2): reads the
     JVM AppStatusStore (present with the UI disabled) and attributes
-    every stage COMPLETED since the previous read to the current head.
-    avg_concurrency = Σ executorRunTime / wall — 'how many tasks ran on
-    average during the head's wall clock'.  ~1.0 means the head cannot
-    demonstrate parallel speedup at this SF (fixed overhead / 1-task
-    stages dominate); »1 means a core-count cut must hurt it.  Pure
-    measurement: nothing about the timed region changes."""
+    every stage that FINISHED since the previous read to the current
+    head.  avg_concurrency = Σ executorRunTime / wall — 'how many tasks
+    ran on average during the head's wall clock'.  ~1.0 means the head
+    cannot demonstrate parallel speedup at this SF (fixed overhead /
+    1-task stages dominate); »1 means a core-count cut must hurt it.
+    Pure measurement: nothing about the timed region changes.
+
+    Bound: the store keeps at most ``spark.ui.retainedStages`` (default
+    1000) finished stages and evicts the oldest past that, so a stage
+    that finishes AND is evicted between two drains is never counted —
+    a head running more stages than that between drains reads low."""
+
+    #: terminal ``StageStatus`` values: an ACTIVE or PENDING stage is
+    #: left for a later drain, once its run time is final
+    _FINISHED = frozenset({"COMPLETE", "FAILED", "SKIPPED"})
 
     def __init__(self, spark):
         sc = spark.sparkContext
-        self._last_stage_id = -1
+        # (stageId, attemptId) of every finished stage already counted
+        # and still listed by the store
+        self._counted: set[tuple[int, int]] = set()
         try:
             self._store = sc._jsc.sc().statusStore()
             self._empty = sc._jvm.java.util.ArrayList()
@@ -324,29 +335,34 @@ class _StageMeter:
             self._store = None
 
     def drain_run_ms(self) -> int | None:
-        """Sum executorRunTime of stages newer than the last drain.
-        Keyed by stageId (monotone), so UI retention evicting OLD stages
-        can never double-count or go negative.  None when the status
-        store cannot be read (the store is private JVM API, read through
-        py4j): the head's column is recorded as null and the bench goes
-        on."""
+        """Sum executorRunTime of the finished stage attempts not counted
+        by an earlier drain.  A stage still running at a drain is
+        counted once, at the first drain after it finishes; keying on
+        the attempt (not on the highest id seen) is what keeps a
+        long-running low-id stage from being skipped.  Ids the store
+        no longer lists are forgotten, so the set stays within the
+        retention bound.  None when the status store cannot be read
+        (the store is private JVM API, read through py4j): the head's
+        column is recorded as null and the bench goes on."""
         if self._store is None:
             return None
         try:
             seq = self._store.stageList(
                 self._empty, False, False, self._quantiles, self._empty
             )
-            run_ms, max_id = 0, self._last_stage_id
+            run_ms, listed, finished = 0, set(), set()
             for i in range(seq.size()):
                 sd = seq.apply(i)
-                sid = sd.stageId()
-                if sid > self._last_stage_id:
-                    run_ms += sd.executorRunTime()
-                    max_id = max(max_id, sid)
+                key = (sd.stageId(), sd.attemptId())
+                listed.add(key)
+                if key in self._counted or str(sd.status()) not in self._FINISHED:
+                    continue
+                run_ms += sd.executorRunTime()
+                finished.add(key)
         except Py4JError as exc:
             print(f"parallelism meter read failed: {exc!r}", file=sys.stderr)
             return None
-        self._last_stage_id = max_id
+        self._counted = (self._counted & listed) | finished
         return run_ms
 
 

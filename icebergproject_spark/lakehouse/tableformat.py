@@ -38,7 +38,9 @@ import time
 import uuid
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from icebergproject_spark.lakehouse import xxh64 as _xxh
@@ -200,6 +202,18 @@ def _bloom_contains(bits: bytes, m_bits: int, k: int, h: int) -> bool:
         if not (bits[pos >> 3] >> (pos & 7)) & 1:
             return False
     return True
+
+
+def _struct(fields) -> StructType:
+    """StructType of nullable ``(name, type JSON, metadata)`` fields —
+    the shape of a file schema as Spark reads it back."""
+    return StructType.fromJson({
+        "type": "struct",
+        "fields": [
+            {"name": n, "type": t, "nullable": True, "metadata": m}
+            for n, t, m in fields
+        ],
+    })
 
 
 class CommitConflictError(RuntimeError):
@@ -491,7 +505,14 @@ class LakehouseTable:
     #   last-column-id     id high-water mark (never reused);
     #   dir-columns        per-data-dir {column-name-at-write → field-id}
     #                      (the stand-in for Iceberg stamping ids into
-    #                      each file's metadata).
+    #                      each file's metadata);
+    #   dir-types          per-data-dir {column-name-at-write → Spark
+    #                      type JSON} (``DataType.jsonValue()``), in file
+    #                      column order — with dir-columns it is the dir's
+    #                      file schema, so scans pass it to the reader
+    #                      instead of running a footer-merge job to infer
+    #                      it.  Absent for dirs written before types were
+    #                      recorded; those scans still infer.
     # Snapshots record the schema-id they were committed under, so time
     # travel renders names AS OF the snapshot (Iceberg semantics) while
     # current reads render current names for every data dir, renamed or
@@ -527,11 +548,15 @@ class LakehouseTable:
 
     def _sync_schema(self, df: DataFrame, dirbase: str) -> dict[str, int]:
         """Assign field ids for a new data dir's columns (minting ids
-        for first-seen names), record the dir's name→id map, and bump
-        the schema version when the field set grew.  Runs under the
-        commit lock: concurrent writers must not mint the same id.
-        Returns the dir's name→id map (the write path stamps it into
-        the parquet files as ``PARQUET:field_id``)."""
+        for first-seen names), record the dir's name→id map and each
+        column's type (``dir-columns`` / ``dir-types``: the dir's file
+        schema, read back by :meth:`_dir_schema` so no scan of the dir
+        infers it), and bump the schema version when the field set
+        grew.  The types come from ``df.schema``, the plan's schema —
+        no Spark job and no extra file.  Runs under the commit lock:
+        concurrent writers must not mint the same id.  Returns the
+        dir's name→id map (the write path stamps it into the parquet
+        files as ``PARQUET:field_id``)."""
         lock_token = self._acquire_commit_lock()
         try:
             st = self._load_schema_state()
@@ -557,12 +582,12 @@ class LakehouseTable:
                 )
                 st["schemas"].append({"schema-id": new_id, "fields": fields})
                 st["current-schema-id"] = new_id
-            dir_cols = {
-                sf.name: by_name[sf.name]["id"]
-                for sf in df.schema.fields
-                if sf.name != "__p"
-            }
+            file_fields = [sf for sf in df.schema.fields if sf.name != "__p"]
+            dir_cols = {sf.name: by_name[sf.name]["id"] for sf in file_fields}
             st["dir-columns"][dirbase] = dir_cols
+            st.setdefault("dir-types", {})[dirbase] = {
+                sf.name: sf.dataType.jsonValue() for sf in file_fields
+            }
             self._save_schema_state(st)
             return dir_cols
         finally:
@@ -625,6 +650,80 @@ class LakehouseTable:
         }
         drops = [name for name, i in dcols.items() if i not in eff]
         return renames, drops
+
+    @staticmethod
+    def _dir_schema(st: dict, d: str) -> StructType | None:
+        """The file schema of data dir ``d`` as recorded at write time
+        (``dir-types`` + the field ids of ``dir-columns``), equal to what
+        Spark infers from the dir's footers, field-id metadata included
+        (every file column reads back nullable either way).  None for a
+        dir written before types were recorded."""
+        base = os.path.basename(d.rstrip("/"))
+        types = st.get("dir-types", {}).get(base)
+        ids = st.get("dir-columns", {}).get(base)
+        if types is None or ids is None:
+            return None
+        return _struct(
+            (name, t, {"parquet.field.id": ids[name]})
+            for name, t in types.items()
+        )
+
+    @staticmethod
+    def _union_schemas(schemas: list[StructType]) -> StructType | None:
+        """Union by name, in first-seen column order (what the footer
+        merge yields); None when two schemas disagree on a column's
+        type."""
+        merged: dict[str, StructField] = {}
+        for s in schemas:
+            for f in s.fields:
+                if merged.setdefault(f.name, f).dataType != f.dataType:
+                    return None
+        return StructType(list(merged.values()))
+
+    def _scan(
+        self,
+        parts: list[tuple[StructType | None, list[str]]],
+        each=None,
+        base_path: str | None = None,
+    ) -> DataFrame:
+        """One parquet scan over ``parts`` — ``(recorded schema, paths)``
+        pairs, one per dir — built without a Spark job: the recorded
+        schemas are unioned by name and passed to the reader.  Where
+        they disagree on a column's type (int→long widening across
+        dirs) each dir is scanned with its own schema and the scans are
+        unioned by name, which widens.  Only when some dir has no
+        recorded schema (written before types were recorded) does Spark
+        infer it, with the footer-merge job and the same per-path
+        fallback.  ``each`` maps every scan before any union (the hidden
+        ``_metadata`` column does not resolve through one);
+        ``base_path`` roots partition discovery for scans of a dir's
+        ``__p=`` subdirectories."""
+        each = each or (lambda p: p)
+        reader = self.spark.read
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        paths = [p for _, ps in parts for p in ps]
+        schemas = [s for s, _ in parts]
+        if all(s is not None for s in schemas):
+            merged = self._union_schemas(schemas)
+            if merged is not None:
+                return each(reader.schema(merged).parquet(*paths))
+            scans = [each(reader.schema(s).parquet(*ps)) for s, ps in parts]
+        else:
+            try:
+                return each(reader.option("mergeSchema", "true").parquet(*paths))
+            except Py4JJavaError:
+                # CANNOT_MERGE_SCHEMAS: the footer merge refuses the
+                # numeric widening Iceberg schema evolution allows
+                scans = [each(reader.parquet(p)) for p in paths]
+        df = scans[0]
+        for p in scans[1:]:
+            df = df.unionByName(p, allowMissingColumns=True)
+        return df
+
+    def _scan_dirs(self, st: dict, dirs: list[str], each=None) -> DataFrame:
+        """:meth:`_scan` of whole data dirs under schema state ``st``."""
+        return self._scan([(self._dir_schema(st, d), [d]) for d in dirs], each)
 
     def drop_column(self, name: str) -> None:
         """Iceberg ``ALTER TABLE ... DROP COLUMN``: metadata-only — the
@@ -1280,12 +1379,11 @@ class LakehouseTable:
                 else schema_st["current-schema-id"]
             )
 
-        def file_projection(f: str) -> tuple[dict[str, str], list[str]]:
+        def file_dir(f: str) -> str | None:
             rel = os.path.relpath(f, self.data_dir)
             if rel.startswith(".."):
-                return {}, []
-            d = os.path.join(self.data_dir, rel.split(os.sep)[0])
-            return self._dir_projection(schema_st, d, eff_sid)
+                return None
+            return os.path.join(self.data_dir, rel.split(os.sep)[0])
 
         eq_entries = [
             e
@@ -1296,34 +1394,38 @@ class LakehouseTable:
         need_addr = bool(delete_files or eq_entries)
 
         # field-id resolution (matching read()): group files by their
-        # data dir's rename map, scan per group with mergeSchema, rename,
-        # address each group (the hidden _metadata column does not
-        # resolve through a union), union by name — identity maps
-        # collapse to one scan
-        groups: dict[tuple, list[str]] = {}
+        # data dir's rename map, scan per group under the union of its
+        # dirs' recorded schemas (after additive schema evolution the
+        # first file's schema must not win), address each scan (the
+        # hidden _metadata column does not resolve through a union),
+        # rename, union by name — identity maps collapse to one scan
+        groups: dict[tuple, dict[str | None, list[str]]] = {}
         for f in data_files:
-            ren, drp = file_projection(f)
+            d = file_dir(f)
+            ren, drp = (
+                self._dir_projection(schema_st, d, eff_sid) if d else ({}, [])
+            )
             key = (tuple(sorted(ren.items())), tuple(sorted(drp)))
-            groups.setdefault(key, []).append(f)
+            groups.setdefault(key, {}).setdefault(d, []).append(f)
         parts = []
-        for (ren, drp), fs in groups.items():
-            # mergeSchema, matching read(): after additive schema
-            # evolution the first file's schema must not win
-            p = self.spark.read.option("mergeSchema", "true").parquet(*fs)
+        for (ren, drp), by_dir in groups.items():
+            p = self._scan(
+                [
+                    (self._dir_schema(schema_st, d) if d else None, fs)
+                    for d, fs in by_dir.items()
+                ],
+                self._address if need_addr else None,
+            )
             if drp:
                 p = p.drop(*drp)
             if ren:
                 p = p.withColumnsRenamed(dict(ren))
-            if need_addr:
-                p = self._address(p)
             parts.append(p)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)
         if delete_files:
-            dels = self.spark.read.parquet(*delete_files).select(
-                "__file", "__pos"
-            )
+            dels = self._read_pos_deletes(delete_files)
             df = df.join(F.broadcast(dels), ["__file", "__pos"], "left_anti")
         if need_addr:
             df = self._apply_eq_deletes(
@@ -1439,7 +1541,7 @@ class LakehouseTable:
         small = self._dir_rows(d) <= cfg.get("driver_rows", 1 << 17)
         blooms = self._blooms_driver_side(d, cfg) if small else None
         if blooms is None:
-            df = self.spark.read.parquet(d)
+            df = self._scan_dirs(self._load_schema_state(), [d])
             cols = [c for c in cfg["columns"] if c in df.columns]
             if not cols:
                 return
@@ -1776,6 +1878,7 @@ class LakehouseTable:
         """
         out: list[tuple[int, str, DataFrame]] = []
         prev_dirs: set | None = None
+        schema_st = self._load_schema_state()
         for s in self._mainline():
             if from_snapshot_id is not None and s["snapshot_id"] <= from_snapshot_id:
                 prev_dirs = set(s["data_dirs"])
@@ -1793,7 +1896,7 @@ class LakehouseTable:
             else:
                 added = [d for d in s["data_dirs"] if d not in prev_dirs]
                 if op == "append" and added:
-                    batch = self.spark.read.parquet(*added)
+                    batch = self._scan_dirs(schema_st, added)
                 else:
                     batch = self.read(snapshot_id=s["snapshot_id"]).limit(0)
             out.append((s["snapshot_id"], op, batch))
@@ -1912,6 +2015,17 @@ class LakehouseTable:
     ) -> DataFrame:
         """S5 + M3: batch scan, optionally time-travelling.
 
+        Building the DataFrame runs no Spark job to learn a schema (and
+        the pruning below none either, bar a bloom literal
+        :meth:`_literal_hash` cannot hash in Python).  Every scan takes
+        its schema from table metadata, as Iceberg readers do, instead
+        of inferring it from the files: data dirs from the types recorded
+        at write time (``schema.json`` ``dir-types``, see
+        :meth:`_scan`), positional-delete files from their constant
+        two-column schema, equality-delete files from the types their
+        entry records.  Only dirs written before types were recorded
+        are still inferred, one footer-merge job per scan.
+
         ``where`` (SQL string): row predicate, applied in full as a scan
         filter (pushed to parquet row-group skipping by Catalyst) — AND
         additionally used for MANIFEST-STYLE DIRECTORY PRUNING: each data
@@ -2005,6 +2119,7 @@ class LakehouseTable:
         }
         renames = {d: p[0] for d, p in projections.items()}
         drops = {d: p[1] for d, p in projections.items()}
+        addr = self._address if need_addr else None
         if where:
             conjuncts = _parse_conjuncts(where)
             if conjuncts:
@@ -2066,15 +2181,15 @@ class LakehouseTable:
                     ]
                     if not subs:
                         continue  # this dir holds none of the wanted values
-                    p = self.spark.read.option("basePath", d).parquet(*subs)
+                    p = self._scan(
+                        [(self._dir_schema(schema_st, d), subs)], addr, d
+                    )
                 else:
-                    p = self.spark.read.parquet(d)
+                    p = self._scan_dirs(schema_st, [d], each=addr)
                 if drops[d]:
                     p = p.drop(*drops[d])
                 if renames[d]:
                     p = p.withColumnsRenamed(renames[d])
-                if need_addr:
-                    p = self._address(p)
                 if vals is not None:
                     if self._dir_spec(d) == spec:
                         src_type = dict(p.dtypes).get(spec["column"])
@@ -2113,13 +2228,11 @@ class LakehouseTable:
                 # result under the live schema (one full-dir plan,
                 # emptied by a false filter — never evaluated eagerly)
                 d0 = data_dirs[0]
-                p = self.spark.read.parquet(d0).filter(F.lit(False))
+                p = self._scan_dirs(schema_st, [d0], each=addr).filter(F.lit(False))
                 if drops[d0]:
                     p = p.drop(*drops[d0])
                 if renames[d0]:
                     p = p.withColumnsRenamed(renames[d0])
-                if need_addr:
-                    p = self._address(p)
                 parts = [p.drop("__p") if "__p" in p.columns else p]
             df = parts[0]
             for p in parts[1:]:
@@ -2147,13 +2260,11 @@ class LakehouseTable:
                 groups.setdefault(key, []).append(d)
             parts = []
             for (ren, drp), ds in groups.items():
-                p = self.spark.read.option("mergeSchema", "true").parquet(*ds)
+                p = self._scan_dirs(schema_st, ds, each=addr)
                 if drp:
                     p = p.drop(*drp)
                 if ren:
                     p = p.withColumnsRenamed(dict(ren))
-                if need_addr:
-                    p = self._address(p)
                 parts.append(p)
             df = parts[0]
             for p in parts[1:]:
@@ -2162,29 +2273,16 @@ class LakehouseTable:
                 df, delete_dirs, with_address, where, eq_deletes,
                 eff_schema_id=eff_sid,
             )
-        # mergeSchema: the union of every file's schema (additive schema
-        # evolution); without it the first file's schema wins and columns
-        # added by later snapshots silently vanish
-        try:
-            df = self.spark.read.option("mergeSchema", "true").parquet(*data_dirs)
-            if need_addr:
-                df = self._address(df)
-        except Exception:
-            # CANNOT_MERGE_SCHEMAS: parquet footer merge refuses numeric
-            # TYPE WIDENING (int→long, float→double) that Iceberg schema
-            # evolution allows. Union coercion promotes to the common
-            # wider type, so route per-dir scans through unionByName —
-            # same rows, widened schema.
-            parts = [self.spark.read.parquet(d) for d in data_dirs]
-            if need_addr:
-                parts = [self._address(p) for p in parts]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p, allowMissingColumns=True)
+        # the union of every dir's schema (additive schema evolution:
+        # rows written before a column existed read null); dirs that
+        # disagree on a type (int→long, float→double, which Iceberg
+        # schema evolution allows) scan one by one and unionByName
+        # widens — see _scan
+        df = self._scan_dirs(schema_st, data_dirs, each=addr)
         return self._apply_deletes(
-                df, delete_dirs, with_address, where, eq_deletes,
-                eff_schema_id=eff_sid,
-            )
+            df, delete_dirs, with_address, where, eq_deletes,
+            eff_schema_id=eff_sid,
+        )
 
     def _literal_hash(
         self, val: object, dtype: str, cache: dict | None = None
@@ -2301,14 +2399,23 @@ class LakehouseTable:
             # rewrite_position_deletes() the set can grow past the
             # threshold — then a shuffled anti-join is the correct plan,
             # not an OOM
-            dels = self.spark.read.parquet(*delete_dirs).select("__file", "__pos")
-            df = df.join(dels, ["__file", "__pos"], "left_anti")
+            df = df.join(
+                self._read_pos_deletes(delete_dirs), ["__file", "__pos"], "left_anti"
+            )
         df = self._apply_eq_deletes(
             df, eq_deletes or [], eff_schema_id=eff_schema_id
         )
         if not with_address and "__file" in df.columns:
             df = df.drop("__file", "__pos")
         return df
+
+    #: every positional-delete file holds exactly these two columns
+    _POS_DELETE_SCHEMA = "__file string, __pos long"
+
+    def _read_pos_deletes(self, paths: list[str]) -> DataFrame:
+        """The ``(__file, __pos)`` rows of positional-delete dirs or
+        files, scanned with the constant schema (nothing inferred)."""
+        return self.spark.read.schema(self._POS_DELETE_SCHEMA).parquet(*paths)
 
     def _apply_eq_deletes(
         self,
@@ -2374,7 +2481,7 @@ class LakehouseTable:
             kcols = [f"__eqk{g}_{i}" for i in range(len(cols))]
             dels_col = f"__eqdels{g}"
             keys = (
-                self._read_eq_keys([e["dir"] for e in entries], list(stored))
+                self._read_eq_keys(entries, list(stored))
                 .groupBy(*[F.col(s).alias(k) for s, k in zip(stored, kcols)])
                 .agg(F.collect_set("__eqdir").alias(dels_col))
             )
@@ -2409,13 +2516,16 @@ class LakehouseTable:
             helper_cols += kcols + [dels_col]
         return df.filter(dead if invert else ~dead).drop(*helper_cols)
 
-    def _read_eq_keys(self, dirs: list[str], cols: list[str]) -> DataFrame:
-        """The key rows of equality-delete ``dirs`` (all written under
+    def _read_eq_keys(self, entries: list[dict], cols: list[str]) -> DataFrame:
+        """The key rows of equality-delete ``entries`` (all written under
         the same column names ``cols``), each tagged ``__eqdir`` with the
-        basename of the delete dir it came from.  One scan over every
-        dir; if the dirs disagree on a column type (parquet footer merge
-        refuses int→long widening) the dirs are read one by one and
-        unioned, which widens, like :meth:`read` does for data dirs."""
+        basename of the delete dir it came from.  Each entry records its
+        key file's own column types (``types``), so the key dirs scan
+        without inference — one scan over every dir, or one per dir,
+        unioned (which widens), where the dirs disagree on a type (an
+        int key file next to a long one), like :meth:`read` does for
+        data dirs.  Entries committed before types were recorded are
+        inferred."""
 
         def tagged(p: DataFrame) -> DataFrame:
             return p.select(
@@ -2425,16 +2535,12 @@ class LakehouseTable:
                 ).alias("__eqdir"),
             )
 
-        try:
-            return tagged(
-                self.spark.read.option("mergeSchema", "true").parquet(*dirs)
-            )
-        except Exception:
-            parts = [tagged(self.spark.read.parquet(d)) for d in dirs]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+        def key_schema(e: dict) -> StructType | None:
+            if "types" not in e:
+                return None
+            return _struct((c, t, {}) for c, t in zip(cols, e["types"]))
+
+        return self._scan([(key_schema(e), [e["dir"]]) for e in entries], tagged)
 
     def delete_by_key(
         self, keys: DataFrame, cols: list[str] | None = None
@@ -2467,6 +2573,8 @@ class LakehouseTable:
         # lost race until remove_orphan_files
         d = os.path.join(self.eq_deletes_root, uuid.uuid4().hex)
         key_df.write.mode("overwrite").parquet(d)
+        # the key file's own types, so reads scan it without inference
+        types = [key_df.schema[c].dataType.jsonValue() for c in cols]
 
         def attempt(cur):
             if cur is None:
@@ -2502,6 +2610,7 @@ class LakehouseTable:
                 "dir": d,
                 "cols": cols,
                 "field_ids": [by_name.get(c) for c in cols],
+                "types": types,
                 "applies_to_dirs": list(cur["data_dirs"]),
             }
             return self._commit(
@@ -2586,9 +2695,9 @@ class LakehouseTable:
         # recomputes snapshot-scoped metadata — same rationale as
         # delete_by_key's key dir)
         eq_dir = os.path.join(self.eq_deletes_root, uuid.uuid4().hex)
-        applied.select(*key_cols).dropDuplicates().write.mode(
-            "overwrite"
-        ).parquet(eq_dir)
+        eq_keys = applied.select(*key_cols).dropDuplicates()
+        eq_keys.write.mode("overwrite").parquet(eq_dir)
+        types = [eq_keys.schema[c].dataType.jsonValue() for c in key_cols]
         new_dir = self._write_data(applied)
 
         def attempt(cur):
@@ -2626,6 +2735,7 @@ class LakehouseTable:
                 "dir": eq_dir,
                 "cols": list(key_cols),
                 "field_ids": [by_name.get(c) for c in key_cols],
+                "types": types,
                 # scope: dirs live BEFORE this commit — the new data dir
                 # is deliberately absent, so the applied rows survive
                 "applies_to_dirs": list(cur["data_dirs"]),
@@ -3025,11 +3135,7 @@ class LakehouseTable:
         def attempt(cur):
             if not cur or not cur.get("delete_dirs"):
                 return None
-            dels = (
-                self.spark.read.parquet(*cur["delete_dirs"])
-                .select("__file", "__pos")
-                .distinct()
-            )
+            dels = self._read_pos_deletes(cur["delete_dirs"]).distinct()
             del_dir = os.path.join(self.deletes_root, uuid.uuid4().hex)
             dels.write.mode("overwrite").parquet(del_dir)
             return self._commit(
@@ -3072,9 +3178,7 @@ class LakehouseTable:
             ).select("__file", "__pos")
             existing = cur.get("delete_dirs", [])
             if existing:
-                hidden = hidden.unionByName(
-                    self.spark.read.parquet(*existing).select("__file", "__pos")
-                )
+                hidden = hidden.unionByName(self._read_pos_deletes(existing))
             # the dedup's exchange also sizes the output: AQE coalesces
             # it to a few delete files, not one per data scan partition
             hidden = hidden.dropDuplicates(["__file", "__pos"])

@@ -17,9 +17,11 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _log = logging.getLogger(__name__)
 
@@ -86,9 +88,61 @@ def _parse_bytes_conf(raw: str, default: int = 128 * 1024 * 1024) -> int:
     return value
 
 
+#: Parquet confs that change the schema Spark infers for a file.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+class _FileSchemas:
+    """The schema Spark inferred for each parquet file version read so
+    far: ``(real path, inference conf values) → (size, st_mtime_ns,
+    schema)``.  A version is its size and modification time, so a
+    replaced file misses and is inferred again (its entry is then
+    overwritten: one entry per path and conf set).  Inference runs
+    outside the lock; two concurrent first loads of one file both
+    infer the same schema."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._by_file: dict[tuple, tuple[int, int, StructType]] = {}
+
+    def read(self, spark: SparkSession, path: str) -> DataFrame:
+        """``spark.read.parquet(path)``, passing the schema inferred by an
+        earlier read of the same file version when there was one."""
+        real = os.path.realpath(path)
+        if not os.path.isfile(real):
+            return spark.read.parquet(path)  # dirs: no single version
+        key = (real, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+        before = os.stat(real)
+        version = (before.st_size, before.st_mtime_ns)
+        with self._lock:
+            hit = self._by_file.get(key)
+        if hit is not None and hit[:2] == version:
+            return spark.read.schema(hit[2]).parquet(path)
+        df = spark.read.parquet(path)
+        after = os.stat(real)
+        if (after.st_size, after.st_mtime_ns) == version:
+            with self._lock:
+                self._by_file[key] = (*version, df.schema)
+        return df
+
+
+_file_schemas = _FileSchemas()
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` as a DataFrame, ``events`` normalized
+    (:func:`normalize_events`) and the fact/corpus tables spread over
+    the session's cores (``_SPREAD_KEYS``).  Spark infers a file's
+    schema with a Spark job; the first load of each file version in
+    the process pays it, and later loads of that version pass the
+    inferred schema, so they run no job (``_FileSchemas``)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = _file_schemas.read(spark, path)
     if name == "events":
         df = normalize_events(df)
     key = _SPREAD_KEYS.get(name)

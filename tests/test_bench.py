@@ -36,9 +36,39 @@ def test_stage_meter_records_null_on_py4j_failure():
     meter = bench._StageMeter(_spark_whose_store(lambda: store))
     assert meter.drain_run_ms() is None
 
-    stages = [SimpleNamespace(stageId=lambda i=i: i, executorRunTime=lambda: 5)
-              for i in range(3)]
-    seq = SimpleNamespace(size=lambda: len(stages), apply=stages.__getitem__)
-    store.stageList = lambda *_: seq
+    stages = [_stage(i, "COMPLETE", 5) for i in range(3)]
+    store.stageList = lambda *_: _seq(stages)
     assert meter.drain_run_ms() == 15  # recovers on the next read
     assert meter.drain_run_ms() == 0  # and counts each stage once
+
+
+def _stage(sid, status, run_ms, attempt=0):
+    return SimpleNamespace(
+        stageId=lambda: sid, attemptId=lambda: attempt,
+        status=lambda: status, executorRunTime=lambda: run_ms,
+    )
+
+
+def _seq(stages):
+    return SimpleNamespace(size=lambda: len(stages), apply=stages.__getitem__)
+
+
+def test_stage_meter_counts_a_stage_once_when_it_finishes():
+    """A stage still active at a drain is counted at the first drain
+    after it finishes, even when stages with higher ids finished
+    first; a retried attempt counts on its own; evicted stages are
+    forgotten and never counted again."""
+    store = SimpleNamespace()
+    meter = bench._StageMeter(_spark_whose_store(lambda: store))
+    listed = [_stage(0, "ACTIVE", 7), _stage(1, "COMPLETE", 3),
+              _stage(2, "PENDING", 0)]
+    store.stageList = lambda *_: _seq(listed)
+    assert meter.drain_run_ms() == 3  # only the finished stage 1
+    listed[0] = _stage(0, "COMPLETE", 40)
+    listed[2] = _stage(2, "FAILED", 2)
+    listed.append(_stage(2, "SKIPPED", 1, attempt=1))
+    assert meter.drain_run_ms() == 43  # stage 0 at its final run time
+    assert meter.drain_run_ms() == 0
+    del listed[:2]  # retention evicted stages 0 and 1
+    assert meter.drain_run_ms() == 0
+    assert meter._counted == {(2, 0), (2, 1)}

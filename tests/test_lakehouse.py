@@ -3,6 +3,7 @@ snapshot expiry (SURVEY §2.9 M1–M3, K1/K6 semantics)."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -2070,6 +2071,184 @@ def test_equality_delete_job_count_independent_of_debt(spark, catalog):
         return read_jobs, fold_jobs
 
     assert jobs_at(2) == jobs_at(16)
+
+
+def _deletes_table(spark, catalog, name):
+    """Two data dirs, one positional-delete dir, one equality-delete file."""
+    t = catalog.table(name)
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(20)], "pk long, v string"))
+    t.append(spark.createDataFrame([(i, f"w{i}") for i in range(20, 30)], "pk long, v string"))
+    t.delete_where("pk = 3", mode="merge-on-read")
+    t.delete_by_key(spark.createDataFrame([(5,)], "pk long"))
+    return t
+
+
+def test_read_plan_runs_no_job(spark, catalog):
+    """Building a read runs no Spark job: every scan takes its schema
+    from table metadata (data dirs: the types ``_sync_schema``
+    recorded; positional deletes: their constant schema; equality
+    deletes: the types their entry records).  A lookup on a table with
+    one positional-delete dir and one equality-delete file then runs 4
+    jobs; inferring the three schemas cost 3 more."""
+    from icebergproject_spark.session import count_jobs
+
+    def plan_jobs(build) -> int:
+        return count_jobs(spark, build)[1]
+
+    plain = catalog.table("PLANJOBS")
+    plain.append(df_of(spark, [(str(i), "a") for i in range(10)]))
+    first = plain.current_snapshot()["snapshot_id"]
+    plain.append(df_of(spark, [(str(i), "b") for i in range(10, 15)]))
+    assert plan_jobs(plain.read) == 0
+    assert plan_jobs(lambda: plain.read(snapshot_id=first)) == 0
+
+    part = catalog.table("PLANJOBS_PART")
+    part.set_partitioning("d", "identity")
+    part.append(spark.createDataFrame(
+        [(i, f"d{i % 3}") for i in range(9)], "pk long, d string"
+    ))
+    assert plan_jobs(lambda: part.read(partition_values=["d1"])) == 0
+    assert part.read(partition_values=["d1"]).count() == 3
+
+    dels = _deletes_table(spark, catalog, "PLANJOBS_DELS")
+    assert plan_jobs(dels.read) == 0
+    assert plan_jobs(lambda: dels.read(where="pk = 7")) == 0
+    rows, jobs = count_jobs(spark, lambda: dels.read(where="pk = 7").collect())
+    assert [r.pk for r in rows] == [7]
+    assert jobs == 4
+
+
+def test_second_load_table_runs_no_job(spark, sf_dir, tmp_path):
+    """The first ``load_table`` of a file version infers its schema with
+    one Spark job; a second load of the same version passes that schema
+    and runs none."""
+    import shutil
+
+    from icebergproject_spark.session import count_jobs
+    from icebergproject_spark.tables import load_table
+
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), tmp_path)
+    first, jobs1 = count_jobs(spark, lambda: load_table(spark, "orders", str(tmp_path)))
+    second, jobs2 = count_jobs(spark, lambda: load_table(spark, "orders", str(tmp_path)))
+    assert (jobs1, jobs2) == (1, 0)
+    assert second.schema == first.schema
+    assert second.count() == first.count()
+
+
+def _strip_recorded_types(t) -> None:
+    """Rewrite ``t``'s metadata in the format written before column
+    types were recorded: no ``dir-types``, no equality-entry ``types``."""
+    import json
+
+    st = t._load_schema_state()
+    st.pop("dir-types", None)
+    t._save_schema_state(st)
+    for fn in os.listdir(t.snap_dir):
+        path = os.path.join(t.snap_dir, fn)
+        if not (fn.startswith("snap-") and fn.endswith(".json")):
+            continue
+        with open(path) as f:
+            snap = json.load(f)
+        for e in snap.get("eq_delete_dirs", []):
+            e.pop("types", None)
+        with open(path, "w") as f:
+            json.dump(snap, f)
+
+
+def _shape_plain(spark, t):
+    t.append(spark.createDataFrame(
+        [(i, f"v{i}", [i, None], 1.5 * i) for i in range(12)],
+        "pk long, v string, arr array<int>, x double",
+    ))
+    t.append(spark.createDataFrame([(i, f"w{i}", [], 0.0) for i in range(12, 16)],
+                                   "pk long, v string, arr array<int>, x double"))
+
+
+def _shape_partitioned(transform):
+    def build(spark, t):
+        t.set_partitioning("d" if transform in ("identity", "day") else "pk", transform)
+        rows = [(i, f"2024-01-0{1 + i % 3}", f"v{i}") for i in range(12)]
+        schema = "pk long, d string, v string"
+        if transform == "day":
+            t.append(spark.createDataFrame(rows, schema).selectExpr(
+                "pk", "cast(d as timestamp) as d", "v"
+            ))
+        else:
+            t.append(spark.createDataFrame(rows, schema))
+            t.append(spark.createDataFrame([(20, "2024-01-02", "x")], schema))
+    return build
+
+
+def _shape_added_column(spark, t):
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "pk long, v string"))
+    t.append(spark.createDataFrame([(3, "c", 3.5)], "pk long, v string, extra double"))
+
+
+def _shape_rename(spark, t):
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "pk long, v string"))
+    t.rename_column("v", "label")
+    t.append(spark.createDataFrame([(3, "c")], "pk long, label string"))
+
+
+def _shape_drop(spark, t):
+    t.append(spark.createDataFrame([(1, "a", 10)], "pk long, v string, n int"))
+    t.drop_column("n")
+    t.append(spark.createDataFrame([(2, "b")], "pk long, v string"))
+
+
+def _shape_widening(spark, t):
+    t.append(spark.createDataFrame([(1, 10), (2, 20)], "pk long, n int"))
+    t.append(spark.createDataFrame([(3, 1 << 40)], "pk long, n long"))
+
+
+def _shape_key_types(spark, t):
+    t.append(spark.createDataFrame([(i, "v") for i in range(8)], "pk long, v string"))
+    t.delete_by_key(spark.createDataFrame([(1,)], "pk int"))
+    t.delete_by_key(spark.createDataFrame([(2,), (4,)], "pk long"))
+    t.delete_where("pk = 6", mode="merge-on-read")
+
+
+@pytest.mark.parametrize("shape", [
+    _shape_plain,
+    _shape_partitioned("identity"),
+    _shape_partitioned("day"),
+    _shape_partitioned("bucket4"),
+    _shape_added_column,
+    _shape_rename,
+    _shape_drop,
+    _shape_widening,
+    _shape_key_types,
+], ids=["plain", "identity", "day", "bucket", "added_column", "rename",
+        "drop", "widening", "key_types"])
+def test_recorded_schema_matches_inference(spark, catalog, shape):
+    """``read()`` built from the recorded types gives the schema (field-id
+    metadata included) and the rows of the inference path, which a
+    table whose recorded types are deleted takes — the format written
+    before types were recorded, which must still read.  A write after
+    the strip leaves a table mixing both kinds of dirs; it reads too."""
+    t = catalog.table("PARITY")
+    shape(spark, t)
+
+    def rendered():
+        out = {}
+        for key, df in [("read", t.read()), ("manifests", t.read_via_manifests())]:
+            rows = sorted(repr(tuple(r)) for r in df.collect())
+            out[key] = (df.schema, rows)
+        return out
+
+    from icebergproject_spark.session import count_jobs
+
+    recorded = rendered()
+    assert count_jobs(spark, t.read)[1] == 0
+    _strip_recorded_types(t)
+    assert count_jobs(spark, t.read)[1] > 0  # the inference path
+    assert rendered() == recorded
+    if t._partition_spec() is None:
+        more = t.read().limit(1)
+        t.append(more)
+        mixed = t.read()
+        assert mixed.schema == recorded["read"][0]
+        assert mixed.count() == len(recorded["read"][1]) + 1
 
 
 def test_mod_partition_replay_formula_matches_duckdb(spark, tmp_path):

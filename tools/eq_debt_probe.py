@@ -9,7 +9,12 @@ and the post-fold read — so the auto-fold threshold
 (`maybe_fold_eq_debt`) is a measured knee, not a guess.  Beside each
 latency it prints the number of Spark jobs the operation ran (`*_jobs`,
 counted per job group through the status tracker), a counter that does
-not depend on the host's speed.
+not depend on the host's speed; beside each read's `*_jobs` it prints
+`*_plan_jobs`, the jobs run while building the read DataFrame, before
+any action.  No scan infers its schema any more, so those are only
+file listings: Spark lists in a job the paths of a scan that has more
+than 32 of them (`spark.sql.sources.parallelPartitionDiscovery.threshold`),
+such as a mod64-partitioned data dir or more than 32 key dirs.
 
 Usage: python tools/eq_debt_probe.py [--rows 256000] [--buckets 64]
        [--payload 1000] [--runs 3]
@@ -51,16 +56,22 @@ def _timed(spark, fn) -> tuple[float, int]:
     return secs[0], jobs
 
 
-def _median_read(spark, tbl, runs: int, partition_values=None) -> tuple[float, int]:
-    """(median wall seconds, Spark jobs of one run) of a full noop-sink
-    read; the job count is the same on every run."""
+def _median_read(
+    spark, tbl, runs: int, partition_values=None
+) -> tuple[float, int, int]:
+    """(median wall seconds, Spark jobs of one run, jobs of building
+    its DataFrame) of a full noop-sink read; the job counts are the
+    same on every run."""
     samples = []
     for _ in range(runs):
         samples.append(_timed(spark, lambda: tbl.read(
             partition_values=partition_values
         ).write.format("noop").mode("overwrite").save()))
+    _, plan_jobs = count_jobs(
+        spark, lambda: tbl.read(partition_values=partition_values)
+    )
     secs = sorted(s for s, _ in samples)
-    return secs[len(secs) // 2], samples[0][1]
+    return secs[len(secs) // 2], samples[0][1], plan_jobs
 
 
 def main() -> None:
@@ -86,16 +97,18 @@ def main() -> None:
         out = []
         for debt in range(checkpoints[-1] + 1):
             if debt in checkpoints:
-                full, full_jobs = _median_read(spark, tbl, runs)
-                pruned, pruned_jobs = _median_read(
+                full, full_jobs, full_plan = _median_read(spark, tbl, runs)
+                pruned, pruned_jobs, pruned_plan = _median_read(
                     spark, tbl, runs, partition_values=[debt % buckets]
                 )
                 rec = {
                     "debt_files": debt,
                     "read_full_sec": full,
                     "read_full_jobs": full_jobs,
+                    "read_full_plan_jobs": full_plan,
                     "read_pruned_sec": pruned,
                     "read_pruned_jobs": pruned_jobs,
+                    "read_pruned_plan_jobs": pruned_plan,
                 }
                 out.append(rec)
                 print(json.dumps(rec), flush=True)
@@ -110,12 +123,16 @@ def main() -> None:
             tbl.upsert_by_key(ups, ["node"])
 
         convert_sec, convert_jobs = _timed(spark, tbl.convert_equality_deletes)
-        post_convert, post_convert_jobs = _median_read(spark, tbl, runs)
+        post_convert, post_convert_jobs, post_convert_plan = _median_read(
+            spark, tbl, runs
+        )
         compact_sec, compact_jobs = _timed(
             spark, lambda: tbl.compact(target_partitions=buckets)
         )
-        post_compact, post_compact_jobs = _median_read(spark, tbl, runs)
-        post_compact_pruned, _ = _median_read(
+        post_compact, post_compact_jobs, post_compact_plan = _median_read(
+            spark, tbl, runs
+        )
+        post_compact_pruned, _, _ = _median_read(
             spark, tbl, runs, partition_values=[1]
         )
         summary = {
@@ -128,10 +145,12 @@ def main() -> None:
             "convert_jobs_at_64": convert_jobs,
             "read_full_post_convert_sec": post_convert,
             "read_full_post_convert_jobs": post_convert_jobs,
+            "read_full_post_convert_plan_jobs": post_convert_plan,
             "compact_sec": compact_sec,
             "compact_jobs": compact_jobs,
             "read_full_post_compact_sec": post_compact,
             "read_full_post_compact_jobs": post_compact_jobs,
+            "read_full_post_compact_plan_jobs": post_compact_plan,
             "read_pruned_post_compact_sec": post_compact_pruned,
         }
         print(json.dumps(summary), flush=True)

@@ -83,7 +83,6 @@ BENCH_QUERIES = [
     "lang_id",
     "stratified_sample",
     "bpe_pair_counts",
-    "dsir_weights",
     "knn_graph",
     "corpus_pipeline_e2e",
     # round 4: oracle-strength IVF + the scale-defaulted rank family +

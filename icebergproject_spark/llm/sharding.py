@@ -199,7 +199,6 @@ def global_shuffle(
     id_col: str = "doc_id",
     num_shards: int = 16,
     salt: str = "seed0",
-    mode: str = "scale",
 ) -> DataFrame:
     """Deterministic global shuffle + shard/position assignment: order
     the corpus by ``md5(salt || id)`` and deal rows round-robin into
@@ -207,31 +206,16 @@ def global_shuffle(
     yields the same layout (the property retry-safe training-data jobs
     need — a rerun must not produce different shards).
 
-    ``mode="scale"`` (the DEFAULT — the driver-exercised path is the
-    100 TB path) computes the global rank with ``exact_global_rank``:
-    distributed range sort + per-partition row_number + broadcast
-    cumulative offsets.  Byte-identical layout to the portable form, so
-    the same ANSI-SQL oracle checks it, but no stage ever holds more
-    than one range partition.
-
-    ``mode="portable"`` is the oracle twin spelled the way the SQL
-    reads: ONE global row_number window (a single-partition sort in
-    Spark — kept only as the semantic specification and for A/B tests;
-    never the default).
+    The global rank comes from ``exact_global_rank``: distributed range
+    sort + per-partition row_number + broadcast cumulative offsets.  The
+    layout is byte-identical to ONE global ``ROW_NUMBER()`` window (the
+    ANSI-SQL oracle's spelling), but no stage ever holds more than one
+    range partition.
     """
-    key = shuffle_key(id_col, salt)
-    if mode == "scale":
-        keyed = df.select(F.col(id_col), key.alias("__k"))
-        ranked, _ = exact_global_rank(keyed, [F.col("__k"), F.col(id_col)])
-        rn = F.col("__rn")
-        return ranked.select(
-            F.col(id_col),
-            ((rn - 1) % num_shards).cast("long").alias("shard"),
-            (rn - 1).cast("long").alias("pos"),
-        )
-    w = Window.orderBy(key, F.col(id_col))
-    rn = F.row_number().over(w)
-    return df.select(
+    keyed = df.select(F.col(id_col), shuffle_key(id_col, salt).alias("__k"))
+    ranked, _ = exact_global_rank(keyed, [F.col("__k"), F.col(id_col)])
+    rn = F.col("__rn")
+    return ranked.select(
         F.col(id_col),
         ((rn - 1) % num_shards).cast("long").alias("shard"),
         (rn - 1).cast("long").alias("pos"),
@@ -243,53 +227,25 @@ def curriculum_bins(
     content_col: str = "text",
     id_col: str = "doc_id",
     num_bins: int = 10,
-    mode: str = "scale",
 ) -> DataFrame:
     """Length-based curriculum binning: rank documents by token count
     (shortest first — the classic easy→hard proxy) and cut the ranking
     into ``num_bins`` equal-depth bins.  A curriculum scheduler then
     drains bin 1 before bin 2, etc.
 
-    ``mode="scale"`` (the DEFAULT): exact NTILE computed distributed —
-    ``exact_global_rank`` over (n_tokens, id) gives the global rank and
-    total count without a single-partition sort, and ``exact_ntile``
-    turns (rank, n) into the standard NTILE bucket as a pure
-    expression.  Byte-identical to the NTILE oracle.
-
-    ``mode="portable"``: NTILE over a global window — the oracle twin
-    spelled the way the SQL reads (one-partition sort; A/B only).
-
-    ``mode="approx"``: one distributed ``approxQuantile`` pass yields
-    num_bins-1 VALUE cut points (bounded O(k) driver reduction) and bin
-    assignment is a map-side comparison — no window, no sort at all.
-    Equal-depth up to sketch error; ties on length share a bin
-    (value-cut semantics).  The cheapest arm when exact rank-cut
-    equal-depth isn't required.
+    Exact NTILE computed distributed: ``exact_global_rank`` over
+    (n_tokens, id) gives the global rank and total count without a
+    single-partition sort, and ``exact_ntile`` turns (rank, n) into the
+    standard NTILE bucket as a pure expression — byte-identical to the
+    NTILE-over-a-global-window oracle.
     """
     n_tok = F.size(F.split(F.col(content_col), " "))
-    if mode == "scale":
-        scored = df.select(F.col(id_col), n_tok.cast("long").alias("n_tokens"))
-        ranked, n = exact_global_rank(
-            scored, [F.col("n_tokens").asc(), F.col(id_col).asc()]
-        )
-        return ranked.select(
-            id_col,
-            "n_tokens",
-            exact_ntile(F.col("__rn"), n, num_bins).alias("bin"),
-        )
-    if mode == "approx":
-        scored = df.select(
-            F.col(id_col), n_tok.cast("long").alias("n_tokens")
-        )
-        probs = [i / num_bins for i in range(1, num_bins)]
-        cuts = scored.stat.approxQuantile("n_tokens", probs, 1e-3)
-        b = F.lit(1)
-        for c in cuts:  # ascending; bin 1 = shortest documents
-            b = b + F.when(F.col("n_tokens") > F.lit(c), 1).otherwise(0)
-        return scored.select(id_col, "n_tokens", b.cast("int").alias("bin"))
-    w = Window.orderBy(n_tok.asc(), F.col(id_col).asc())
-    return df.select(
-        F.col(id_col),
-        n_tok.cast("long").alias("n_tokens"),
-        F.ntile(num_bins).over(w).alias("bin"),
+    scored = df.select(F.col(id_col), n_tok.cast("long").alias("n_tokens"))
+    ranked, n = exact_global_rank(
+        scored, [F.col("n_tokens").asc(), F.col(id_col).asc()]
+    )
+    return ranked.select(
+        id_col,
+        "n_tokens",
+        exact_ntile(F.col("__rn"), n, num_bins).alias("bin"),
     )

@@ -385,7 +385,6 @@ def pack_sequences(
     content_col: str = "text",
     id_col: str = "doc_id",
     strata_col: str | None = None,
-    mode: str = "scale",
     token_count_col: str | None = None,
 ) -> DataFrame:
     """GPT-style sequence packing: concatenate documents in deterministic
@@ -405,20 +404,14 @@ def pack_sequences(
     when padding-free no-split packing is required, run this per
     stratum inside ``applyInPandas``.)
 
-    ``mode="scale"`` (the DEFAULT — the driver-exercised path is the
-    100 TB path) computes the per-stratum token cumsum DISTRIBUTED with
+    The per-stratum token cumsum is computed DISTRIBUTED with
     :func:`~icebergproject_spark.llm.sharding.exact_prefix_sum`: range
     partition on (stratum, id), per-(partition, stratum) partial sums
     rolled into broadcast offsets, per-partition window for the local
     cumsum.  Integer sums are associative, so the result is
-    byte-identical to the global per-stratum window — a 100 TB corpus
-    with a handful of sources no longer funnels each source's whole
-    token stream through one sort partition.
-
-    ``mode="portable"`` is the oracle twin spelled the way the SQL
-    reads: one window cumsum per stratum (each stratum = one window
-    partition; the semantic specification and A/B arm, never the
-    default).
+    byte-identical to one window cumsum per stratum (the SQL oracle's
+    spelling) — a 100 TB corpus with a handful of sources never funnels
+    each source's whole token stream through one sort partition.
 
     Output: (id, n_tokens, pack_id, pack_offset, n_packs_spanned);
     pack_id = "<stratum>-<window index>" of the doc's FIRST token.
@@ -427,53 +420,35 @@ def pack_sequences(
     ``bpe_tokenize``'s ``n_tokens`` — tokenizer-true packing) instead
     of the whitespace count of ``content_col``.
     """
+    from icebergproject_spark.llm.sharding import exact_prefix_sum
+
     n_tok = (
         F.col(token_count_col)
         if token_count_col
         else F.size(_tokens(content_col))
     )
     strat = F.col(strata_col) if strata_col else F.lit("all")
-    if mode == "scale":
-        from icebergproject_spark.llm.sharding import exact_prefix_sum
-
-        scored = df.select(
-            F.col(id_col).alias("id"),
-            n_tok.cast("long").alias("n_tokens"),
-            strat.cast("string").alias("__strat"),
-        )
-        cummed = exact_prefix_sum(
-            scored,
-            "n_tokens",
-            [F.col("id").asc()],
-            group_cols=["__strat"],
-            sum_col="__cum",
-        )
-        cum = F.col("__cum")
-        prev_cum = cum - F.col("n_tokens")
-        first_pack = F.floor(prev_cum / context_len)
-        last_pack = F.floor((cum - 1) / context_len)
-        return cummed.select(
-            F.col("id"),
-            # int, matching the portable arm (F.size) and the oracle's
-            # CAST(n_tokens AS INTEGER)
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-            F.concat_ws(
-                "-", F.col("__strat"), first_pack.cast("string")
-            ).alias("pack_id"),
-            (prev_cum % context_len).cast("long").alias("pack_offset"),
-            (last_pack - first_pack + 1).cast("long").alias("n_packs_spanned"),
-        )
-    if mode != "portable":
-        raise ValueError("mode must be 'scale' or 'portable'")
-    w = Window.partitionBy(strat).orderBy(F.col(id_col).asc())
-    cum = F.sum(n_tok).over(w)  # inclusive prefix sum of the token stream
-    prev_cum = cum - n_tok
+    scored = df.select(
+        F.col(id_col).alias("id"),
+        n_tok.cast("long").alias("n_tokens"),
+        strat.cast("string").alias("__strat"),
+    )
+    cummed = exact_prefix_sum(
+        scored,
+        "n_tokens",
+        [F.col("id").asc()],
+        group_cols=["__strat"],
+        sum_col="__cum",
+    )
+    cum = F.col("__cum")
+    prev_cum = cum - F.col("n_tokens")
     first_pack = F.floor(prev_cum / context_len)
     last_pack = F.floor((cum - 1) / context_len)
-    return df.select(
-        F.col(id_col).alias("id"),
-        n_tok.alias("n_tokens"),
-        F.concat_ws("-", strat.cast("string"), first_pack.cast("string")).alias(
+    return cummed.select(
+        F.col("id"),
+        # int, matching the oracle's CAST(n_tokens AS INTEGER)
+        F.col("n_tokens").cast("int").alias("n_tokens"),
+        F.concat_ws("-", F.col("__strat"), first_pack.cast("string")).alias(
             "pack_id"
         ),
         (prev_cum % context_len).cast("long").alias("pack_offset"),
@@ -593,55 +568,24 @@ def redact_pii(
 def unigram_logprob_score(
     df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """CCNet-style LM quality score: mean unigram log-probability of each
-    document under the corpus's own unigram model (higher = more typical;
-    the tails are the filter candidates — gibberish below, boilerplate
+    """CCNet-style LM quality score: each document's log-probability
+    under the corpus's own unigram model (higher = more typical; the
+    tails are the filter candidates — gibberish below, boilerplate
     above).
 
-    Two aggregates: corpus token frequencies (vocabulary-sized), then a
-    per-doc mean over (token, logprob) joined through a broadcast of the
-    vocabulary. No Python, no O(n²); swapping in a real KenLM scorer
-    replaces only the broadcast model, not the plan.
-    Output: (doc_id, n_tokens, mean_logprob) — floats, rows-only check;
-    ordering properties are pytest-verified.
-    """
-    tok = df.select(F.col(id_col), F.explode(_tokens(content_col)).alias("token"))
-    vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    total = vocab.agg(F.sum("cnt").alias("total"))
-    model = vocab.crossJoin(F.broadcast(total)).select(
-        "token",
-        (F.log(F.col("cnt").cast("double")) - F.log(F.col("total").cast("double"))).alias(
-            "logprob"
-        ),
-    )
-    return (
-        tok.join(F.broadcast(model), "token")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("logprob"), 6).alias("mean_logprob"),
-        )
-    )
+    Each vocabulary token's log-probability is quantized ONCE to integer
+    micro-nats (``round(1e6·(ln cnt − ln total))`` — both ``ln`` inputs
+    are exact integers rendered as doubles, so every engine sees
+    identical values), and the per-document score is the **BIGINT** sum
+    over its token stream: integer arithmetic, independent of
+    partitioning and summation order, hence hash-checkable against a
+    SQL oracle.
 
-
-def unigram_logprob_micro(
-    df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """ORACLE-strength arm of :func:`unigram_logprob_score`: the same
-    CCNet-style unigram LM quality score, engineered for bit-exact
-    cross-engine replay via the micro-nat quantization used by
-    :func:`dsir_weights_micro` — each vocabulary token's log-probability
-    is quantized ONCE to integer micro-nats
-    (``round(1e6·(ln cnt − ln total))`` — both ``ln`` inputs are exact
-    integers rendered as doubles, so both engines see identical values),
-    and the per-document score is the **BIGINT** sum over its token
-    stream: integer arithmetic, independent of partitioning and
-    summation order.
-
-    Same plan shape as the float arm: one vocabulary aggregate, one
-    scalar total (bounded driver reduction via broadcast of a 1-row
+    Plan: one vocabulary aggregate, one scalar total (a broadcast 1-row
     total — no collect), a broadcast model join, one per-doc aggregate.
-    Output: (doc_id, n_tokens, sum_lp_micro) — higher = more typical.
+    No Python, no O(n²); swapping in a real KenLM scorer replaces only
+    the broadcast model, not the plan.
+    Output: (doc_id, n_tokens, sum_lp_micro).
     """
     tok = df.select(F.col(id_col), F.explode(_tokens(content_col)).alias("token"))
     vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
@@ -668,23 +612,31 @@ def unigram_logprob_micro(
     )
 
 
-def quality_buckets_micro(
+def quality_buckets(
     df: DataFrame,
     content_col: str = "text",
     id_col: str = "doc_id",
     num_buckets: int = 3,
 ) -> DataFrame:
-    """ORACLE-strength arm of :func:`quality_buckets`: CCNet
-    head/middle/tail over the micro-nat quality score.  The ranking key
-    is ``sum_lp_micro / n_tokens`` as a double — ONE division of exact
-    integers, correctly rounded, hence identical in any IEEE engine —
-    ranked descending with ``id`` tie-break through the distributed
-    ``exact_global_rank`` + ``exact_ntile`` path (no single-partition
-    window).  Output: (doc_id, n_tokens, sum_lp_micro, mean_lp_micro,
-    bucket, bucket_label)."""
+    """CCNet's head/middle/tail split (Wenzek et al., LREC 2020): rank
+    documents by LM quality score and cut into equal-depth buckets —
+    CCNet trains on "head", inspects "middle", drops "tail".  Bucket 1 =
+    highest mean log-probability.  num_buckets=3 gives the canonical
+    labels; any k works (curriculum over quality = larger k).
+
+    The ranking key is ``sum_lp_micro / n_tokens`` (the
+    :func:`unigram_logprob_score` micro-nat sum) as a double — ONE
+    division of exact integers, correctly rounded, hence identical in
+    any IEEE engine — ranked descending with ``id`` tie-break.  The
+    NTILE is exact and distributed: ``exact_global_rank`` plus the
+    ``exact_ntile`` expression, equal to NTILE over a global window
+    with no single-partition stage.
+    Output: (doc_id, n_tokens, sum_lp_micro, mean_lp_micro, bucket,
+    bucket_label).
+    """
     from icebergproject_spark.llm.sharding import exact_global_rank, exact_ntile
 
-    scored = unigram_logprob_micro(df, content_col, id_col)
+    scored = unigram_logprob_score(df, content_col, id_col)
     mean = F.col("sum_lp_micro").cast("double") / F.col("n_tokens")
     scored = scored.withColumn("__mean", mean)
     ranked, n = exact_global_rank(
@@ -743,7 +695,6 @@ def dsir_importance_weights(
     content_col: str = "text",
     id_col: str = "doc_id",
     buckets: int = 1024,
-    smoothing: float = 1.0,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al., NeurIPS 2023, "Data Selection
     for Language Models via Importance Resampling"): score every document
@@ -755,83 +706,12 @@ def dsir_importance_weights(
 
     Features are word uni+bigrams hashed into ``buckets`` counts (the
     paper's hashed generative model); both distributions get Laplace
-    ``smoothing``; weight = Σ_grams log p_target(bucket) − log p_raw(bucket).
-
-    Scale shape: the two distribution estimates are bucket-count
-    aggregates (map-side combine; ``buckets`` rows each — driver-bounded
-    like the PCA partials), the log-ratio table broadcasts, and the
-    per-doc score is one more aggregate over the exploded gram stream.
-    Nothing quadratic, no vocabulary materialized: hashing fixes the
-    feature space regardless of corpus size.  Float log-sums → rows-only
-    in the driver gate; exactness is pytest-pinned against numpy.
-
-    Output: (doc_id, n_feats, weight) — weight rounded to 6 places.
-    """
-    toks = _tokens(content_col)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
-    grams = F.when(F.size(toks) >= 2, F.concat(toks, bigrams)).otherwise(toks)
-    # materialize the exploded gram stream ONCE: it feeds the raw
-    # distribution, the target distribution, two scalar totals, and the
-    # final per-doc aggregate — without the checkpoint each consumer
-    # re-scans the corpus and re-explodes (~5 scans measured)
-    feats = (
-        df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
-        .select("id", F.pmod(F.xxhash64("g"), F.lit(buckets)).alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    tgt_ids = df.filter(target_filter).select(F.col(id_col).alias("id"))
-    tgt = (
-        feats.join(tgt_ids, "id", "left_semi")
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("tc"))
-    )
-    raw = feats.groupBy("b").agg(F.count(F.lit(1)).alias("rc"))
-    # totals: two scalars — a bounded driver reduction
-    totals = raw.agg(F.sum("rc")).collect()[0][0] or 0
-    t_totals = tgt.agg(F.sum("tc")).collect()[0][0] or 0
-    denom_t = float(t_totals + smoothing * buckets)
-    denom_r = float(totals + smoothing * buckets)
-    ratio = (
-        raw.join(tgt, "b", "left")
-        .select(
-            "b",
-            (
-                F.log((F.coalesce("tc", F.lit(0)) + smoothing) / denom_t)
-                - F.log((F.col("rc") + smoothing) / denom_r)
-            ).alias("lr"),
-        )
-    )
-    return (
-        feats.join(F.broadcast(ratio), "b")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.round(F.sum("lr"), 6).alias("weight"),
-        )
-        .select(F.col("id").alias(id_col), "n_feats", "weight")
-    )
-
-
-def dsir_weights_micro(
-    df: DataFrame,
-    target_filter,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023), ORACLE-strength arm:
-    same hashed uni+bigram generative model as
-    :func:`dsir_importance_weights`, but engineered for bit-exact
-    cross-engine replay — the ``similarity_ivf_sql`` epistemics applied
-    to data selection:
+    smoothing 1.0; weight = Σ_grams log p_target(bucket) − log p_raw(bucket).
+    Engineered for bit-exact cross-engine replay:
 
     - buckets come from an **md5 hex prefix** (first 4 nibbles mod
-      ``buckets``) instead of xxhash64, so any engine with md5 mints the
-      identical feature space;
+      ``buckets``), so any engine with md5 mints the identical feature
+      space;
     - the per-bucket log-ratio is quantized ONCE to integer micro-nats
       (``round(1e6·(ln p_target − ln p_raw))`` — each input to ``ln`` is
       a single correctly-rounded division of exact integers, so both
@@ -840,12 +720,13 @@ def dsir_weights_micro(
       independent of partitioning and summation order.  No float ever
       crosses an aggregation boundary.
 
-    Laplace smoothing fixed at 1.0.  Scale shape is identical to the
-    xxhash arm: two bucket-count aggregates (map-side combine,
+    Scale shape: two bucket-count aggregates (map-side combine,
     ``buckets`` rows each), two scalar totals (bounded driver
     reductions), a broadcast log-ratio table, one final aggregate over
-    per-(doc, bucket) counts.  Output: (doc_id, n_feats, weight_micro)
-    — weight in micro-nats, BIGINT.
+    per-(doc, bucket) counts.  Nothing quadratic, no vocabulary
+    materialized: hashing fixes the feature space regardless of corpus
+    size.  Output: (doc_id, n_feats, weight_micro) — weight in
+    micro-nats, BIGINT.
     """
     toks = _tokens(content_col)
     bigrams = F.zip_with(
@@ -860,7 +741,7 @@ def dsir_weights_micro(
     # per-(doc, bucket) integer counts materialized ONCE: they feed the
     # raw distribution, the target distribution, and the final per-doc
     # weight — and they are ~buckets rows per doc max, far smaller than
-    # the exploded gram stream the xxhash arm checkpoints
+    # the exploded gram stream
     docb = (
         df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
         .select("id", bucket.alias("b"))
@@ -896,70 +777,6 @@ def dsir_weights_micro(
             F.sum(F.col("c") * F.col("lrm")).alias("weight_micro"),
         )
         .select(F.col("id").alias(id_col), "n_feats", "weight_micro")
-    )
-
-
-def quality_buckets(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    num_buckets: int = 3,
-    mode: str = "scale",
-) -> DataFrame:
-    """CCNet's head/middle/tail split (Wenzek et al., LREC 2020): rank
-    documents by LM quality score and cut into equal-depth buckets —
-    CCNet trains on "head", inspects "middle", drops "tail".  Bucket 1 =
-    highest mean log-probability.  num_buckets=3 gives the canonical
-    labels; any k works (curriculum over quality = larger k).
-
-    ``mode="scale"`` (the DEFAULT): exact NTILE computed distributed —
-    ``exact_global_rank`` over (mean_logprob DESC, id ASC) plus the
-    ``exact_ntile`` expression.  Byte-identical to the global-window
-    form with no single-partition stage.
-
-    ``mode="portable"``: NTILE over a global window — the semantic
-    specification as the SQL reads it (one-partition sort; A/B only).
-
-    ``mode="approx"``: one distributed ``approxQuantile`` pass yields
-    k-1 score CUT POINTS (bounded O(k) driver reduction) and bucket
-    assignment is a map-side comparison — no window, no sort.  Buckets
-    are equal-depth up to sketch error and ties land in one bucket
-    together (value-cut semantics: equal scores get equal treatment).
-    Output: (doc_id, n_tokens, mean_logprob, bucket, bucket_label).
-    """
-    scored = unigram_logprob_score(df, content_col, id_col)
-    if mode == "scale":
-        from icebergproject_spark.llm.sharding import exact_global_rank, exact_ntile
-
-        ranked, n = exact_global_rank(
-            scored, [F.col("mean_logprob").desc(), F.col(id_col).asc()]
-        )
-        bucket = exact_ntile(F.col("__rn"), n, num_buckets)
-        scored = ranked
-    elif mode == "approx":
-        # one materialization feeds both the quantile pass and the output
-        # (the documented no-exchange-reuse trap for twice-consumed plans)
-        scored = scored.localCheckpoint(eager=True)
-        probs = [i / num_buckets for i in range(1, num_buckets)]
-        cuts = scored.stat.approxQuantile("mean_logprob", probs, 1e-3)
-        bucket = F.lit(1)
-        for c in cuts:  # ascending quantiles; bucket 1 = highest scores
-            bucket = bucket + F.when(F.col("mean_logprob") <= F.lit(c), 1).otherwise(0)
-        bucket = bucket.cast("int")
-    else:
-        w = Window.orderBy(F.col("mean_logprob").desc(), F.col(id_col).asc())
-        bucket = F.ntile(num_buckets).over(w)
-    label = (
-        F.when(bucket == 1, "head")
-        .when(bucket == num_buckets, "tail")
-        .otherwise("middle")
-    )
-    return scored.select(
-        id_col,
-        "n_tokens",
-        "mean_logprob",
-        bucket.alias("bucket"),
-        label.alias("bucket_label"),
     )
 
 
@@ -1076,7 +893,7 @@ def bigram_logprob_micro(
     df: DataFrame, content_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Bigram LM quality score with add-1 smoothing, at ORACLE strength —
-    the next rung above :func:`unigram_logprob_micro` on the KenLM
+    the next rung above :func:`unigram_logprob_score` on the KenLM
     ladder: fluency (token-order) signal, not just vocabulary typicality.
 
     Per bigram type: ``ln((C(w1,w2) + 1) / (C(w1) + V))`` — every input
@@ -1154,7 +971,7 @@ def bm25_topk(
     no accumulation, quantized to integer micro-points BEFORE the
     per-doc sum, so the total is an order-independent BIGINT sum that
     hash-matches any engine (the repo's established micro-integer
-    convention; see unigram_logprob_micro).
+    convention; see unigram_logprob_score).
 
     100 TB shape: tf/dl are one (doc, term) shuffle each; df and the
     corpus stats are vocabulary-sized / single-row BROADCASTS; the query

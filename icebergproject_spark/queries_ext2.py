@@ -954,16 +954,6 @@ def q_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.verified_near_dups(docs)
 
 
-def q_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style unigram-LM quality score per document (rows-only:
-    float log-sums have no stable SQL-oracle hash; ordering invariants
-    are pytest-verified)."""
-    from icebergproject_spark.llm import text as llm_text
-
-    docs = _t(spark, sf_dir, "documents")
-    return llm_text.unigram_logprob_score(docs)
-
-
 def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB dedup composition end-to-end: MinHash-LSH candidate
     pairs at 32 hashes / 8 bands (approximate, md5-replayable) resolved
@@ -1210,8 +1200,9 @@ FROM per_src, tot
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style sequence packing over the corpus: per-source token
-    streams chopped into 512-token context windows via one window
-    cumsum — the padding-elimination step of pre-training batch prep."""
+    streams chopped into 512-token context windows via one distributed
+    prefix sum — the padding-elimination step of pre-training batch
+    prep."""
     from icebergproject_spark.llm import text as llm_text
 
     docs = _t(spark, sf_dir, "documents")
@@ -2232,7 +2223,6 @@ EXT2_REGISTRY: dict[str, Query] = {
         q_dedup_clusters_lsh, _dedup_clusters_lsh_oracle()
     ),
     "dedup_verified": Query(q_dedup_verified, _ngram_oracle()),
-    "lm_quality_score": Query(q_lm_quality_score, None),
     "repetition_score": Query(q_repetition_score, ORACLE_REPETITION),
     "normalize_text": Query(q_normalize_text, ORACLE_NORMALIZE),
     "decontamination": Query(q_decontamination, ORACLE_DECONTAMINATION),

@@ -113,10 +113,9 @@ FROM t LEFT JOIN reb r USING (doc_id)
 
 def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-shard layout: md5-keyed global shuffle,
-    16 shards, round-robin deal.  Runs the DEFAULT mode='scale' path —
-    exact distributed rank (range sort + per-partition row_number +
-    broadcast offsets), byte-identical to the global-window SQL the
-    oracle runs, with no single-partition stage."""
+    16 shards, round-robin deal.  Exact distributed rank (range sort +
+    per-partition row_number + broadcast offsets), byte-identical to the
+    global-window SQL the oracle runs, with no single-partition stage."""
     from icebergproject_spark.llm import sharding
 
     docs = _t(spark, sf_dir, "documents")
@@ -140,8 +139,8 @@ FROM keyed
 
 def q_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-based curriculum: NTILE(10) over (token count, id) —
-    DEFAULT mode='scale': exact distributed NTILE (no global window),
-    hash-equal to the NTILE oracle."""
+    exact distributed NTILE (no global window), hash-equal to the NTILE
+    oracle."""
     from icebergproject_spark.llm import sharding
 
     docs = _t(spark, sf_dir, "documents")
@@ -179,18 +178,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.semantic_near_pairs(emb, dim=64, k=8, threshold=0.35)
 
 
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (Xie et al. 2023) with lang='en' as the
-    target slice — the data-selection scorer upstream of importance
-    resampling. Float log-sums → rows-only; exactness pytest-pinned."""
-    import pyspark.sql.functions as F
-
-    from icebergproject_spark.llm import text as llm_text
-
-    docs = _t(spark, sf_dir, "documents")
-    return llm_text.dsir_importance_weights(docs, F.col("lang") == "en")
-
-
 def q_events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured processing on Spark 4's VARIANT type: parse the
     JSON props payload once into a variant column (binary-encoded,
@@ -220,16 +207,6 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
-
-
-def q_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail split by LM quality score (rows-only:
-    float score ordering; bucket invariants pytest-pinned).  DEFAULT
-    mode='scale': exact distributed NTILE, no global window."""
-    from icebergproject_spark.llm import text as llm_text
-
-    docs = _t(spark, sf_dir, "documents")
-    return llm_text.quality_buckets(docs)
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -677,10 +654,8 @@ LLM2_REGISTRY = {
         q_lineitem_unpivot_profile, ORACLE_UNPIVOT
     ),
     "knn_graph": Query(q_knn_graph, ORACLE_KNN_GRAPH),
-    "quality_buckets": Query(q_quality_buckets, None),
     "events_props_variant": Query(q_events_props_variant, ORACLE_EVENTS_VARIANT),
     "dedup_semantic": Query(q_dedup_semantic, None),
-    "dsir_weights": Query(q_dsir_weights, None),
     "duplicate_spans": Query(q_duplicate_spans, ORACLE_DUPLICATE_SPANS),
     "remove_duplicate_spans": Query(q_remove_duplicate_spans, ORACLE_REMOVE_SPANS),
     "global_shuffle": Query(q_global_shuffle, ORACLE_GLOBAL_SHUFFLE),

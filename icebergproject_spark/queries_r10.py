@@ -442,17 +442,12 @@ def q_neardup_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_oracle_sql() -> str:
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(NEARDUP_TABLES * ANN_PLANES, ANN_DIM)
 
     def bucket_expr(t: int) -> str:
-        return " + ".join(
-            f"(CASE WHEN list_dot_product(q, "
-            f"CAST({W[t * ANN_PLANES + p]} AS DOUBLE[])) >= 0 "
-            f"THEN {2 ** p} ELSE 0 END)"
-            for p in range(ANN_PLANES)
-        )
+        return int_sign_bucket_sql(W[t * ANN_PLANES : (t + 1) * ANN_PLANES])
 
     def cand_cte(name: str, tables: int) -> str:
         per_table = "\n    UNION ALL ".join(
@@ -582,14 +577,10 @@ def q_ann_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_inc_oracle_sql() -> str:
     """Full-rebuild directed graph over ALL vectors + the same locality
     scalars — the incremental arm must hash-equal this exactly."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(ANN_PLANES, ANN_DIM)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(ANN_PLANES)
-    )
+    bucket = int_sign_bucket_sql(W)
     return f"""
 WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
@@ -851,17 +842,12 @@ def q_ann_graph_incremental_multi(spark: SparkSession, sf_dir: str) -> DataFrame
 def _ann_inc_multi_oracle_sql() -> str:
     """Full-rebuild multi-table directed graph + the same locality
     scalars — the incremental L=4 arm must hash-equal this exactly."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(NEARDUP_TABLES * ANN_PLANES, ANN_DIM)
 
     def bucket_expr(t: int) -> str:
-        return " + ".join(
-            f"(CASE WHEN list_dot_product(q, "
-            f"CAST({W[t * ANN_PLANES + p]} AS DOUBLE[])) >= 0 "
-            f"THEN {2 ** p} ELSE 0 END)"
-            for p in range(ANN_PLANES)
-        )
+        return int_sign_bucket_sql(W[t * ANN_PLANES : (t + 1) * ANN_PLANES])
 
     per_table = "\n  UNION ALL ".join(
         f"SELECT vec_id, e, nm, {t} AS tbl, {bucket_expr(t)} AS bucket "

@@ -128,14 +128,10 @@ def _flood_guard_oracle_sql() -> str:
     """Full-rebuild graph + the guard's decision arithmetic replayed in
     SQL: touched fraction = distinct batch buckets over distinct buckets
     of the whole post-append corpus, integer ppm, decision at ≥ 0.5."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(ANN_PLANES, ANN_DIM)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(ANN_PLANES)
-    )
+    bucket = int_sign_bucket_sql(W)
     return f"""
 WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
@@ -237,14 +233,10 @@ def q_ann_graph_incremental_bucketed(
 
 def _bucketed_oracle_sql() -> str:
     """Full-rebuild graph over ALL vectors + the same bucket counts."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(ANN_PLANES, ANN_DIM)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(ANN_PLANES)
-    )
+    bucket = int_sign_bucket_sql(W)
     return f"""
 WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,

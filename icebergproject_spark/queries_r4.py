@@ -15,13 +15,11 @@
   corpus slice, hash-checked at full strength.
 - ``dsir_weights_sql`` — DSIR importance weights at ORACLE strength:
   md5-prefix buckets + integer micro-nat log-ratios so the per-doc
-  weight is a partitioning-independent BIGINT sum (the xxhash float arm
-  stays registered as the rows-only ``dsir_weights``).
+  weight is a partitioning-independent BIGINT sum.
 - ``lm_quality_score_sql`` / ``quality_buckets_sql`` — the CCNet
-  unigram LM quality score and head/middle/tail split promoted the same
-  way: per-token log-probs quantized once to integer micro-nats, BIGINT
-  per-doc sums, ranking on the exact integer-division mean.  Their float
-  arms stay registered rows-only.
+  unigram LM quality score and head/middle/tail split at the same
+  strength: per-token log-probs quantized once to integer micro-nats,
+  BIGINT per-doc sums, ranking on the exact integer-division mean.
 - ``dedup_minhash_lsh_sql`` — the LSH mechanism itself at ORACLE
   strength: md5-prefix shingle hashes and md5-minted affine
   permutations make signatures, band buckets and the candidate-pair set
@@ -238,19 +236,18 @@ FROM enriched
 
 
 def q_dsir_weights_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights promoted to ORACLE strength
-    (llm/text.dsir_weights_micro): md5-prefix hashed uni+bigram buckets,
-    per-bucket log-ratio quantized once to integer micro-nats, per-doc
-    weight as a partitioning-independent BIGINT sum.  Target slice:
-    lang = 'en' (same as the xxhash rows-only arm, which stays
-    registered as ``dsir_weights``)."""
+    """DSIR importance weights at ORACLE strength
+    (llm/text.dsir_importance_weights): md5-prefix hashed uni+bigram
+    buckets, per-bucket log-ratio quantized once to integer micro-nats,
+    per-doc weight as a partitioning-independent BIGINT sum.  Target
+    slice: lang = 'en'."""
     from icebergproject_spark.llm import text as llm_text
 
     docs = _t(spark, sf_dir, "documents")
-    return llm_text.dsir_weights_micro(docs, F.col("lang") == "en")
+    return llm_text.dsir_importance_weights(docs, F.col("lang") == "en")
 
 
-# mirrors dsir_weights_micro stage for stage: identical md5-nibble
+# mirrors dsir_importance_weights stage for stage: identical md5-nibble
 # buckets, identical single-division ln() inputs, integer micro-nat
 # quantization, BIGINT sums (order-independent — the float never crosses
 # an aggregation boundary)
@@ -298,14 +295,13 @@ GROUP BY doc_id
 
 def q_lm_quality_score_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet unigram LM quality score at ORACLE strength
-    (llm/text.unigram_logprob_micro): per-vocab-token log-probability
+    (llm/text.unigram_logprob_score): per-vocab-token log-probability
     quantized once to integer micro-nats, per-doc score as a
-    partitioning-independent BIGINT sum.  The float arm stays registered
-    rows-only as ``lm_quality_score``."""
+    partitioning-independent BIGINT sum."""
     from icebergproject_spark.llm import text as llm_text
 
     docs = _t(spark, sf_dir, "documents")
-    return llm_text.unigram_logprob_micro(docs)
+    return llm_text.unigram_logprob_score(docs)
 
 
 ORACLE_LM_QUALITY_SCORE_SQL = """
@@ -330,14 +326,13 @@ GROUP BY doc_id
 
 def q_quality_buckets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail split at ORACLE strength
-    (llm/text.quality_buckets_micro): rank by the micro-nat score's
-    exact mean (one integer division → identical double in any IEEE
-    engine), distributed exact-NTILE into 3 buckets.  The float arm
-    stays registered rows-only as ``quality_buckets``."""
+    (llm/text.quality_buckets): rank by the micro-nat score's exact
+    mean (one integer division → identical double in any IEEE engine),
+    distributed exact-NTILE into 3 buckets."""
     from icebergproject_spark.llm import text as llm_text
 
     docs = _t(spark, sf_dir, "documents")
-    return llm_text.quality_buckets_micro(docs)
+    return llm_text.quality_buckets(docs)
 
 
 ORACLE_QUALITY_BUCKETS_SQL = """

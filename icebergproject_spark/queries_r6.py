@@ -1120,7 +1120,7 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real token counts (pack_sequences' whitespace counts overstate
     packing density once merges shorten words).  One DAG: the tokenize
     kernel's n_tokens feeds pack_sequences' distributed prefix sum
-    (mode='scale', context 512, per-source strata)."""
+    (context 512, per-source strata)."""
     from icebergproject_spark.llm import bpe
     from icebergproject_spark.llm import text as llm_text
 

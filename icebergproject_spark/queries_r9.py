@@ -108,14 +108,10 @@ def _ann_edges_ctes(suffix: str = "", with_deg: bool = True) -> str:
     lsh_topk derivation — llm/similarity.lsh_weights /
     int_sign_bucket), candidates = same-bucket pairs, ranking = the
     identical (rounded score desc, neighbor asc) window."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(ANN_PLANES, ANN_DIM)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(ANN_PLANES)
-    )
+    bucket = int_sign_bucket_sql(W)
     s = suffix
     ctes = f"""v{s} AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
@@ -343,16 +339,12 @@ def _ann_edges_ctes_multi(suffix: str = "m", tables: int = 4) -> str:
     per (vector, table) — table t uses plane rows t·planes..(t+1)·planes
     −1 of the same md5 weight family — and candidates are same-(table,
     bucket) pairs, deduplicated across tables."""
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(tables * ANN_PLANES, ANN_DIM)
 
     def bucket_expr(t: int) -> str:
-        return " + ".join(
-            f"(CASE WHEN list_dot_product(q, CAST({W[t * ANN_PLANES + p]} AS DOUBLE[])) >= 0 "
-            f"THEN {2 ** p} ELSE 0 END)"
-            for p in range(ANN_PLANES)
-        )
+        return int_sign_bucket_sql(W[t * ANN_PLANES : (t + 1) * ANN_PLANES])
 
     s = suffix
     per_table = "\n  UNION ALL ".join(
@@ -602,14 +594,10 @@ def q_density_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _density_lsh_oracle() -> str:
-    from icebergproject_spark.llm.similarity import lsh_weights
+    from icebergproject_spark.llm.similarity import int_sign_bucket_sql, lsh_weights
 
     W = lsh_weights(ANN_PLANES, ANN_DIM)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(q, CAST({W[p]} AS DOUBLE[])) >= 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(ANN_PLANES)
-    )
+    bucket = int_sign_bucket_sql(W)
     # identical body to queries_r8b.ORACLE_DENSITY_CLUSTERS — only the
     # pair CTE `p` swaps from the exact cross join to same-bucket pairs
     return f"""

@@ -10,6 +10,20 @@ import pyspark.sql.functions as F
 from icebergproject_spark.llm import bpe, dedup, sharding
 
 
+def _duck_rows(rows: list[tuple], cols: list[str], sql: str) -> list[tuple]:
+    """Sorted result of ``sql`` run on DuckDB over ``rows`` registered
+    as the view ``documents``."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    try:
+        con.register("documents", pd.DataFrame(rows, columns=cols))
+        return sorted(con.execute(sql).fetchall())
+    finally:
+        con.close()
+
+
 # --- duplicate_spans -------------------------------------------------------
 
 def test_duplicate_spans_flags_shared_window(spark):
@@ -79,29 +93,31 @@ def test_global_shuffle_deterministic_and_balanced(spark):
 
 
 def test_global_shuffle_scale_mode(spark):
-    """mode='scale' (the registry default): byte-identical layout to the
-    portable global-window form — the oracle-parity pin — and the plan
+    """The distributed rank gives the layout of ONE global ROW_NUMBER
+    window — DuckDB runs that SQL on the same frame — and the plan
     carries NO partition-less window (every windowspec is keyed by the
     physical partition id, i.e. the single-partition sort is gone)."""
     import re
 
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(400)], "doc_id long, text string"
-    )
-    out = sharding.global_shuffle(docs, num_shards=8, mode="scale")
+    rows = [(i, f"doc {i}") for i in range(400)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = sharding.global_shuffle(docs, num_shards=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     specs = re.findall(r"windowspecdefinition\(([^,)]*)", plan)
     assert specs and all(s.startswith("__pid") for s in specs)
-    a = sorted(map(tuple, out.collect()))
-    b = sorted(
-        map(
-            tuple,
-            sharding.global_shuffle(
-                docs, num_shards=8, mode="portable"
-            ).collect(),
-        )
+    want = _duck_rows(
+        rows,
+        ["doc_id", "text"],
+        """
+        SELECT doc_id, CAST((rn - 1) % 8 AS BIGINT), CAST(rn - 1 AS BIGINT)
+        FROM (
+          SELECT doc_id, ROW_NUMBER() OVER (
+            ORDER BY md5('seed0' || '-' || CAST(doc_id AS VARCHAR)), doc_id
+          ) AS rn
+          FROM documents
+        )""",
     )
-    assert a == b
+    assert sorted(map(tuple, out.collect())) == want
 
 
 def test_exact_global_rank_offsets(spark):
@@ -143,112 +159,53 @@ def test_curriculum_bins_monotone(spark):
 
 
 def test_curriculum_bins_scale_equals_portable(spark):
-    """mode='scale' (the registry default): exact distributed NTILE —
-    byte-identical to the portable global-window form, no partition-less
-    window in the plan."""
+    """Exact distributed NTILE equals the portable NTILE over a global
+    window — DuckDB runs that SQL on the same frame, with ties on length
+    broken by id — and the plan has no partition-less window."""
     import re
 
-    docs = spark.createDataFrame(
-        [(i, " ".join(["w"] * ((i % 23) + 1))) for i in range(217)],
-        "doc_id long, text string",
-    )
-    out = sharding.curriculum_bins(docs, num_bins=7, mode="scale")
+    rows = [(i, " ".join(["w"] * ((i % 23) + 1))) for i in range(217)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = sharding.curriculum_bins(docs, num_bins=7)
     plan = out._jdf.queryExecution().executedPlan().toString()
     specs = re.findall(r"windowspecdefinition\(([^,)]*)", plan)
     assert specs and all(s.startswith("__pid") for s in specs)
-    a = sorted(map(tuple, out.collect()))
-    b = sorted(
-        map(
-            tuple,
-            sharding.curriculum_bins(docs, num_bins=7, mode="portable").collect(),
-        )
+    want = _duck_rows(
+        rows,
+        ["doc_id", "text"],
+        """
+        SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT),
+               CAST(NTILE(7) OVER (
+                 ORDER BY len(string_split(text, ' ')), doc_id
+               ) AS INTEGER)
+        FROM documents""",
     )
-    assert a == b
-
-
-def test_curriculum_bins_approx_mode(spark):
-    """mode='approx' (approx-quantile cut points + map-side lookup):
-    value-monotone bins of near-equal depth, and the plan carries NO
-    window at all (the single-partition NTILE sort is gone)."""
-    docs = spark.createDataFrame(
-        [(i, " ".join(["w"] * (i + 1))) for i in range(200)],
-        "doc_id long, text string",
-    )
-    out = sharding.curriculum_bins(docs, num_bins=5, mode="approx")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    rows = out.collect()
-    assert len(rows) == 200
-    # bins are value-monotone: every doc in bin b is no longer than any
-    # doc in bin b+1
-    by_bin: dict[int, list[int]] = {}
-    for r in rows:
-        by_bin.setdefault(r["bin"], []).append(r["n_tokens"])
-    bins = sorted(by_bin)
-    assert bins[0] == 1 and bins[-1] <= 5
-    for lo, hi in zip(bins, bins[1:]):
-        assert max(by_bin[lo]) <= min(by_bin[hi])
-    # near-equal depth (distinct lengths ⇒ cuts are exact up to sketch
-    # error; allow a loose band)
-    assert all(20 <= len(v) <= 60 for v in by_bin.values())
+    assert sorted(map(tuple, out.collect())) == want
 
 
 def test_quality_buckets_scale_equals_portable(spark):
-    """mode='scale' (the registry default): exact distributed NTILE over
-    (score DESC, id ASC) — byte-identical to the portable global-window
-    form; only __pid-partitioned windows in the plan (exercises the
+    """Exact distributed NTILE over (score DESC, id ASC) equals the
+    portable NTILE over a global window — DuckDB runs the registry
+    oracle's SQL on the same frame, ties on the score included — and
+    only __pid-partitioned windows are in the plan (exercises the
     DESC-ordered range partitioning arm of exact_global_rank)."""
     import re
 
     from icebergproject_spark.llm.text import quality_buckets
+    from icebergproject_spark.queries import REGISTRY
 
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{(i * j) % 13}" for j in range((i % 17) + 2))) for i in range(120)],
-        "doc_id long, text string",
-    )
-    out = quality_buckets(docs, num_buckets=3, mode="scale")
+    rows = [
+        (i, " ".join(f"w{(i * j) % 13}" for j in range((i % 17) + 2)))
+        for i in range(120)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = quality_buckets(docs, num_buckets=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     specs = re.findall(r"windowspecdefinition\(([^,)]*)", plan)
     assert specs and all(s.startswith("__pid") for s in specs)
-    a = sorted(map(tuple, out.collect()))
-    b = sorted(
-        map(tuple, quality_buckets(docs, num_buckets=3, mode="portable").collect())
-    )
-    assert a == b
-
-
-def test_quality_buckets_approx_mode(spark):
-    """mode='approx' quality split: no window in the plan; head bucket
-    holds the highest scores, tail the lowest; labels consistent."""
-    from icebergproject_spark.llm.text import quality_buckets
-
-    docs = spark.createDataFrame(
-        [
-            (i, "the quick brown fox jumps over the lazy dog " * 3)
-            if i % 3 == 0
-            else (i, "zq xv jk qz " + f"tok{i} " * 8)
-            if i % 3 == 1
-            else (i, "the the the the common words appear here often again")
-            for i in range(90)
-        ],
-        "doc_id long, text string",
-    )
-    out = quality_buckets(docs, num_buckets=3, mode="approx")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    rows = out.collect()
-    assert len(rows) == 90
-    by_bucket: dict[int, list[float]] = {}
-    labels = {}
-    for r in rows:
-        by_bucket.setdefault(r["bucket"], []).append(r["mean_logprob"])
-        labels[r["bucket"]] = r["bucket_label"]
-    assert labels.get(1) == "head"
-    assert labels.get(max(by_bucket)) == "tail" if max(by_bucket) == 3 else True
-    # score-monotone: bucket 1 scores >= bucket 2 scores >= bucket 3
-    buckets = sorted(by_bucket)
-    for hi, lo in zip(buckets, buckets[1:]):
-        assert min(by_bucket[hi]) >= max(by_bucket[lo])
+    oracle = REGISTRY["quality_buckets_sql"].oracle
+    want = _duck_rows(rows, ["doc_id", "text"], oracle)
+    assert sorted(map(tuple, out.collect())) == want
 
 
 def test_hash_shard_uniform_and_deterministic(spark):
@@ -470,67 +427,6 @@ def test_semantic_near_pairs_no_cross_cluster_false_positives(spark):
 
 # --- DSIR importance weights ----------------------------------------------
 
-def test_dsir_weights_match_numpy_reference(spark):
-    import math
-    from collections import Counter
-
-    from icebergproject_spark.llm.text import dsir_importance_weights
-
-    texts = {
-        1: "alpha beta alpha gamma",
-        2: "alpha beta delta",
-        3: "zeta eta theta iota",
-        4: "eta theta zeta zeta",
-    }
-    is_target = {1: True, 2: True, 3: False, 4: False}
-    docs = spark.createDataFrame(
-        [(i, t, is_target[i]) for i, t in texts.items()],
-        "doc_id long, text string, tgt boolean",
-    )
-    B, S = 64, 1.0
-    out = {
-        r["doc_id"]: r
-        for r in dsir_importance_weights(
-            docs, F.col("tgt"), buckets=B, smoothing=S
-        ).collect()
-    }
-
-    # numpy-free exact reference with the same hashed buckets via Spark's
-    # xxhash64 (fetch bucket ids once so the hash function is identical)
-    def grams(t):
-        ws = t.split(" ")
-        return ws + [f"{a} {b}" for a, b in zip(ws, ws[1:])]
-
-    all_grams = sorted({g for t in texts.values() for g in grams(t)})
-    gdf = spark.createDataFrame([(g,) for g in all_grams], "g string")
-    bucket = {
-        r["g"]: r["b"]
-        for r in gdf.select(
-            "g", F.pmod(F.xxhash64("g"), F.lit(B)).alias("b")
-        ).collect()
-    }
-    raw: Counter = Counter()
-    tgt: Counter = Counter()
-    for i, t in texts.items():
-        for g in grams(t):
-            raw[bucket[g]] += 1
-            if is_target[i]:
-                tgt[bucket[g]] += 1
-    R, T = sum(raw.values()), sum(tgt.values())
-    for i, t in texts.items():
-        want = sum(
-            math.log((tgt[bucket[g]] + S) / (T + S * B))
-            - math.log((raw[bucket[g]] + S) / (R + S * B))
-            for g in grams(t)
-        )
-        assert abs(out[i]["weight"] - round(want, 6)) < 1e-5
-        assert out[i]["n_feats"] == len(grams(t))
-    # target-family docs score higher than the off-target family
-    assert min(out[1]["weight"], out[2]["weight"]) > max(
-        out[3]["weight"], out[4]["weight"]
-    )
-
-
 def test_quality_buckets_ccnet_split(spark):
     from icebergproject_spark.llm.text import quality_buckets
 
@@ -554,8 +450,8 @@ def test_quality_buckets_ccnet_split(spark):
     assert {r["bucket_label"] for r in by_bucket[1]} == {"head"}
     assert {r["bucket_label"] for r in by_bucket[3]} == {"tail"}
     # score ordering: every head doc >= every tail doc
-    assert min(r["mean_logprob"] for r in by_bucket[1]) >= max(
-        r["mean_logprob"] for r in by_bucket[3]
+    assert min(r["mean_lp_micro"] for r in by_bucket[1]) >= max(
+        r["mean_lp_micro"] for r in by_bucket[3]
     )
 
 
@@ -635,15 +531,15 @@ def test_chunk_documents_windows_and_tail(spark):
 
 
 def test_dsir_weights_micro_match_hashlib_reference(spark):
-    """dsir_weights_micro (the oracle-strength md5/micro-nat arm) must
-    equal a pure-Python replay: same md5-prefix buckets (hashlib hex ==
-    Spark md5 hex), same single-division ln() inputs, same integer
-    micro-nat quantization, exact BIGINT sums."""
+    """dsir_importance_weights must equal a pure-Python replay: same
+    md5-prefix buckets (hashlib hex == Spark md5 hex), same
+    single-division ln() inputs, same integer micro-nat quantization,
+    exact BIGINT sums — and target-family docs must outscore the rest."""
     import hashlib
     import math
     from collections import Counter
 
-    from icebergproject_spark.llm.text import dsir_weights_micro
+    from icebergproject_spark.llm.text import dsir_importance_weights
 
     texts = {
         1: "alpha beta alpha gamma",
@@ -660,7 +556,7 @@ def test_dsir_weights_micro_match_hashlib_reference(spark):
     B = 64
     out = {
         r["doc_id"]: r
-        for r in dsir_weights_micro(docs, F.col("tgt"), buckets=B).collect()
+        for r in dsir_importance_weights(docs, F.col("tgt"), buckets=B).collect()
     }
 
     def grams(t):
@@ -706,8 +602,8 @@ def test_unigram_logprob_micro_and_buckets_match_reference(spark):
     from collections import Counter
 
     from icebergproject_spark.llm.text import (
-        quality_buckets_micro,
-        unigram_logprob_micro,
+        quality_buckets,
+        unigram_logprob_score,
     )
 
     texts = {
@@ -733,14 +629,14 @@ def test_unigram_logprob_micro_and_buckets_match_reference(spark):
     }
     got = {
         r["doc_id"]: (r["n_tokens"], r["sum_lp_micro"])
-        for r in unigram_logprob_micro(docs).collect()
+        for r in unigram_logprob_score(docs).collect()
     }
     assert got == want
 
     # bucket parity: NTILE(3) over mean desc / doc_id asc, 6 rows → 2 each
     order = sorted(want, key=lambda i: (-want[i][1] / want[i][0], i))
     want_bucket = {i: 1 + pos // 2 for pos, i in enumerate(order)}
-    out = {r["doc_id"]: r for r in quality_buckets_micro(docs).collect()}
+    out = {r["doc_id"]: r for r in quality_buckets(docs).collect()}
     for i in texts:
         assert out[i]["bucket"] == want_bucket[i]
         assert out[i]["bucket_label"] == {1: "head", 2: "middle", 3: "tail"}[

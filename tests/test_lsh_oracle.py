@@ -1,12 +1,15 @@
-"""One hash convention per LSH family, checked across engines.
+"""One implementation per algorithm, checked across engines.
 
 MinHash, SimHash and sign-LSH each have ONE Spark implementation whose
 every hash is md5-derived, and one SQL rendering (llm/dedup.
 minhash_bands_sql for MinHash bands; the head oracles built on it and on
-llm/similarity.int_sign_bucket_sql).  These tests run both engines at
-sf0.001 so a Spark/SQL hash drift fails here, not only in the full
-oracle run (tools/check_oracle.py, whose row rendering and hash they
-import rather than copy).
+llm/similarity.int_sign_bucket_sql).  The data-selection operators
+(CCNet unigram score and buckets, DSIR weights, global shuffle,
+curriculum bins, sequence packing) likewise have one body each, in its
+integer / exact-rank form.  These tests run both engines at sf0.001 so
+a Spark/SQL drift fails here, not only in the full oracle run
+(tools/check_oracle.py, whose row rendering and hash they import rather
+than copy).
 """
 
 from __future__ import annotations
@@ -95,8 +98,29 @@ def test_banded_signatures_equal_sql_generator(spark, sf_dir, duck, num_hashes, 
     assert got == want
 
 
+#: the data-selection heads whose operator is the single micro-nat /
+#: exact-rank body (llm/text, llm/sharding)
+SELECTION_ORACLE_HEADS = [
+    "lm_quality_score_sql",
+    "quality_buckets_sql",
+    "dsir_weights_sql",
+    "global_shuffle",
+    "curriculum_bins",
+    "pack_sequences",
+]
+
+
 @pytest.mark.parametrize("name", LSH_ORACLE_HEADS)
 def test_lsh_head_matches_oracle(spark, sf_dir, duck, name):
+    _assert_head_matches_oracle(spark, sf_dir, duck, name)
+
+
+@pytest.mark.parametrize("name", SELECTION_ORACLE_HEADS)
+def test_selection_head_matches_oracle(spark, sf_dir, duck, name):
+    _assert_head_matches_oracle(spark, sf_dir, duck, name)
+
+
+def _assert_head_matches_oracle(spark, sf_dir, duck, name):
     """Row count, column names and the order-insensitive value hash of
     the head equal its DuckDB oracle's, rendered as the oracle gate
     renders them."""

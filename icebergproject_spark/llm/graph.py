@@ -22,6 +22,15 @@ pattern for iterative algorithms: Lloyd steps, BPE merges).  The floor
 in DIV leaks ≤ outdeg(u) micro-points per node per iteration — bounded,
 deterministic, and irrelevant at scale 10^9.
 
+One level loop serves the whole family: :func:`_pagerank_levels` runs K
+levels of the recurrence from a node frame, an initial-rank column, a
+teleport column and a contribution expression.  The global
+(:func:`pagerank_micro`, :func:`pagerank_micro_history`), personalized
+(seed-gated ``r0`` and teleport) and weighted (``w``-proportional
+contribution) variants are setups over it; the incremental
+:func:`pagerank_micro_delta` runs the same single-level step over a
+growing frontier instead of the whole node set.
+
 100 TB shape: one iteration = one join of the edge list with the rank
 vector on ``src`` (co-partition both by ``src`` once and the join is
 shuffle-free after the first iteration; the rank vector is |V| rows —
@@ -32,15 +41,15 @@ matching the Lloyd-training pattern (llm/similarity.py).
 
 Dangling nodes (outdeg 0) contribute nothing — their rank leaks rather
 than redistributing, the common simplification; symmetrized edge sets
-(the registry query's shape) have none by construction.
+(the registry queries' shape) have none by construction.
 """
 
 from __future__ import annotations
 
-import os
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 #: Plan-time broadcast bound (rows) for the per-iteration |V|-bounded
 #: vectors (rank/score/label/frontier frames) of the iterative
@@ -49,9 +58,8 @@ from pyspark.sql import DataFrame
 #: against executor memory.  At 100 TB |V| far exceeds this, the
 #: decision flips automatically, and every join below keeps its
 #: original shuffle shape — the same measured-threshold discipline as
-#: connected_components' driver_threshold.  Override with
-#: $SPARK_GRAFT_VECTOR_BCAST_ROWS (0 forces the shuffle shape).
-VECTOR_BCAST_ROWS = int(os.environ.get("SPARK_GRAFT_VECTOR_BCAST_ROWS", "2000000"))
+#: connected_components' driver_threshold.  0 forces the shuffle shape.
+VECTOR_BCAST_ROWS = 2_000_000
 
 
 def _vector_hint(nodes: DataFrame):
@@ -74,6 +82,100 @@ def _vector_hint(nodes: DataFrame):
     return lambda df: df
 
 
+def _long_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    return edges.select(
+        F.col(src_col).cast("long").alias("src"),
+        F.col(dst_col).cast("long").alias("dst"),
+    )
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Every src or dst of ``e`` as (node), pinned: every level reads it."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _degree_edges(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The unweighted prep: ``(ed, nodes)`` with ``ed`` the pinned
+    (src, dst, outdeg) edge list, static across iterations."""
+    e = _long_edges(edges, src_col, dst_col)
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    nodes = _node_set(e)
+    return e.join(deg, "src").localCheckpoint(eager=False), nodes
+
+
+def _uniform_contrib(damping_pct: int) -> Column:
+    """c(u -> v) over ``ed``'s (r, outdeg): rank split evenly."""
+    return F.expr(f"({damping_pct} * r) DIV (100 * outdeg)")
+
+
+def _teleport_base(damping_pct: int, scale: int) -> int:
+    return (100 - damping_pct) * scale // 100
+
+
+def _pagerank_level(
+    ed: DataFrame,
+    nodes: DataFrame,
+    prev: DataFrame,
+    teleport: Column,
+    contrib: Column,
+    bc: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """One step of the recurrence for the rows of ``nodes``: sum
+    ``contrib`` over ``ed`` joined with the previous level ``prev``
+    (as ``r``), add ``teleport``; pinned with a lazy localCheckpoint."""
+    summed = (
+        ed.join(
+            bc(prev.select(
+                F.col("node").alias("src"), F.col("rank_micro").alias("r")
+            )),
+            "src",
+        )
+        .select(F.col("dst").alias("node"), contrib.alias("c"))
+        .groupBy("node")
+        .agg(F.sum("c").alias("in_rank"))
+    )
+    return (
+        nodes.join(bc(summed), "node", "left")
+        .select(
+            "node",
+            (teleport + F.coalesce(F.col("in_rank"), F.lit(0)))
+            .cast("long")
+            .alias("rank_micro"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _pagerank_levels(
+    ed: DataFrame,
+    nodes: DataFrame,
+    r0: Column,
+    teleport: Column,
+    contrib: Column,
+    iterations: int,
+) -> list[DataFrame]:
+    """The PageRank level loop: ``[r_0, …, r_K]`` over ``nodes`` (one
+    row per node, the columns ``r0`` and ``teleport`` read), with
+    ``contrib`` evaluated per edge of ``ed`` against the previous
+    level's ``r``.  The |V|-bounded rank and summed vectors take the
+    plan-time broadcast when they provably fit (:func:`_vector_hint`),
+    so each iteration loses its two exchanges."""
+    bc = _vector_hint(nodes)
+    levels = [nodes.select("node", r0.cast("long").alias("rank_micro"))]
+    for _ in range(iterations):
+        levels.append(
+            _pagerank_level(ed, nodes, levels[-1], teleport, contrib, bc)
+        )
+    return levels
+
+
 def pagerank_micro(
     edges: DataFrame,
     iterations: int = 5,
@@ -86,47 +188,12 @@ def pagerank_micro(
 
     ``edges``: directed (src, dst) pairs, pre-deduplicated by the caller
     if multi-edges should not multi-count.  Returns (node, rank_micro)
-    for every node appearing as a src or dst.
+    for every node appearing as a src or dst: the last level of
+    :func:`pagerank_micro_history` (``iterations=0`` gives ``r_0``).
     """
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused every iteration
-    )
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select(
-        "node", F.lit(scale).cast("long").alias("rank_micro")
-    )
-    bc = _vector_hint(nodes)  # r13: plan-time broadcast of the
-    # |V|-bounded rank/summed vectors when they provably fit (see
-    # _vector_hint) — each iteration loses its two exchanges
-    ed = e.join(deg, "src")  # (src, dst, outdeg): static across iterations
-    ed = ed.localCheckpoint(eager=False)
-    for _ in range(iterations):
-        contrib = ed.join(
-            bc(ranks.select(
-                F.col("node").alias("src"), F.col("rank_micro").alias("r")
-            )),
-            "src",
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr(f"({damping_pct} * r) DIV (100 * outdeg)").alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("in_rank"))
-        ranks = nodes.join(bc(summed), "node", "left").select(
-            "node",
-            (
-                F.lit(base) + F.coalesce(F.col("in_rank"), F.lit(0))
-            ).cast("long").alias("rank_micro"),
-        )
-        ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return pagerank_micro_history(
+        edges, iterations, damping_pct, scale, src_col, dst_col
+    )[-1]
 
 
 def pagerank_personalized_micro(
@@ -156,51 +223,24 @@ def pagerank_personalized_micro(
             f"pagerank_personalized_micro requires iterations >= 1, "
             f"got {iterations}"
         )
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    ed, nodes = _degree_edges(edges, src_col, dst_col)
     sd = seeds.select(F.col("node").cast("long").alias("node")).distinct()
+    # the node set with its seed flag: one row per node, so it is the
+    # level loop's node frame
     marked = nodes.join(
         sd.withColumn("__seed", F.lit(1)), "node", "left"
     ).select(
         "node", F.coalesce(F.col("__seed"), F.lit(0)).alias("__seed")
     ).localCheckpoint(eager=False)
-    base = (100 - damping_pct) * scale // 100
-    ranks = marked.select(
-        "node",
-        (F.col("__seed") * F.lit(scale)).cast("long").alias("rank_micro"),
-    )
-    bc = _vector_hint(marked)  # r13: same broadcast policy as
-    # pagerank_micro (marked IS the node set, one row per node)
-    ed = e.join(deg, "src").localCheckpoint(eager=False)
-    for _ in range(iterations):
-        contrib = ed.join(
-            bc(ranks.select(
-                F.col("node").alias("src"), F.col("rank_micro").alias("r")
-            )),
-            "src",
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr(f"({damping_pct} * r) DIV (100 * outdeg)").alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("in_rank"))
-        ranks = marked.join(bc(summed), "node", "left").select(
-            "node",
-            (
-                F.col("__seed") * F.lit(base)
-                + F.coalesce(F.col("in_rank"), F.lit(0))
-            ).cast("long").alias("rank_micro"),
-        )
-        ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    seed = F.col("__seed")
+    return _pagerank_levels(
+        ed,
+        marked,
+        r0=seed * F.lit(scale),
+        teleport=seed * F.lit(_teleport_base(damping_pct, scale)),
+        contrib=_uniform_contrib(damping_pct),
+        iterations=iterations,
+    )[-1]
 
 
 def pagerank_micro_history(
@@ -217,45 +257,15 @@ def pagerank_micro_history(
     ``r_K`` is bit-identical to ``pagerank_micro(...)``'s output.  At
     100 TB the history is K+1 |V|-row tables (store partitioned by
     iteration in the lakehouse); K is small (5 here)."""
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
+    ed, nodes = _degree_edges(edges, src_col, dst_col)
+    return _pagerank_levels(
+        ed,
+        nodes,
+        r0=F.lit(scale),
+        teleport=F.lit(_teleport_base(damping_pct, scale)),
+        contrib=_uniform_contrib(damping_pct),
+        iterations=iterations,
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    base = (100 - damping_pct) * scale // 100
-    hist = [
-        nodes.select("node", F.lit(scale).cast("long").alias("rank_micro"))
-    ]
-    bc = _vector_hint(nodes)  # r13: same broadcast policy as pagerank_micro
-    ed = e.join(deg, "src").localCheckpoint(eager=False)
-    for _ in range(iterations):
-        contrib = ed.join(
-            bc(hist[-1].select(
-                F.col("node").alias("src"), F.col("rank_micro").alias("r")
-            )),
-            "src",
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr(f"({damping_pct} * r) DIV (100 * outdeg)").alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("in_rank"))
-        hist.append(
-            nodes.join(bc(summed), "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.coalesce(F.col("in_rank"), F.lit(0)))
-                .cast("long")
-                .alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return hist
 
 
 def pagerank_micro_delta(
@@ -285,11 +295,13 @@ def pagerank_micro_delta(
     set starts at ``D`` = destinations of edges whose src gained
     out-edges (plus brand-new nodes) and grows ONE HOP per iteration:
     ``F_i = N_out(F_{i-1}) ∪ D``.  Each iteration recomputes ranks for
-    ``F_i`` only, reading unchanged in-neighbor ranks from the stored
-    ``history[i-1]`` — cost O(Σ_i |edges into F_i|), independent of
-    graph size for a localized delta, which is the point at 100 TB:
-    the nightly crawl-graph delta touches the K-hop neighborhood of
-    new links, not the whole web graph.
+    ``F_i`` only — the global variant's single-level step
+    (:func:`_pagerank_level`) over the edges into ``F_i`` — reading
+    unchanged in-neighbor ranks from the stored ``history[i-1]``: cost
+    O(Σ_i |edges into F_i|), independent of graph size for a localized
+    delta, which is the point at 100 TB: the nightly crawl-graph delta
+    touches the K-hop neighborhood of new links, not the whole web
+    graph.
 
     ``edges_full`` must be the complete post-delta edge set;
     ``edges_delta`` every CHANGED edge row — the new edges for an
@@ -328,32 +340,20 @@ def pagerank_micro_delta(
     if emit not in ("merged", "updates"):
         raise ValueError(f"emit must be 'merged' or 'updates', got {emit!r}")
     iterations = len(history) - 1
-    e = edges_full.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    de = edges_delta.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)  # consumed by delta_srcs AND the
-    # dirty seed's dst branch (r11) — without the pin a caller's delta
-    # plan (often a corpus-wide filter+distinct) executes once per
-    # consumer
-    base = (100 - damping_pct) * scale // 100
+    de = _long_edges(edges_delta, src_col, dst_col).localCheckpoint(
+        eager=False
+    )  # consumed by delta_srcs AND the dirty seed's dst branch (r11) —
+    # without the pin a caller's delta plan (often a corpus-wide
+    # filter+distinct) executes once per consumer
+    teleport = F.lit(_teleport_base(damping_pct, scale))
+    contrib = _uniform_contrib(damping_pct)
     if static_state is not None:
         ed = static_state["ed"]
         nodes = static_state["nodes"].select(
             F.col(static_state["nodes"].columns[0]).alias("node")
         )
     else:
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        ed = e.join(deg, "src").localCheckpoint(eager=False)
+        ed, nodes = _degree_edges(edges_full, src_col, dst_col)
 
     delta_srcs = de.select("src").distinct()
     bc = _vector_hint(nodes)  # r13: frontier/updated/merged-rank frames
@@ -408,29 +408,12 @@ def pagerank_micro_delta(
                     bc(updated_prev.select("node")), "node", "left_anti"
                 )
             )
-        contrib = (
-            ed.join(bc(frontier.select(F.col("node").alias("dst"))), "dst")
-            .join(
-                bc(r_prev.select(
-                    F.col("node").alias("src"), F.col("rank_micro").alias("r")
-                )),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"({damping_pct} * r) DIV (100 * outdeg)").alias("c"),
-            )
+        # the edges into F_i carry every contribution F_i's ranks sum
+        into_frontier = ed.join(
+            bc(frontier.select(F.col("node").alias("dst"))), "dst"
         )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("in_rank"))
-        updated = (
-            frontier.join(bc(summed), "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.coalesce(F.col("in_rank"), F.lit(0)))
-                .cast("long")
-                .alias("rank_micro"),
-            )
-            .localCheckpoint(eager=False)
+        updated = _pagerank_level(
+            into_frontier, frontier, r_prev, teleport, contrib, bc
         )
         new_hist.append(
             updated.unionByName(
@@ -469,9 +452,9 @@ def pagerank_weighted_micro(
     are; pre-scale rationals to a grid first).  Overflow bound:
     damping·r·w ≤ 100·(n·scale)·max_w must stay below 2^63 — at the 1e9
     default grid that supports n·max_w up to ~9e10, far beyond any
-    per-partition rank mass a real graph concentrates.  Identical 100 TB
-    shape, bit-determinism, and unrolled-CTE oracle pattern as
-    :func:`pagerank_micro`."""
+    per-partition rank mass a real graph concentrates.  Same level
+    loop, 100 TB shape, bit-determinism, and unrolled-CTE oracle as
+    :func:`pagerank_micro`; only the contribution differs."""
     if iterations < 1:
         raise ValueError(
             f"pagerank_weighted_micro requires iterations >= 1, "
@@ -484,37 +467,16 @@ def pagerank_weighted_micro(
     ).localCheckpoint(eager=False)  # consumed by wsum, nodes (×2), ed —
     # a caller-side weighted-edge aggregation would otherwise replay 4×
     wsum = e.groupBy("src").agg(F.sum("w").alias("wtot"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select(
-        "node", F.lit(scale).cast("long").alias("rank_micro")
-    )
-    bc = _vector_hint(nodes)  # r13: same broadcast policy as pagerank_micro
+    nodes = _node_set(e)
     ed = e.join(wsum, "src").localCheckpoint(eager=False)
-    for _ in range(iterations):
-        contrib = ed.join(
-            bc(ranks.select(
-                F.col("node").alias("src"), F.col("rank_micro").alias("r")
-            )),
-            "src",
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr(f"({damping_pct} * r * w) DIV (100 * wtot)").alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("in_rank"))
-        ranks = nodes.join(bc(summed), "node", "left").select(
-            "node",
-            (
-                F.lit(base) + F.coalesce(F.col("in_rank"), F.lit(0))
-            ).cast("long").alias("rank_micro"),
-        )
-        ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return _pagerank_levels(
+        ed,
+        nodes,
+        r0=F.lit(scale),
+        teleport=F.lit(_teleport_base(damping_pct, scale)),
+        contrib=F.expr(f"({damping_pct} * r * w) DIV (100 * wtot)"),
+        iterations=iterations,
+    )[-1]
 
 
 def triangle_stats(

@@ -1211,6 +1211,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# pack_id: concat_ws skips a NULL source exactly as pack_sequences'
+# F.concat_ws does (``source || '-' || …`` would render NULL instead)
 ORACLE_PACK_SEQUENCES = """
 WITH t AS (
   SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens FROM documents
@@ -1222,7 +1224,8 @@ WITH t AS (
 )
 SELECT doc_id AS id,
        CAST(n_tokens AS INTEGER) AS n_tokens,
-       source || '-' || CAST(CAST(FLOOR((cum - n_tokens) / 512) AS BIGINT) AS VARCHAR)
+       concat_ws('-', source,
+                 CAST(CAST(FLOOR((cum - n_tokens) / 512) AS BIGINT) AS VARCHAR))
          AS pack_id,
        CAST((cum - n_tokens) % 512 AS BIGINT) AS pack_offset,
        CAST(FLOOR((cum - 1) / 512) - FLOOR((cum - n_tokens) / 512) + 1 AS BIGINT)

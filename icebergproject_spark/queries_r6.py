@@ -8,10 +8,10 @@
   The Lloyd-guaranteed monotone property (training objective) plus a
   recall floor is pinned by ``tests/test_llm.py::
   test_ivf_sql2_objective_improves_and_recall_holds``.
-- ``bpe_tokenize`` — full corpus tokenization under the trained BPE
-  vocabulary (token-id sequences, not just counts): the trainer-input
-  artifact.  Iterative training → rows-only; round-trip + kernel
-  consistency pytest-pinned.
+- ``bpe_tokenize_sql`` — full corpus tokenization under the trained
+  BPE vocabulary (token-id sequences, not just counts): the
+  trainer-input artifact, hash-checked through the unrolled replay of
+  the training loop; round-trip + kernel consistency pytest-pinned.
 
 Reference anchor: the reference has no ANN tier (its surface stops at
 the Flink serving layer) — this extends the LLM-pipeline extension set
@@ -131,36 +131,6 @@ ranked AS (
 )
 SELECT * FROM ranked WHERE rank <= 5
 """
-
-
-def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full corpus tokenization under a 12-merge trained BPE vocabulary:
-    per document, the token-id sequence + count (llm/bpe.bpe_tokenize) —
-    the trainer-input artifact downstream of bpe_merges.  The training
-    loop is iterative (no SQL twin → rows-only); kernel semantics are
-    pytest-pinned: vocab round-trip reconstructs every word exactly and
-    counts agree with the independent bpe_encode kernel.
-
-    Driver rendering: the ``array<int>`` id sequence is CSV-joined — the
-    driver's rows-only canonicalizer sorts every output column and
-    pandas cannot sort raw list cells (r6 window recorded an err row for
-    exactly that).  The API (:func:`llm.bpe.bpe_tokenize`) keeps the
-    trainer-facing array schema; only this registry arm renders."""
-    from icebergproject_spark.llm import bpe
-
-    docs = _t(spark, sf_dir, "documents")
-    merges = bpe.bpe_train(docs, num_merges=12)
-    vocab = bpe.bpe_vocab(docs, merges)
-    return bpe.bpe_tokenize(docs, merges, vocab).select(
-        "doc_id",
-        F.concat_ws(
-            ",", F.transform("token_ids", lambda x: x.cast("string"))
-        ).alias("token_ids_csv"),
-        "n_tokens",
-    )
-
-
-
 
 
 def q_text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,10 +428,13 @@ FROM documents doc LEFT JOIN agg ON agg.doc_id = doc.doc_id"""
 
 
 def q_bpe_tokenize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bpe_tokenize at ORACLE strength: same train->vocab->tokenize
-    pipeline, token_ids rendered as CSV so the id sequence hash-checks
-    bit-for-bit (the array convention).  The rows-only ``bpe_tokenize``
-    keeps the trainer-facing array<int> schema."""
+    """Full corpus tokenization under a 12-merge trained BPE vocabulary
+    at ORACLE strength: per document, the token-id sequence + count
+    (llm/bpe.bpe_tokenize) — the trainer-input artifact downstream of
+    bpe_merges.  The ``array<int>`` id sequence is rendered as CSV so it
+    hash-checks bit-for-bit (the array convention); the API
+    (:func:`llm.bpe.bpe_tokenize`) keeps the trainer-facing array
+    schema, only this registry head renders."""
     from icebergproject_spark.llm import bpe
 
     docs = _t(spark, sf_dir, "documents")
@@ -1049,7 +1022,6 @@ R6_REGISTRY: dict[str, Query] = {
     # r6 PROMOTION: the 12-round training loop itself, hash-checked —
     # the unrolled-CTE replay makes the iterative argmax ORACLE-strength
     "bpe_merges": Query(q_bpe_merges, ORACLE_BPE_MERGES),
-    "bpe_tokenize": Query(q_bpe_tokenize, None),
     "bpe_tokenize_sql": Query(q_bpe_tokenize_sql, ORACLE_BPE_TOKENIZE_SQL),
     "text_hash_features": Query(q_text_hash_features, ORACLE_TEXT_HASH_FEATURES),
     "doc_clusters_sql": Query(q_doc_clusters_sql, ORACLE_DOC_CLUSTERS_SQL),

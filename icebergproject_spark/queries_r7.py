@@ -105,6 +105,32 @@ SELECT query_id, rank, doc_id, score_micro FROM (
 ORACLE_BM25_TOPK = _oracle_bm25(BM25_QUERIES, 5)
 
 
+def supplier_part_edges(
+    spark: SparkSession, sf_dir: str, symmetric: bool = False
+) -> DataFrame:
+    """The graph heads' supplier→part graph: distinct (l_suppkey,
+    1,000,000 + l_partkey) edges as (src, dst) — part nodes offset so
+    the two id spaces never meet.  ``symmetric`` adds every reverse
+    edge, so no node dangles (the PageRank heads' shape); HITS reads the
+    directed form.  :data:`SUPPLIER_PART_CTE` is the same graph in SQL."""
+    li = _t(spark, sf_dir, "lineitem")
+    e0 = li.select(
+        F.col("l_suppkey").alias("src"),
+        (F.lit(1_000_000) + F.col("l_partkey")).alias("dst"),
+    ).distinct()
+    if not symmetric:
+        return e0
+    return e0.union(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+#: :func:`supplier_part_edges` (directed) for the oracles: CTE ``sp``
+SUPPLIER_PART_CTE = """sp AS MATERIALIZED (
+  SELECT DISTINCT l_suppkey AS src, 1000000 + l_partkey AS dst FROM lineitem
+)"""
+
+
 def q_pagerank_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-grid PageRank, 5 iterations, damping 0.85, over the
     symmetrized supplier-part graph (distinct (l_suppkey, l_partkey)
@@ -112,39 +138,67 @@ def q_pagerank_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     node dangles).  Output: (node, rank_micro) for every node."""
     from icebergproject_spark.llm.graph import pagerank_micro
 
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_suppkey").alias("src"),
-        (F.lit(1_000_000) + F.col("l_partkey")).alias("dst"),
-    ).distinct()
-    edges = e0.union(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return pagerank_micro(
+        supplier_part_edges(spark, sf_dir, symmetric=True), iterations=5
     )
-    return pagerank_micro(edges, iterations=5)
 
 
-def _oracle_pagerank(iters: int, damping_pct: int = 85, scale: int = 10**9) -> str:
+def pagerank_oracle(
+    edge_ctes: str,
+    pairs: str,
+    iters: int = 5,
+    *,
+    weighted: bool = False,
+    seed_max: int | None = None,
+    damping_pct: int = 85,
+    scale: int = 10**9,
+) -> str:
+    """The one unrolled-CTE replay of llm/graph's PageRank level loop.
+
+    ``edge_ctes`` is the CTE block the graph comes from and ``pairs`` a
+    SELECT over it giving one direction of every undirected edge as
+    (src, dst), plus the integer weight ``w`` when ``weighted``.  The
+    builder renders both directions (``pre``), each source's outgoing
+    total (``prdeg``: edge count, or Σw when weighted), the node set
+    (``prnodes``) and the levels ``r0..r{iters}``; the ``pr`` prefix
+    keeps them clear of an edge block's own ``deg`` (_ann_edges_ctes).
+    ``seed_max`` gates ``r0`` and the teleport on ``node <= seed_max``
+    (the personalized variant).  Every CTE is MATERIALIZED: each level
+    is read by the next and re-expanding it grows the unrolled plan per
+    iteration (see _oracle_hits)."""
     base = (100 - damping_pct) * scale // 100
+    w = ", w" if weighted else ""
+    tot = "SUM(w)" if weighted else "COUNT(*)"
+    flow = "r.rank_micro * e.w" if weighted else "r.rank_micro"
+
+    def gated(v: int, node: str) -> str:
+        if seed_max is None:
+            return str(v)
+        return f"CASE WHEN {node} <= {seed_max} THEN {v} ELSE 0 END"
+
     ctes = [
-        f"""e0 AS (
-  SELECT DISTINCT l_suppkey AS src, 1000000 + l_partkey AS dst FROM lineitem
-),
-edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY 1),
-nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-r0 AS (SELECT node, CAST({scale} AS BIGINT) AS rank_micro FROM nodes)"""
+        edge_ctes,
+        f"prpairs AS MATERIALIZED ({pairs})",
+        f"""pre AS MATERIALIZED (
+  SELECT src, dst{w} FROM prpairs UNION ALL SELECT dst, src{w} FROM prpairs
+)""",
+        f"prdeg AS MATERIALIZED (SELECT src, {tot} AS tot FROM pre GROUP BY 1)",
+        "prnodes AS MATERIALIZED (SELECT src AS node FROM pre UNION SELECT dst FROM pre)",
+        f"""r0 AS MATERIALIZED (
+  SELECT node, CAST({gated(scale, "node")} AS BIGINT) AS rank_micro FROM prnodes
+)""",
     ]
     for i in range(iters):
         ctes.append(
-            f"""r{i + 1} AS (
+            f"""r{i + 1} AS MATERIALIZED (
   SELECT n.node,
-         CAST({base} + COALESCE(c.s, 0) AS BIGINT) AS rank_micro
-  FROM nodes n LEFT JOIN (
+         CAST({gated(base, "n.node")} + COALESCE(c.s, 0) AS BIGINT) AS rank_micro
+  FROM prnodes n LEFT JOIN (
     SELECT e.dst AS node,
-           SUM(({damping_pct} * r.rank_micro) // (100 * d.outdeg)) AS s
-    FROM edges e
+           SUM(({damping_pct} * {flow}) // (100 * d.tot)) AS s
+    FROM pre e
     JOIN r{i} r ON e.src = r.node
-    JOIN deg d ON d.src = e.src
+    JOIN prdeg d ON d.src = e.src
     GROUP BY e.dst
   ) c ON n.node = c.node
 )"""
@@ -156,7 +210,11 @@ r0 AS (SELECT node, CAST({scale} AS BIGINT) AS rank_micro FROM nodes)"""
     )
 
 
-ORACLE_PAGERANK_SQL = _oracle_pagerank(5)
+#: the PageRank heads over the supplier→part graph (pagerank_sql,
+#: pagerank_delta, pagerank_personalized) symmetrize ``sp``
+SUPPLIER_PART_PAIRS = "SELECT src, dst FROM sp"
+
+ORACLE_PAGERANK_SQL = pagerank_oracle(SUPPLIER_PART_CTE, SUPPLIER_PART_PAIRS)
 
 
 def q_event_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -302,12 +360,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape that separates the two scores)."""
     from icebergproject_spark.llm.graph import hits_micro
 
-    li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").alias("src"),
-        (F.lit(1_000_000) + F.col("l_partkey")).alias("dst"),
-    ).distinct()
-    return hits_micro(edges, iterations=5)
+    return hits_micro(supplier_part_edges(spark, sf_dir), iterations=5)
 
 
 def _oracle_hits(iters: int, scale: int = 10**6) -> str:
@@ -315,18 +368,16 @@ def _oracle_hits(iters: int, scale: int = 10**6) -> str:
         # MATERIALIZED: every CTE here is referenced 2+ times downstream;
         # inlining would re-expand each level and the unrolled plan grows
         # ~4x per iteration (the BPE-merge oracle hit the same cliff)
-        """e0 AS MATERIALIZED (
-  SELECT DISTINCT l_suppkey AS src, 1000000 + l_partkey AS dst FROM lineitem
-),
-nodes AS MATERIALIZED (SELECT src AS node FROM e0 UNION SELECT dst FROM e0),
-h0 AS MATERIALIZED (SELECT node, CAST({s} AS BIGINT) AS s FROM nodes)""".format(s=scale)
+        f"""{SUPPLIER_PART_CTE},
+nodes AS MATERIALIZED (SELECT src AS node FROM sp UNION SELECT dst FROM sp),
+h0 AS MATERIALIZED (SELECT node, CAST({scale} AS BIGINT) AS s FROM nodes)"""
     ]
     prev_h = "h0"
     for i in range(1, iters + 1):
         ctes.append(
             f"""a{i}raw AS MATERIALIZED (
   SELECT e.dst AS node, SUM(h.s) AS raw
-  FROM e0 e JOIN {prev_h} h ON e.src = h.node GROUP BY 1
+  FROM sp e JOIN {prev_h} h ON e.src = h.node GROUP BY 1
 ),
 a{i}m AS (SELECT MAX(raw) AS m FROM a{i}raw),
 a{i} AS MATERIALIZED (
@@ -336,7 +387,7 @@ a{i} AS MATERIALIZED (
 ),
 h{i}raw AS MATERIALIZED (
   SELECT e.src AS node, SUM(a.s) AS raw
-  FROM e0 e JOIN a{i} a ON e.dst = a.node GROUP BY 1
+  FROM sp e JOIN a{i} a ON e.dst = a.node GROUP BY 1
 ),
 h{i}m AS (SELECT MAX(raw) AS m FROM h{i}raw),
 h{i} AS MATERIALIZED (

@@ -31,6 +31,13 @@ import pyspark.sql.functions as F  # noqa: F401  (kept for parity with sibling m
 from pyspark.sql import DataFrame, SparkSession
 
 from icebergproject_spark.queries import Query, _t
+from icebergproject_spark.queries_r7 import (
+    ORACLE_PAGERANK_SQL,
+    SUPPLIER_PART_CTE,
+    SUPPLIER_PART_PAIRS,
+    pagerank_oracle,
+    supplier_part_edges,
+)
 
 PCA_DIM = 64
 PCA_QUANT = 10**4
@@ -348,14 +355,7 @@ def q_pagerank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         pagerank_micro_history,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_suppkey").alias("src"),
-        (F.lit(1_000_000) + F.col("l_partkey")).alias("dst"),
-    ).distinct()
-    edges = e0.union(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = supplier_part_edges(spark, sf_dir, symmetric=True)
     is_delta = (F.col("src") + F.col("dst")) % 5 == 0
     base = edges.filter(~is_delta)
     delta = edges.filter(is_delta)
@@ -439,6 +439,10 @@ WHERE 100 * i.inter_count >= 30 * (sa.n + sb.n - i.inter_count)
 """
 
 
+#: the personalized head's seed set: supplier nodes 1..PPR_SEED_MAX
+PPR_SEED_MAX = 50
+
+
 def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Topic-sensitive PageRank (Haveliwala 2002) at ORACLE strength:
     teleport restricted to the supplier seed set (node <= 50) over the
@@ -448,70 +452,20 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm/graph.pagerank_personalized_micro)."""
     from icebergproject_spark.llm.graph import pagerank_personalized_micro
 
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = li.select(
-        F.col("l_suppkey").alias("src"),
-        (F.lit(1_000_000) + F.col("l_partkey")).alias("dst"),
-    ).distinct()
-    edges = e0.union(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = supplier_part_edges(spark, sf_dir, symmetric=True)
     seeds = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .filter(F.col("node") <= 50)
+        .filter(F.col("node") <= PPR_SEED_MAX)
     )
     return pagerank_personalized_micro(edges, seeds, iterations=5)
 
 
-def _oracle_pagerank_personalized(
-    iters: int = 5,
-    damping_pct: int = 85,
-    scale: int = 10**9,
-    seed_max: int = 50,
-) -> str:
-    """queries_r7._oracle_pagerank with the teleport term gated on the
-    seed set node <= ``seed_max`` (r0 = scale·[seed]; per-iteration
-    base only for seeds)."""
-    base = (100 - damping_pct) * scale // 100
-    ctes = [
-        f"""e0 AS (
-  SELECT DISTINCT l_suppkey AS src, 1000000 + l_partkey AS dst FROM lineitem
-),
-edges AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY 1),
-nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-r0 AS (
-  SELECT node,
-         CAST(CASE WHEN node <= {seed_max} THEN {scale} ELSE 0 END AS BIGINT)
-           AS rank_micro
-  FROM nodes
-)"""
-    ]
-    for i in range(iters):
-        ctes.append(
-            f"""r{i + 1} AS (
-  SELECT n.node,
-         CAST(CASE WHEN n.node <= {seed_max} THEN {base} ELSE 0 END
-              + COALESCE(c.s, 0) AS BIGINT) AS rank_micro
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node,
-           SUM(({damping_pct} * r.rank_micro) // (100 * d.outdeg)) AS s
-    FROM edges e
-    JOIN r{i} r ON e.src = r.node
-    JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-  ) c ON c.node = n.node
-)"""
-        )
-    body = ",\n".join(ctes)
-    return f"""WITH {body}
-SELECT node, rank_micro FROM r{iters}
-"""
-
-
-ORACLE_PAGERANK_PERSONALIZED = _oracle_pagerank_personalized()
+#: pagerank_sql's oracle with r0 and the teleport gated on the seed set
+ORACLE_PAGERANK_PERSONALIZED = pagerank_oracle(
+    SUPPLIER_PART_CTE, SUPPLIER_PART_PAIRS, seed_max=PPR_SEED_MAX
+)
 
 
 def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,10 +672,6 @@ FROM est a JOIN exact x ON x.g = a.g
 
 ORACLE_HLL_AUDIT = _hll_oracle_sql()
 
-
-# queries.py imports this module after queries_r7, so the shared
-# full-recompute oracle is importable here without a cycle
-from icebergproject_spark.queries_r7 import ORACLE_PAGERANK_SQL  # noqa: E402
 
 R8_REGISTRY: dict[str, Query] = {
     "embedding_pca_sql": Query(q_embedding_pca_sql, ORACLE_EMBEDDING_PCA_SQL),

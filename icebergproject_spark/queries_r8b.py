@@ -48,6 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from icebergproject_spark.queries import Query, _t
+from icebergproject_spark.queries_r7 import pagerank_oracle
 
 # ---------------------------------------------------------------------------
 # shared edge derivations
@@ -227,48 +228,18 @@ def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_weighted_micro(edges, iterations=5, weight_col="w")
 
 
-def _oracle_pagerank_weighted(
-    iters: int, damping_pct: int = 85, scale: int = 10**9
-) -> str:
-    base = (100 - damping_pct) * scale // 100
-    ctes = [
-        f"""lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+ORACLE_PAGERANK_WEIGHTED = pagerank_oracle(
+    """lp AS MATERIALIZED (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+),
 e0 AS MATERIALIZED (
   SELECT x.pk AS a, y.pk AS b, COUNT(*) AS w
   FROM lp x JOIN lp y ON x.ok = y.ok AND x.pk < y.pk
   GROUP BY 1, 2
-),
-edges AS MATERIALIZED (
-  SELECT a AS src, b AS dst, w FROM e0
-  UNION ALL SELECT b, a, w FROM e0
-),
-ws AS MATERIALIZED (SELECT src, SUM(w) AS wtot FROM edges GROUP BY 1),
-nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
-r0 AS (SELECT node, CAST({scale} AS BIGINT) AS rank_micro FROM nodes)"""
-    ]
-    for i in range(iters):
-        ctes.append(
-            f"""r{i + 1} AS MATERIALIZED (
-  SELECT n.node,
-         CAST({base} + COALESCE(c.s, 0) AS BIGINT) AS rank_micro
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node,
-           SUM(({damping_pct} * r.rank_micro * e.w) // (100 * s.wtot)) AS s
-    FROM edges e
-    JOIN r{i} r ON e.src = r.node
-    JOIN ws s ON s.src = e.src
-    GROUP BY e.dst
-  ) c ON n.node = c.node
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT node, rank_micro FROM r{iters}"
-    )
-
-
-ORACLE_PAGERANK_WEIGHTED = _oracle_pagerank_weighted(5)
+)""",
+    "SELECT a AS src, b AS dst, w FROM e0",
+    weighted=True,
+)
 
 
 # ---------------------------------------------------------------------------

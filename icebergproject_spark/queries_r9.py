@@ -44,6 +44,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from icebergproject_spark.queries import Query, _t
+from icebergproject_spark.queries_r7 import pagerank_oracle
 from icebergproject_spark.queries_r8b import (
     DBSCAN_MINPTS,
     DBSCAN_TAU,
@@ -522,44 +523,10 @@ def q_pagerank_delta_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_micro_delta(edges, delta, hist)[-1]
 
 
-def _oracle_pagerank_ann(
-    iters: int, damping_pct: int = 85, scale: int = 10**9
-) -> str:
-    """Full-recompute unrolled PageRank CTEs (the queries_r7
-    _oracle_pagerank machinery) over the ANN 5-NN edge set — CTE names
-    prefixed pr* to avoid colliding with the edge block's ``deg``."""
-    base = (100 - damping_pct) * scale // 100
-    ctes = [
-        _ann_edges_ctes(with_deg=False),
-        """pre AS MATERIALIZED (SELECT a AS src, b AS dst FROM e
-  UNION ALL SELECT b, a FROM e)""",
-        "prdeg AS MATERIALIZED (SELECT src, COUNT(*) AS outdeg FROM pre GROUP BY 1)",
-        "prnodes AS MATERIALIZED (SELECT src AS node FROM pre UNION SELECT dst FROM pre)",
-        f"r0 AS (SELECT node, CAST({scale} AS BIGINT) AS rank_micro FROM prnodes)",
-    ]
-    for i in range(iters):
-        ctes.append(
-            f"""r{i + 1} AS MATERIALIZED (
-  SELECT n.node,
-         CAST({base} + COALESCE(c.s, 0) AS BIGINT) AS rank_micro
-  FROM prnodes n LEFT JOIN (
-    SELECT e.dst AS node,
-           SUM(({damping_pct} * r.rank_micro) // (100 * d.outdeg)) AS s
-    FROM pre e
-    JOIN r{i} r ON e.src = r.node
-    JOIN prdeg d ON d.src = e.src
-    GROUP BY e.dst
-  ) c ON n.node = c.node
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT node, rank_micro FROM r{iters}"
-    )
-
-
-ORACLE_PAGERANK_DELTA_LOCAL = _oracle_pagerank_ann(5)
+#: full-recompute PageRank over the ANN 5-NN edge set ``e`` (a < b)
+ORACLE_PAGERANK_DELTA_LOCAL = pagerank_oracle(
+    _ann_edges_ctes(with_deg=False), "SELECT a AS src, b AS dst FROM e"
+)
 
 
 # ---------------------------------------------------------------------------

@@ -6,16 +6,21 @@ minhash_bands_sql for MinHash bands; the head oracles built on it and on
 llm/similarity.int_sign_bucket_sql).  The data-selection operators
 (CCNet unigram score and buckets, DSIR weights, global shuffle,
 curriculum bins, sequence packing) likewise have one body each, in its
-integer / exact-rank form.  These tests run both engines at sf0.001 so
-a Spark/SQL drift fails here, not only in the full oracle run
+integer / exact-rank form, and the PageRank family has one level loop
+(llm/graph._pagerank_levels) and one oracle builder
+(queries_r7.pagerank_oracle).  These tests run both engines at sf0.001
+so a Spark/SQL drift fails here, not only in the full oracle run
 (tools/check_oracle.py, whose row rendering and hash they import rather
-than copy).
+than copy).  No two registry heads may share a function body.
 """
 
 from __future__ import annotations
 
+import ast
 import importlib.util
+import inspect
 import os
+import textwrap
 
 import duckdb
 import pytest
@@ -110,6 +115,18 @@ SELECTION_ORACLE_HEADS = [
 ]
 
 
+#: the PageRank heads (one level loop, one oracle builder) and HITS,
+#: which shares their supplier→part edge set
+GRAPH_ORACLE_HEADS = [
+    "pagerank_sql",
+    "pagerank_delta",
+    "pagerank_personalized",
+    "pagerank_weighted",
+    "pagerank_delta_local",
+    "graph_hits",
+]
+
+
 @pytest.mark.parametrize("name", LSH_ORACLE_HEADS)
 def test_lsh_head_matches_oracle(spark, sf_dir, duck, name):
     _assert_head_matches_oracle(spark, sf_dir, duck, name)
@@ -118,6 +135,61 @@ def test_lsh_head_matches_oracle(spark, sf_dir, duck, name):
 @pytest.mark.parametrize("name", SELECTION_ORACLE_HEADS)
 def test_selection_head_matches_oracle(spark, sf_dir, duck, name):
     _assert_head_matches_oracle(spark, sf_dir, duck, name)
+
+
+@pytest.mark.parametrize("name", GRAPH_ORACLE_HEADS)
+def test_graph_head_matches_oracle(spark, sf_dir, duck, name):
+    _assert_head_matches_oracle(spark, sf_dir, duck, name)
+
+
+def test_pack_sequences_null_stratum_matches_oracle(spark):
+    """The pack_sequences head's operator and its oracle SQL agree on a
+    corpus with NULL-source documents: both render such a pack_id as the
+    bare window index (``concat_ws`` skips the NULL stratum) — the
+    fixture corpus has no NULL source, so the head check alone cannot
+    see this."""
+    import pandas as pd
+
+    from icebergproject_spark.llm.text import pack_sequences
+
+    # ~100 tokens a document, so every stratum crosses several
+    # 512-token windows
+    rows = [
+        (
+            i,
+            " ".join(["tok"] * ((i * 37) % 190 + 10)),
+            None if i % 7 == 3 else ["web", "books"][i % 2],
+        )
+        for i in range(40)
+    ]
+    cols = ["doc_id", "text", "source"]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    out = pack_sequences(docs, context_len=512, strata_col="source")
+    scols, srows = check_oracle.pandas_rows(out.toPandas())
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=cols))
+    ocols, orows = check_oracle.pandas_rows(
+        con.execute(REGISTRY["pack_sequences"].oracle).df()
+    )
+    con.close()
+    assert any(r[cols.index("source")] is None for r in rows)
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows) == len(rows)
+    assert check_oracle.table_hash(srows, scols) == check_oracle.table_hash(
+        orows, ocols
+    )
+
+
+def test_no_two_registry_heads_share_a_body():
+    """A head whose body (docstring stripped) repeats another's adds a
+    name, not a result: each registry function body is unique."""
+    seen: dict[str, str] = {}
+    for name, q in REGISTRY.items():
+        fn = ast.parse(textwrap.dedent(inspect.getsource(q.fn))).body[0]
+        body = fn.body[1:] if ast.get_docstring(fn) is not None else fn.body
+        key = "\n".join(ast.dump(stmt) for stmt in body)
+        assert key not in seen, f"{name} repeats the body of {seen[key]}"
+        seen[key] = name
 
 
 def _assert_head_matches_oracle(spark, sf_dir, duck, name):
